@@ -589,9 +589,10 @@ def main(argv: list[str] | None = None) -> None:
                     help="replicate: row-identity keys, comma-separated")
     sn.add_argument("--app-id", default="cdf-replica",
                     help="replicate: txn-ledger writer id (the cursor)")
-    sn.add_argument("--fold-versions", type=int, default=None,
+    sn.add_argument("--fold-versions", type=int, default=64,
                     help="replicate: drain up to N consecutive "
-                         "row-change versions as one commit")
+                         "row-change versions as one commit (1: one "
+                         "commit per source version)")
     sn.add_argument("--old", default=None, help="rename: current column name")
     sn.add_argument("--new", default=None, help="rename: new column name")
     sn.add_argument("--output", default=None,

@@ -883,10 +883,11 @@ def snapshot_cdf_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (v0), DV-delete a key range (v1 — delete-only), file-pruned
 # update+insert merge (v2), RENAME a non-key column (v3 —
 # metadata-only), then drain the change feed into a replica with
-# replicate_snapshot_changes and read the REPLICA back. Each source
-# version lands on the replica as ONE commit — deletes as deletion
-# vectors on pruned files, inserts as appended files, the rename
-# replayed as the same metadata commit (tests pin rewritten_files==0
+# replicate_snapshot_changes and read the REPLICA back. The two
+# row-change versions fold into ONE cdc_apply commit (the default
+# fold_versions=64) — deletes as deletion vectors on pruned files,
+# inserts as appended files — and the rename replays as the same
+# metadata commit (tests pin rewritten_files==0
 # and the byte-identical inherited file lists; this query scores the
 # relational contract: replica ≡ source under the final schema).
 # ---------------------------------------------------------------------------

@@ -400,6 +400,7 @@ from exceldatatransform_py_spark.sources.snapshot_common import (
     LAYOUT_ONLY_KINDS as _CDF_LAYOUT_ONLY,
     SnapshotRetentionError,
     SnapshotStreamSchemaChangedError,
+    manifest_files,
 )
 
 
@@ -414,17 +415,6 @@ def _cdf_manifests(table: str) -> dict[int, dict]:
                 m = json.load(fh)
             out[m["version"]] = m
     return out
-
-
-def _cdf_files(table: str, m: dict) -> list[str]:
-    if "files" in m:
-        return list(m["files"])
-    dd = os.path.join(table, m["data_dir"])
-    return sorted(
-        os.path.join(m["data_dir"], f)
-        for f in os.listdir(dd)
-        if f.endswith(".parquet")
-    )
 
 
 def _cdf_dv_positions(table: str, entries: dict) -> dict[str, set]:
@@ -514,7 +504,7 @@ def _snapshot_require_retained(
             break
         ok = all(
             os.path.exists(os.path.join(table, r))
-            for r in _cdf_files(table, m)
+            for r in manifest_files(table, m)
         ) and all(
             os.path.isdir(os.path.join(table, e["dir"]))
             for e in m.get("dv", {}).values()
@@ -588,7 +578,7 @@ class SnapshotBatchReader(DataSourceReader):
             _snapshot_require_retained(
                 self.table, self.version, ms, [m["data_dir"]]
             )
-        self.files = _cdf_files(self.table, m)
+        self.files = manifest_files(self.table, m)
         _snapshot_require_retained(
             self.table, self.version, ms,
             self.files + sorted(
@@ -755,8 +745,8 @@ class SnapshotCDFStreamReader(SimpleDataSourceStreamReader):
                     os.path.join(self.table, m["data_dir"])
                 ):
                     self._require_retained(v, ms, [m["data_dir"]])
-            prev_files = set(_cdf_files(self.table, m_prev))
-            cur_files = set(_cdf_files(self.table, m_cur))
+            prev_files = set(manifest_files(self.table, m_prev))
+            cur_files = set(manifest_files(self.table, m_cur))
             dv_prev = m_prev.get("dv", {})
             dv_cur = m_cur.get("dv", {})
 

@@ -1,4 +1,5 @@
-"""Constants and error types shared by the snapshot table layer
+"""Constants, the manifest file listing and error types shared by
+the snapshot table layer
 (``snapshots.py``) and the ``snapshot_cdf`` streaming reader
 (``pysource.py``).
 
@@ -11,6 +12,8 @@ retention rule) cannot drift between the batch and streaming feeds.
 
 from __future__ import annotations
 
+import os
+
 #: layout-maintenance commit kinds: rows identical before/after, so
 #: the change feed skips them (Delta's dataChange=false files).
 LAYOUT_ONLY_KINDS = frozenset({"compact", "zorder"})
@@ -20,6 +23,29 @@ LAYOUT_ONLY_KINDS = frozenset({"compact", "zorder"})
 #: replay the same schema change on the replica (the manifest carries
 #: what to replay: ``rename: {from,to}`` / ``drop: {column}``).
 SCHEMA_ONLY_KINDS = frozenset({"rename_column", "drop_column"})
+
+
+def parquet_files(table: str, data_dir: str) -> list[str]:
+    """Parquet files under ``data_dir``, relative to the table root."""
+    return sorted(
+        os.path.join(data_dir, f)
+        for f in os.listdir(os.path.join(table, data_dir))
+        if f.endswith(".parquet")
+    )
+
+
+def manifest_files(table: str, manifest: dict) -> list[str]:
+    """Data files of one version, as paths relative to the table root.
+    File-level manifests list them explicitly; directory-level
+    manifests own every parquet in their data_dir, which each commit
+    records as the keys of ``rows`` — so the list survives ``vacuum``
+    removing the directory. Only legacy manifests without ``rows``
+    list the directory itself."""
+    if "files" in manifest:
+        return list(manifest["files"])
+    if "rows" in manifest:
+        return sorted(manifest["rows"])
+    return parquet_files(table, manifest["data_dir"])
 
 
 class SnapshotRetentionError(ValueError):

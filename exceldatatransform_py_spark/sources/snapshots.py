@@ -70,6 +70,8 @@ from exceldatatransform_py_spark.sources.snapshot_common import (
     LAYOUT_ONLY_KINDS as _LAYOUT_ONLY_KINDS,
     SCHEMA_ONLY_KINDS as _SCHEMA_ONLY_KINDS,
     SnapshotRetentionError,
+    manifest_files as _manifest_files,
+    parquet_files as _parquet_files,
 )
 
 _VDIR = "_versions"
@@ -149,23 +151,17 @@ def _collect_stats(
 ) -> dict:
     """{relative file: {col: [min, max]}} from parquet footers —
     computed once at COMMIT time so later pruned merges never reopen
-    data files (what Delta/Iceberg store in the log)."""
+    data files (what Delta/Iceberg store in the log). Each entry is
+    ``[lo, hi, null_count]`` — the NULL count (JSON null when the
+    footer doesn't report one) lets NULL-keyed merges prune to
+    NULL-carrying files only; pre-upgrade manifests hold 2-element
+    ``[lo, hi]``. The footer reads are ``_prune_files``' backfill
+    against a manifest with no cached stats."""
     out: dict = {}
-    for rel in rel_files:
-        per_col = {}
-        for c in cols:
-            path = os.path.join(table, rel)
-            mm = _footer_minmax(path, c)
-            if mm is not None:
-                lo, hi = _stat_encode(mm[0]), _stat_encode(mm[1])
-                if lo is not None and hi is not None:
-                    # third element: NULL count (may be JSON null when
-                    # the footer doesn't report one) — lets NULL-keyed
-                    # merges prune to NULL-carrying files only.
-                    # Pre-upgrade manifests hold 2-element [lo, hi].
-                    per_col[c] = [lo, hi, _footer_nullcount(path, c)]
-        if per_col:
-            out[rel] = per_col
+    for c in cols:
+        _, backfill = _prune_files(table, {}, rel_files, {c: _NO_MATCH})
+        for rel, st in backfill.items():
+            out.setdefault(rel, {}).update(st)
     return out
 
 
@@ -175,27 +171,42 @@ def _footer_rows(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
+def _footer_col_stats(path: str, col: str) -> list | None:
+    """Per-row-group footer statistics of ``col`` (an entry is None
+    when its group has none), or None when the file lacks the column."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    for i in range(md.num_columns):
+        if md.schema.column(i).name == col:
+            return [
+                md.row_group(rg).column(i).statistics
+                for rg in range(md.num_row_groups)
+            ]
+    return None
+
+
 def _footer_nullcount(path: str, col: str) -> int | None:
     """Total NULL count of ``col`` across a file's row groups, or
     ``None`` when any group doesn't report one (callers must then
     treat the file as possibly NULL-carrying)."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    idx = None
-    for i in range(md.num_columns):
-        if md.schema.column(i).name == col:
-            idx = i
-            break
-    if idx is None:
+    sts = _footer_col_stats(path, col)
+    if sts is None or any(st is None or st.null_count is None for st in sts):
         return None
-    total = 0
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or st.null_count is None:
-            return None
-        total += st.null_count
-    return total
+    return sum(st.null_count for st in sts)
+
+
+def _footer_minmax(path: str, col: str):
+    """(min, max) of ``col`` across a parquet file's row groups, read
+    from footer statistics — None when any group lacks stats (the
+    caller must then treat the file as touched). The footer read is
+    the FALLBACK: commits made with ``stats_cols`` cache these in the
+    manifest (``_collect_stats``), exactly where Delta/Iceberg keep
+    per-file stats, and pruning consults the manifest first."""
+    sts = _footer_col_stats(path, col)
+    if not sts or any(st is None or not st.has_min_max for st in sts):
+        return None
+    return min(st.min for st in sts), max(st.max for st in sts)
 
 
 def _collect_rows(table: str, rel_files: list[str]) -> dict:
@@ -324,6 +335,84 @@ def _literal_probe_frame(spark: SparkSession, manifest: dict, col: str, values):
     ).select(F.col("v").cast(typ).alias(col))
 
 
+def _bloomed(m: dict, cols: Sequence[str]) -> list[str]:
+    """The subset of ``cols`` that carries a per-file bloom in ``m``."""
+    blooms = m.get("blooms", {}).values()
+    return [c for c in cols if any(c in e for e in blooms)]
+
+
+#: per-key bounds no file can match (empty key set): pruning with it
+#: only backfills the key's stats
+_NO_MATCH = (None, None, False, None)
+
+
+def _prune_files(
+    table: str, m: dict, files: list[str], bounds: dict
+) -> tuple[list[str], dict]:
+    """The files of manifest ``m`` that MAY hold a row matching the
+    keys, plus backfilled stats — the one data-skipping test behind
+    pruned merges, both deletes, CDC apply, point reads, the
+    rebase check on a winner's added files, and commit-time stats.
+
+    ``bounds`` maps each key column to ``(lo, hi, nulls, pairs)``: the
+    non-NULL key range (``lo is None`` — no non-NULL key), whether
+    NULL keys are present (they match NULL-safely), and bloom probe
+    pairs (``None`` — no bloom test). A file is excluded when ANY key
+    proves it cannot match (exclusions intersect across keys): its
+    min/max misses [lo, hi] or its bloom rules out every probe, AND it
+    holds no NULL key when NULL keys are probed. Stats come from the
+    manifest's cache first; only the FIRST key falls back to footer
+    reads (a later key without cached stats simply cannot exclude).
+    Unknown ranges / NULL counts and incomparable values count as
+    "may match", so pruning is a superset test and always sound.
+
+    Returns ``(may_match, backfill)`` where ``backfill`` is
+    ``{rel: {first key: [lo, hi, null_count]}}`` for every file whose
+    first-key range is known — cached entries upgraded with a NULL
+    count, footer-read ones ready to cache in the next manifest."""
+    stats = m.get("stats", {})
+    blooms = m.get("blooms", {})
+    may_match: list[str] = []
+    backfill: dict = {}
+    for rel in files:
+        may = True
+        path = os.path.join(table, rel)
+        for j, (k, (lo, hi, nulls, pairs)) in enumerate(bounds.items()):
+            cached = stats.get(rel, {}).get(k)
+            if cached is not None:
+                mm = (_stat_decode(cached[0]), _stat_decode(cached[1]))
+                nc = cached[2] if len(cached) >= 3 else (
+                    _footer_nullcount(path, k) if j == 0 else None
+                )
+            elif j == 0:
+                mm = _footer_minmax(path, k)
+                nc = _footer_nullcount(path, k)
+            else:
+                continue
+            if j == 0 and mm is not None:
+                enc = [_stat_encode(mm[0]), _stat_encode(mm[1])]
+                if None not in enc:
+                    backfill[rel] = {k: [*enc, nc]}
+            try:
+                may_nonnull = lo is not None and (
+                    mm is None or not (mm[1] < lo or mm[0] > hi)
+                )
+            except TypeError:  # incomparable literal: stay conservative
+                may_nonnull = True
+            # bloom refinement: a file inside the range may still
+            # provably hold NONE of the probed keys (false negatives
+            # are impossible, so skipping it is sound)
+            hexmap = blooms.get(rel, {}).get(k)
+            if may_nonnull and pairs is not None and hexmap is not None:
+                may_nonnull = _bloom_may_contain(hexmap, pairs)
+            if not (may_nonnull or (nulls and (nc is None or nc > 0))):
+                may = False
+                break
+        if may:
+            may_match.append(rel)
+    return may_match, backfill
+
+
 def snapshot_count(table: str, version: int | None = None) -> int:
     """COUNT(*) of a version WITHOUT any Spark job or data read:
     summed from per-file row counts cached in the manifest at commit
@@ -336,23 +425,11 @@ def snapshot_count(table: str, version: int | None = None) -> int:
     v = ms[-1]["version"] if version is None else version
     if v not in by_v:
         raise ValueError(f"version {v} not in {sorted(by_v)}")
-    m = by_v[v]
-    rows = m.get("rows", {})
-    files = _manifest_files(table, m)
-    total = sum(
-        rows[rel] if rel in rows
-        else _footer_rows(os.path.join(table, rel))
-        for rel in files
-    )
     # deletion vectors: per-file deleted-position cardinalities are
     # cached in the manifest, so COUNT(*) stays metadata-only even on
     # merge-on-read tables.
-    fset = set(files)
-    return total - sum(
-        int(e.get("count", 0))
-        for rel, e in m.get("dv", {}).items()
-        if rel in fset
-    )
+    m = by_v[v]
+    return sum(_live_rows(table, m, _manifest_files(table, m)).values())
 
 
 class SnapshotConflictError(RuntimeError):
@@ -657,11 +734,7 @@ def _commit(
         manifest["constraints"] = effective
     if txn is not None:
         manifest["txn"] = {"app": txn[0], "batch": int(txn[1])}
-    rel_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(os.path.join(table, data_dir))
-        if f.endswith(".parquet")
-    )
+    rel_files = _parquet_files(table, data_dir)
     manifest["rows"] = _collect_rows(table, rel_files)
     if stats_cols:
         manifest["stats"] = _collect_stats(table, rel_files, stats_cols)
@@ -716,111 +789,68 @@ def snapshot_write(
     )
 
 
-def _commit_layout_rewrite(
+def _require_latest(table: str) -> dict:
+    """The newest manifest, or ``FileNotFoundError`` on an empty table."""
+    m = _latest_manifest(table)
+    if m is None:
+        raise FileNotFoundError(f"no versions in {table}")
+    return m
+
+
+def _file_rows(table: str, m: dict, rel: str) -> int:
+    """Row count of one file of manifest ``m``: the cached count, or
+    one footer read for files a pre-upgrade manifest didn't count."""
+    rows = m.get("rows", {})
+    return rows[rel] if rel in rows else _footer_rows(os.path.join(table, rel))
+
+
+def _live_rows(table: str, m: dict, files: list[str]) -> dict:
+    """{rel: live row count} of ``files`` — cached row counts minus the
+    deletion vectors' cached cardinalities, metadata only."""
+    dv = m.get("dv", {})
+    return {
+        rel: _file_rows(table, m, rel) - int(dv.get(rel, {}).get("count", 0))
+        for rel in files
+    }
+
+
+def _compact(
     spark: SparkSession,
     table: str,
-    base: dict,
-    df: DataFrame,
-    kind: str,
-    touched: list[str],
+    target_rows_per_file: int,
+    small_only: bool,
     stats_cols: Sequence[str],
     bloom_cols: Sequence[str],
     rebase: bool,
     max_rebase: int,
 ) -> int:
-    """Commit a LAYOUT-ONLY rewrite (compact / zorder): ``df`` holds
-    exactly the live rows of ``touched`` (DVs already applied by the
-    DV-aware read), staged under a unique dir and committed as a
-    file-level manifest that replaces ``touched`` and inherits every
-    other file from the commit parent.
-
-    Disjoint-commit resolution: a layout rewrite changes NO rows, so
-    replaying it onto a winner is sound whenever the winner left every
-    touched file intact — bytes and DV entry (a winner-grown DV would
-    be materialized back to life by our rewrite) — regardless of what
-    the winner ADDED (new files are simply inherited; a layout commit
-    has no key range to collide with). That is ``_pruned_rebase_ok``
-    with the added-file check disabled (update_empty=True). At 100 TB
-    this is the difference between nightly OPTIMIZE succeeding under
-    continuous ingest and throwing away its whole rewrite on every
-    race."""
-    import time as _t
-
-    touched_set = set(touched)
-    data_dir, _ = _stage_unique(table, df, base["version"] + 1, parent=base)
-    new_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(os.path.join(table, data_dir))
-        if f.endswith(".parquet")
-    )
-    new_stats = (
-        _collect_stats(table, new_files, stats_cols) if stats_cols else {}
-    )
-    new_blooms = (
-        _collect_blooms(spark, table, new_files, bloom_cols)
-        if bloom_cols
-        else {}
-    )
-    new_rows = _collect_rows(table, new_files)
-
-    def build_manifest(cur: dict, attempts: int) -> dict:
-        inherited_cur = [
-            r for r in _manifest_files(table, cur) if r not in touched_set
-        ]
-        iset = set(inherited_cur)
-        cur_rows = cur.get("rows", {})
-        cur_stats = cur.get("stats", {})
-        cur_dv = cur.get("dv", {})
-        cur_blooms = cur.get("blooms", {})
-        stats_out = {
-            r: cur_stats[r] for r in inherited_cur if r in cur_stats
-        }
-        stats_out.update(new_stats)
-        blooms_out = {
-            r: cur_blooms[r] for r in inherited_cur if r in cur_blooms
-        }
-        blooms_out.update(new_blooms)
-        return {
-            "version": cur["version"] + 1,
-            "data_dir": data_dir,
-            "files": new_files + inherited_cur,
-            "rows": {
-                **{r: cur_rows[r] for r in inherited_cur if r in cur_rows},
-                **new_rows,
-            },
-            "kind": kind,
-            "parent": cur["version"],
-            "ts": _t.time(),
-            "schema": cur["schema"],
-            **({"stats": stats_out} if stats_out else {}),
-            **({"blooms": blooms_out} if blooms_out else {}),
-            **(
-                {"dv": {r: e for r, e in cur_dv.items() if r in iset}}
-                if any(r in iset for r in cur_dv)
-                else {}
-            ),
-            **(
-                {"constraints": cur["constraints"]}
-                if cur.get("constraints")
-                else {}
-            ),
-            "pruning": {
-                "rewritten_files": len(touched),
-                "inherited_files": len(inherited_cur),
-                **({"rebased": attempts} if attempts else {}),
-            },
-        }
-
-    def cleanup():
-        shutil.rmtree(os.path.join(table, data_dir), ignore_errors=True)
-
-    return _publish_with_rebase(
-        table, base, build_manifest,
-        rebase_ok=lambda nxt: _pruned_rebase_ok(
-            table, base, nxt, touched_set, None,
-            None, None, False, True,
-        ),
-        cleanup=cleanup, rebase=rebase, max_rebase=max_rebase,
+    """Shared body of ``snapshot_compact`` (every file) and
+    ``snapshot_compact_small_files`` (only files under the target):
+    fold the selected files' live rows into evenly-sized files and
+    commit them as a layout-only rewrite. The output is sized from
+    the manifest's cached row and DV counts — no counting job.
+    ``coalesce`` when shrinking (narrow, no shuffle); ``repartition``
+    only when growing the file count (oversized files are being
+    rewritten anyway)."""
+    latest = _require_latest(table)
+    files = _manifest_files(table, latest)
+    live = _live_rows(table, latest, files)
+    if small_only:
+        files = [r for r in files if live[r] < target_rows_per_file]
+        if len(files) < 2:
+            return latest["version"]
+    df = _read_files(spark, table, latest, files)
+    n_rows = sum(live[r] for r in files)
+    n_files = max(1, -(-n_rows // target_rows_per_file))
+    n_parts = df.rdd.getNumPartitions()
+    if n_files < n_parts:
+        df = df.coalesce(n_files)
+    elif n_files > n_parts:
+        df = df.repartition(n_files)
+    return _commit_files(
+        spark, table, latest, "compact", df=df, removed=files,
+        stats_cols=stats_cols, bloom_cols=bloom_cols,
+        rebase=rebase, max_rebase=max_rebase,
     )
 
 
@@ -836,9 +866,7 @@ def snapshot_compact(
     """OPTIMIZE analogue: commit a compacted rewrite of the latest
     version (small files from merges/streaming folded into
     evenly-sized ones) as a NEW version — rows identical, history
-    intact, old versions readable until vacuumed. ``coalesce`` when
-    shrinking (narrow, no shuffle); ``repartition`` only when growing
-    the file count (oversized files are being rewritten anyway).
+    intact, old versions readable until vacuumed.
 
     Concurrency: the rewrite replays onto a winner that left every
     file of this version intact (e.g. an insert-only merge landing
@@ -847,21 +875,8 @@ def snapshot_compact(
     compaction that stays disjoint from FILE-REWRITING traffic, use
     ``snapshot_compact_small_files`` (touches only the small-file
     subset)."""
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
-    df = snapshot_read(spark, table, version=latest["version"])
-    n_rows = df.count()
-    n_files = max(1, -(-n_rows // target_rows_per_file))
-    n_parts = df.rdd.getNumPartitions()
-    if n_files < n_parts:
-        df = df.coalesce(n_files)
-    elif n_files > n_parts:
-        df = df.repartition(n_files)
-    return _commit_layout_rewrite(
-        spark, table, latest, df, "compact",
-        _manifest_files(table, latest), stats_cols, bloom_cols,
+    return _compact(
+        spark, table, target_rows_per_file, False, stats_cols, bloom_cols,
         rebase, max_rebase,
     )
 
@@ -887,43 +902,11 @@ def snapshot_compact_small_files(
     and folding just those keeps the rewrite (and therefore the
     conflict FOOTPRINT) proportional to the trickle, not the table —
     a concurrent merge that rewrites a big hot file races DISJOINTLY
-    with this commit and both land (the rebase rule in
-    ``_commit_layout_rewrite``)."""
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
-    files = _manifest_files(table, latest)
-    rows_map = latest.get("rows", {})
-    dv = latest.get("dv", {})
-
-    def live_rows(rel: str) -> int:
-        n = rows_map.get(rel)
-        if n is None:
-            n = _footer_rows(os.path.join(table, rel))
-        return n - dv.get(rel, {}).get("count", 0)
-
-    small = [r for r in files if live_rows(r) < target_rows_per_file]
-    if len(small) < 2:
-        return latest["version"]
-    sset = set(small)
-    df = _scan_minus_dv(
-        spark,
-        table,
-        [os.path.join(table, r) for r in small],
-        {r: e for r, e in dv.items() if r in sset},
-        schema=_schema_for_read(spark, latest),
-    )
-    n_rows = sum(live_rows(r) for r in small)
-    n_files = max(1, -(-n_rows // target_rows_per_file))
-    n_parts = df.rdd.getNumPartitions()
-    if n_files < n_parts:
-        df = df.coalesce(n_files)
-    elif n_files > n_parts:
-        df = df.repartition(n_files)
-    return _commit_layout_rewrite(
-        spark, table, latest, df, "compact",
-        small, stats_cols, bloom_cols, rebase, max_rebase,
+    with this commit and both land (the layout-only rebase rule in
+    ``_commit_files``)."""
+    return _compact(
+        spark, table, target_rows_per_file, True, stats_cols, bloom_cols,
+        rebase, max_rebase,
     )
 
 
@@ -950,31 +933,15 @@ def snapshot_optimize_zorder(
     merges) rebase instead of conflicting."""
     from exceldatatransform_py_spark.sources.writers import zorder_frame
 
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
-    df = snapshot_read(spark, table, version=latest["version"])
-    zed = zorder_frame(df, col_a, col_b, num_files)
-    cols = list(dict.fromkeys([col_a, col_b, *stats_cols]))
-    return _commit_layout_rewrite(
-        spark, table, latest, zed, "zorder",
-        _manifest_files(table, latest), cols, bloom_cols,
-        rebase, max_rebase,
+    latest = _require_latest(table)
+    files = _manifest_files(table, latest)
+    zed = zorder_frame(
+        _read_files(spark, table, latest, files), col_a, col_b, num_files
     )
-
-
-def _manifest_files(table: str, manifest: dict) -> list[str]:
-    """Data files of one version, as paths relative to the table root.
-    File-level manifests (pruned merges) list them explicitly;
-    directory-level manifests own every parquet in their data_dir."""
-    if "files" in manifest:
-        return list(manifest["files"])
-    data_dir = os.path.join(table, manifest["data_dir"])
-    return sorted(
-        os.path.join(manifest["data_dir"], f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
+    return _commit_files(
+        spark, table, latest, "zorder", df=zed, removed=files,
+        stats_cols=list(dict.fromkeys([col_a, col_b, *stats_cols])),
+        bloom_cols=bloom_cols, rebase=rebase, max_rebase=max_rebase,
     )
 
 
@@ -1046,40 +1013,24 @@ def _scan_minus_dv(
     )
 
 
-def _point_prune_files(
-    spark: SparkSession, table: str, m: dict, rel_files: list[str],
-    col: str, values: list,
-) -> list[str]:
-    """Files of manifest ``m`` that MAY contain a row with ``col`` in
-    ``values`` — min/max range test first, then the per-file bloom
-    (both sound: false positives scan extra bytes, never wrong rows)."""
-    stats = m.get("stats", {})
-    blooms = m.get("blooms", {})
-    pairs = None
-    if any(col in e for e in blooms.values()):
-        pf = _literal_probe_frame(spark, m, col, list(values))
-        if pf is not None:
-            pairs = _bloom_probe_pairs(pf, col)
-    out = []
-    for rel in rel_files:
-        may = True
-        cached = stats.get(rel, {}).get(col)
-        if cached is not None:
-            fmin = _stat_decode(cached[0])
-            fmax = _stat_decode(cached[1])
-            try:
-                may = any(
-                    v is not None and fmin <= v <= fmax for v in values
-                )
-            except TypeError:  # incomparable literal: stay conservative
-                may = True
-        if may and pairs is not None:
-            hexmap = blooms.get(rel, {}).get(col)
-            if hexmap is not None and not _bloom_may_contain(hexmap, pairs):
-                may = False
-        if may:
-            out.append(rel)
-    return out
+def _read_files(
+    spark: SparkSession, table: str, m: dict, rels: list[str]
+) -> DataFrame:
+    """Scan ``rels`` (files of manifest ``m``, relative to the table
+    root) under the version's field-id read schema, with their
+    deletion vectors subtracted — an empty frame of the manifest
+    schema when ``rels`` is empty (a merge that touched nothing on an
+    empty table, a point read that pruned every file)."""
+    if not rels:
+        return spark.createDataFrame([], T.StructType.fromJson(m["schema"]))
+    rset = set(rels)
+    return _scan_minus_dv(
+        spark,
+        table,
+        [os.path.join(table, r) for r in rels],
+        {r: e for r, e in m.get("dv", {}).items() if r in rset},
+        schema=_schema_for_read(spark, m),
+    )
 
 
 def snapshot_read(
@@ -1120,44 +1071,28 @@ def snapshot_read(
     if v not in by_v:
         raise ValueError(f"version {v} not in {sorted(by_v)}")
     m = by_v[v]
-    dv = m.get("dv", {})
-    # field-id read schema: the version's manifest schema resolves
-    # columns by stable id, so files written before a RENAME read
-    # under this version's names (and time travel to a pre-rename
-    # version reads post-rename files under the OLD names)
-    rs = _schema_for_read(spark, m)
-
-    def _plain(files):
-        reader = spark.read.schema(rs) if rs is not None else spark.read
-        return reader.parquet(*files)
-
-    if point_filter is not None:
-        col, values = point_filter
-        rels = _point_prune_files(
-            spark, table, m, _manifest_files(table, m), col, list(values)
-        )
-        files = [os.path.join(table, r) for r in rels]
-        if not files:
-            return spark.createDataFrame(
-                [], T.StructType.fromJson(m["schema"])
-            )
-        scan = (
-            _scan_minus_dv(spark, table, files, dv, schema=rs)
-            if dv
-            else _plain(files)
-        )
-        return scan.filter(F.col(col).isin(list(values)))
-    if "files" not in m:
-        files = [os.path.join(table, m["data_dir"])]
+    # every scan reads under the version's field-id schema: files
+    # written before a RENAME read under this version's names (and
+    # time travel to a pre-rename version reads post-rename files
+    # under the OLD names)
+    rels = _manifest_files(table, m)
+    if point_filter is None:
+        return _read_files(spark, table, m, rels)
+    col, values = point_filter
+    values = list(values)
+    present = [x for x in values if x is not None]
+    pairs = None
+    if present and _bloomed(m, [col]):
+        pf = _literal_probe_frame(spark, m, col, present)
+        if pf is not None:
+            pairs = _bloom_probe_pairs(pf, col)
+    try:
+        lo, hi = (min(present), max(present)) if present else (None, None)
+    except TypeError:  # mutually incomparable literals: scan every file
+        pass
     else:
-        files = [os.path.join(table, f) for f in m["files"]]
-    if not files:  # a merge that touched nothing on an empty table
-        return spark.createDataFrame(
-            [], T.StructType.fromJson(m["schema"])
-        )
-    if dv:
-        return _scan_minus_dv(spark, table, files, dv, schema=rs)
-    return _plain(files)
+        rels, _ = _prune_files(table, m, rels, {col: (lo, hi, False, pairs)})
+    return _read_files(spark, table, m, rels).filter(F.col(col).isin(values))
 
 
 def snapshot_merge_update(
@@ -1222,33 +1157,6 @@ def snapshot_merge_update(
             if attempt == max_retries:
                 raise
     raise AssertionError("unreachable")
-
-
-def _footer_minmax(path: str, col: str):
-    """(min, max) of ``col`` across a parquet file's row groups, read
-    from footer statistics — None when any group lacks stats (the
-    caller must then treat the file as touched). The footer read is
-    the FALLBACK: commits made with ``stats_cols`` cache these in the
-    manifest (``_collect_stats``), exactly where Delta/Iceberg keep
-    per-file stats, and pruned merges consult the manifest first."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    idx = None
-    for i in range(md.num_columns):
-        if md.schema.column(i).name == col:
-            idx = i
-            break
-    if idx is None:
-        return None
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return None
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    return None if lo is None else (lo, hi)
 
 
 #: StructField metadata key Spark's parquet writer/reader use for
@@ -1363,52 +1271,47 @@ def _schema_for_read(spark: SparkSession, m: dict):
 
 
 def _stage_unique(
-    table: str, df: DataFrame, version: int, parent: dict | None = None
-) -> tuple[str, dict]:
-    """Stage a file-level commit's rewritten files under a globally
-    UNIQUE directory name — protocol-agnostic (no rename/link:
+    table: str, df: DataFrame, parent: dict
+) -> tuple[str, dict, list[str]]:
+    """Stage a file-level commit's new files under a globally UNIQUE
+    directory name — protocol-agnostic (no rename/link:
     object-store-safe) and collision-free under any concurrency, so a
     conflicted file-level commit can REBASE onto the new latest
     without re-staging its parquet. Field IDs are attached from
-    ``parent`` (default: the table's latest manifest) before the
-    write. Returns ``(data_dir, schema_json)`` — the schema as staged,
-    ids included. The manifest's explicit "files" list is
-    authoritative; ``vacuum`` sweeps never-published unique dirs past
-    the retention horizon."""
-    if parent is None:
-        ms = _manifests(table)
-        parent = ms[-1] if ms else None
+    ``parent`` before the write. Returns ``(data_dir, schema_json,
+    files)`` — the schema as staged, ids included, and the staged
+    parquet files relative to the table root. The manifest's explicit
+    "files" list is authoritative; ``vacuum`` sweeps never-published
+    unique dirs past the retention horizon."""
     df = _attach_field_ids(df, parent, floor=_last_field_id(table, parent))
-    data_dir = f"d{version:05d}-{uuid.uuid4().hex[:8]}"
+    data_dir = f"d{parent['version'] + 1:05d}-{uuid.uuid4().hex[:8]}"
     df.write.mode("errorifexists").parquet(os.path.join(table, data_dir))
-    return data_dir, df.schema.jsonValue()
+    return data_dir, df.schema.jsonValue(), _parquet_files(table, data_dir)
 
 
 def _pruned_rebase_ok(
-    table: str,
-    base: dict,
-    cur: dict,
-    touched_set: set,
-    prune_col: str,
-    lo,
-    hi,
-    nulls_in_updates: bool,
-    update_empty: bool,
+    table: str, base: dict, cur: dict, held: set, bounds: dict | None
 ) -> bool:
-    """True iff a pruned commit computed against manifest ``base`` can
-    be replayed verbatim onto ``cur`` (a later version that won the
-    race) — the disjoint-writer rebase real table formats run instead
-    of failing every concurrent commit. Sound conditions:
+    """True iff a file-level commit computed against manifest ``base``
+    can be replayed verbatim onto ``cur`` (a later version that won
+    the race) — the disjoint-writer rebase real table formats run
+    instead of failing every concurrent commit. Sound conditions:
 
     * same schema and same CHECK constraints (else semantics changed);
-    * every file we rewrote still exists in ``cur`` with identical
-      deletion vectors (the winner did not touch our write set);
-    * no file the winner ADDED can hold a key matching our updates
-      (same stats superset-test as pruning itself — a winner-inserted
-      row inside our key range would have needed our update). Files
-      the winner merely REMOVED are fine: they drop out of the
-      inherited list, and files that survived from ``base`` were
-      already proven non-matching by our own pruning pass.
+    * every file we rewrote or scanned (``held``) still exists in
+      ``cur`` with identical deletion vectors (the winner did not
+      touch our read set — a winner-grown DV on a file we rewrote
+      would be materialized back to life, one on a file we DV-deleted
+      would be dropped by our consolidated sidecar);
+    * no file the winner ADDED may hold a key matching ``bounds``
+      (the same ``_prune_files`` test pruning itself runs — a
+      winner-inserted row inside our key range would have needed our
+      update or delete). Files the winner merely REMOVED are fine:
+      they drop out of the inherited list, and files that survived
+      from ``base`` were already proven non-matching by our own
+      pruning pass. Layout-only rewrites pass ``bounds=None``: they
+      change no rows, so whatever the winner added is simply
+      inherited.
     """
     def sig(m):  # nullability may legally drift across merge commits
         return [
@@ -1420,31 +1323,17 @@ def _pruned_rebase_ok(
         return False
     if cur.get("constraints", {}) != base.get("constraints", {}):
         return False
-    cur_files = set(_manifest_files(table, cur))
-    if not touched_set <= cur_files:
+    cur_files = _manifest_files(table, cur)
+    if not held <= set(cur_files):
         return False
     bdv, cdv = base.get("dv", {}), cur.get("dv", {})
-    if any(bdv.get(r) != cdv.get(r) for r in touched_set):
+    if any(bdv.get(r) != cdv.get(r) for r in held):
         return False
-    if update_empty:
+    if bounds is None:
         return True
     base_files = set(_manifest_files(table, base))
-    cur_stats = cur.get("stats", {})
-    for rel in cur_files - base_files:
-        cached = cur_stats.get(rel, {}).get(prune_col)
-        if cached is not None:
-            mm = (_stat_decode(cached[0]), _stat_decode(cached[1]))
-            nc = cached[2] if len(cached) >= 3 else None
-        else:
-            mm = _footer_minmax(os.path.join(table, rel), prune_col)
-            nc = _footer_nullcount(os.path.join(table, rel), prune_col)
-        may_nonnull = lo is not None and (
-            mm is None or not (mm[1] < lo or mm[0] > hi)
-        )
-        may_null = nulls_in_updates and (nc is None or nc > 0)
-        if may_nonnull or may_null:
-            return False
-    return True
+    added = [r for r in cur_files if r not in base_files]
+    return not _prune_files(table, cur, added, bounds)[0]
 
 
 def _publish_with_rebase(
@@ -1456,8 +1345,8 @@ def _publish_with_rebase(
     rebase: bool = True,
     max_rebase: int = 5,
 ) -> int:
-    """Optimistic-concurrency publish loop shared by every file-level
-    commit (pruned merge, range/DV delete, compact, zorder): build the
+    """Optimistic-concurrency publish loop shared by ``_commit_files``
+    and the metadata-only commits: build the
     manifest against ``cur`` (initially ``base``), publish; on a
     version race, if ``rebase_ok(winner)`` proves the winner's commit
     did not interact with ours, rebuild against the winner and retry
@@ -1469,22 +1358,211 @@ def _publish_with_rebase(
     attempts = 0
     while True:
         manifest = build_manifest(cur, attempts)
-        # file-level commits never mint ids, so the parent's recorded
-        # last_field_id carries forward (stamped here once for every
-        # file-level commit kind rather than in each build_manifest)
+        # the id floor carries forward: max(parent's last_field_id,
+        # ids in this manifest's schema — a CDC insert may widen it)
         if "last_field_id" not in manifest:
             _record_last_field_id(manifest, _last_field_id(table, cur))
         try:
             _publish(table, manifest)
             return manifest["version"]
         except SnapshotConflictError:
-            nxt = _manifests(table)[-1]
+            nxt = _latest_manifest(table)
             if rebase and attempts < max_rebase and rebase_ok(nxt):
                 attempts += 1
                 cur = nxt
                 continue
             cleanup()
             raise
+
+
+def _write_dv(
+    spark: SparkSession, table: str, m: dict, touched: list[str], match
+) -> tuple[str | None, dict]:
+    """The one deletion-vector sidecar writer (merge-on-read deletes
+    and CDC apply). ``match`` narrows a scan of ``touched`` — each row
+    tagged with its ``rel`` file and ``pos`` row index — to the rows
+    to delete. The prior positions of the touched files are folded in
+    (union), so each touched file's fresh sidecar is its COMPLETE
+    deletion vector and cardinalities never double-count.
+
+    Returns ``(dv_dir, {rel: entry or None})``: the per-touched-file
+    DV outcome (None = entry removed) that ``_commit_files`` applies on
+    top of whichever parent the commit lands on — sound because the
+    rebase check requires the winner to have left every touched
+    file's bytes AND its DV entry exactly as we read them. ``(None,
+    {})`` when nothing matched."""
+    if not touched:
+        return None, {}
+    rs = _schema_for_read(spark, m)
+    scan = (spark.read.schema(rs) if rs is not None else spark.read).parquet(
+        *[os.path.join(table, r) for r in touched]
+    )
+    hits = match(
+        scan.withColumn("rel", _rel_file_expr()).withColumn(
+            "pos", F.col("_metadata.row_index")
+        )
+    ).select("rel", "pos")
+    tset = set(touched)
+    old = {r: e for r, e in m.get("dv", {}).items() if r in tset}
+    prior = _dv_rows(spark, table, old)
+    if prior is not None:
+        prior = prior.filter(F.col("rel").isin(list(old)))
+        hits = hits.join(prior, ["rel", "pos"], "left_anti").unionByName(prior)
+    counts = {
+        r["rel"]: int(r["n"])
+        for r in hits.groupBy("rel").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    if not counts:
+        return None, {}
+    dv_dir = os.path.join(
+        _DVDIR, f"v{m['version'] + 1:05d}-{uuid.uuid4().hex[:8]}"
+    )
+    n_out = max(1, sum(counts.values()) // 4_000_000)
+    hits.repartition(n_out, "rel").write.mode("errorifexists").parquet(
+        os.path.join(table, dv_dir)
+    )
+    return dv_dir, {
+        rel: {"dir": dv_dir, "count": counts[rel]} if rel in counts else None
+        for rel in touched
+    }
+
+
+def _commit_files(
+    spark: SparkSession,
+    table: str,
+    base: dict,
+    kind: str,
+    *,
+    df: DataFrame | None = None,
+    removed: Sequence[str] = (),
+    scanned: Sequence[str] = (),
+    dv: tuple[str | None, dict] | None = None,
+    stats: dict | None = None,
+    bounds: dict | None = None,
+    stats_cols: Sequence[str] = (),
+    bloom_cols: Sequence[str] = (),
+    txn: tuple[str, int] | None = None,
+    rebase: bool = True,
+    max_rebase: int = 5,
+) -> int:
+    """The one file-level commit (pruned merge, range/DV delete, CDC
+    apply, compact, zorder): stage ``df`` (if any) as new files, then
+    publish a manifest that drops the ``removed`` files, adds the
+    staged ones, applies the ``dv`` outcome from ``_write_dv``, and
+    inherits every other file BY REFERENCE — with its rows, stats,
+    blooms and DV entry — from whichever parent the commit lands on.
+
+    * Row-changing commits validate ``df`` against the inherited CHECK
+      constraints before staging (the inherited files were validated
+      at their own commits) and carry the staged schema (a CDC insert
+      may widen it); layout-only kinds do neither — their rows are
+      the parent's.
+    * New files get fresh stats for ``stats_cols`` (default: the
+      ``bounds`` keys, so the NEXT commit on them prunes from the
+      manifest alone) and blooms for ``bloom_cols`` (default: the
+      bound keys the parent already blooms). ``stats`` are the
+      backfilled ``[lo, hi, null_count]`` entries ``_prune_files``
+      returned for the parent's files.
+    * ``scanned`` files are read but kept (DV deletes): they count as
+      held for the rebase check, not as inherited.
+    * Concurrency (``_publish_with_rebase``): a lost version race
+      replays the SAME staged bytes onto the winner when
+      ``_pruned_rebase_ok`` proves the two commits did not interact —
+      for a layout rewrite (``bounds=None``) whenever the winner left
+      every touched file intact, whatever it ADDED; at 100 TB that is
+      the difference between nightly OPTIMIZE succeeding under
+      continuous ingest and throwing its whole rewrite away on every
+      race."""
+    import time as _t
+
+    row_change = kind not in _LAYOUT_ONLY_KINDS
+    keys = list(bounds or ())
+    data_dir, schema, new_files = None, None, []
+    if df is not None:
+        if row_change:
+            _validate_constraints(df, base.get("constraints", {}))
+        data_dir, schema, new_files = _stage_unique(table, df, base)
+    new_rows = _collect_rows(table, new_files)
+    new_stats = _collect_stats(table, new_files, stats_cols or keys)
+    new_blooms = _collect_blooms(
+        spark, table, new_files, bloom_cols or _bloomed(base, keys)
+    )
+    dv_dir, dv_changes = dv or (None, {})
+    stats = stats or {}
+    gone = set(removed)
+    held = gone | set(scanned)
+
+    def build_manifest(cur: dict, attempts: int) -> dict:
+        carried = [r for r in _manifest_files(table, cur) if r not in gone]
+        cset = set(carried)
+        cur_stats, cur_blooms = cur.get("stats", {}), cur.get("blooms", {})
+        stats_out = {}
+        for r in carried:
+            st = {**cur_stats.get(r, {}), **stats.get(r, {})}
+            if st:
+                stats_out[r] = st
+        stats_out.update(new_stats)
+        blooms_out = {r: cur_blooms[r] for r in carried if r in cur_blooms}
+        blooms_out.update(new_blooms)
+        dv_out = {r: e for r, e in cur.get("dv", {}).items() if r in cset}
+        for r, e in dv_changes.items():
+            if e is None:
+                dv_out.pop(r, None)
+            else:
+                dv_out[r] = e
+        pruning = {
+            "rewritten_files": len(gone),
+            "appended_files": len(new_files),
+            "inherited_files": len(cset - held),
+        }
+        if keys:
+            pruning.update(col=keys[0], cols=keys)
+        if dv is not None:
+            pruning.update(
+                dv_files=sum(e is not None for e in dv_changes.values()),
+                scanned_files=len(scanned),
+            )
+        if attempts:
+            pruning["rebased"] = attempts
+        manifest = {
+            "version": cur["version"] + 1,
+            # commits that stage nothing reference the parent's dir —
+            # the "files" list is authoritative anyway
+            "data_dir": data_dir or cur["data_dir"],
+            "files": new_files + carried,
+            "rows": {
+                **{r: _file_rows(table, cur, r) for r in carried},
+                **new_rows,
+            },
+            "kind": kind,
+            "parent": cur["version"],
+            "ts": _t.time(),
+            "schema": schema if schema and row_change else cur["schema"],
+            "stats": stats_out,
+            "pruning": pruning,
+        }
+        if blooms_out:
+            manifest["blooms"] = blooms_out
+        if dv_out:
+            manifest["dv"] = dv_out
+        if cur.get("constraints"):
+            manifest["constraints"] = cur["constraints"]
+        if txn is not None:
+            manifest["txn"] = {"app": txn[0], "batch": int(txn[1])}
+        return manifest
+
+    def cleanup():
+        for d in (data_dir, dv_dir):
+            if d is not None:
+                shutil.rmtree(os.path.join(table, d), ignore_errors=True)
+
+    return _publish_with_rebase(
+        table, base, build_manifest,
+        rebase_ok=lambda nxt: _pruned_rebase_ok(
+            table, base, nxt, held, bounds
+        ),
+        cleanup=cleanup, rebase=rebase, max_rebase=max_rebase,
+    )
 
 
 def snapshot_merge_update_pruned(
@@ -1556,113 +1634,39 @@ def snapshot_merge_update_pruned(
         raise ValueError(
             f"prune_col {prune_col!r} must be one of the merge keys {on}"
         )
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
-    files = _manifest_files(table, latest)
-    bounds = updates.agg(
+    latest = _require_latest(table)
+    b = updates.agg(
         F.min(prune_col).alias("lo"),
         F.max(prune_col).alias("hi"),
         F.count(F.lit(1)).alias("n"),
         F.count(prune_col).alias("n_nonnull"),
     ).first()
-    lo, hi = bounds["lo"], bounds["hi"]
-    update_empty = bounds["n"] == 0
+    update_empty = b["n"] == 0
+    # per-file bloom consultation for point-ish key sets: only pay the
+    # probe-key collection when the parent blooms the prune column
+    pairs = None
+    if not update_empty and _bloomed(latest, [prune_col]):
+        pairs = _bloom_probe_pairs(updates, prune_col)
     # min/max ignore NULLs, but merge_full/merge_update join with
-    # eqNullSafe (NULL keys MATCH NULL keys). A NULL-keyed update row
-    # is invisible to min/max pruning, so when any exist every file
-    # must be treated as potentially matched — pruning soundly
-    # degenerates to the full-read merge instead of silently dropping
-    # the NULL-keyed updates (or re-inserting them as duplicates).
-    nulls_in_updates = bounds["n"] > bounds["n_nonnull"]
-
-    cached_stats = latest.get("stats", {})
-    blooms = latest.get("blooms", {})
-    # per-file bloom consultation for point-ish key sets: only pay
-    # the probe-key collection when at least one file carries a bloom
-    # on the prune column
-    probe_pairs = None
-    if not update_empty and any(prune_col in e for e in blooms.values()):
-        probe_pairs = _bloom_probe_pairs(updates, prune_col)
-
-    def file_minmax(rel: str):
-        cached = cached_stats.get(rel, {}).get(prune_col)
-        if cached is not None:
-            return _stat_decode(cached[0]), _stat_decode(cached[1])
-        return _footer_minmax(os.path.join(table, rel), prune_col)
-
-    def file_nullcount(rel: str) -> int | None:
-        cached = cached_stats.get(rel, {}).get(prune_col)
-        if cached is not None and len(cached) >= 3:
-            return cached[2]  # may be None (unknown at commit time)
-        return _footer_nullcount(os.path.join(table, rel), prune_col)
-
-    touched: list[str] = []
-    inherited: list[str] = []
-    file_stats: dict = {}
-    for rel in files:
-        mm = file_minmax(rel)
-        nc = file_nullcount(rel)
-        if mm is not None:
-            lo_e, hi_e = _stat_encode(mm[0]), _stat_encode(mm[1])
-            if lo_e is not None and hi_e is not None:
-                file_stats[rel] = dict(
-                    cached_stats.get(rel, {}),
-                    **{prune_col: [lo_e, hi_e, nc]},
-                )
-        if update_empty:  # empty update set: nothing can match
-            inherited.append(rel)
-            continue
-        # a file must be rewritten iff it MAY hold a matching row:
-        # (a) a non-NULL key inside the updates' non-NULL bounds —
-        #     unknown ranges (mm is None) count as possible; or
-        # (b) a NULL key while NULL-keyed updates exist (eqNullSafe
-        #     matches NULL to NULL; min/max never sees NULLs) —
-        #     unknown null counts (nc is None) count as possible.
-        may_match_nonnull = lo is not None and (
-            mm is None or not (mm[1] < lo or mm[0] > hi)
-        )
-        # bloom refinement: a file inside the range bounds may still
-        # provably hold NONE of the probed keys (false negatives are
-        # impossible, so skipping it is sound)
-        if may_match_nonnull and probe_pairs is not None:
-            hexmap = blooms.get(rel, {}).get(prune_col)
-            if hexmap is not None and not _bloom_may_contain(
-                hexmap, probe_pairs
-            ):
-                may_match_nonnull = False
-        may_match_null = nulls_in_updates and (nc is None or nc > 0)
-        if may_match_nonnull or may_match_null:
-            touched.append(rel)
-        else:
-            inherited.append(rel)
-
-    data_dir: str | None = None
-    new_files: list[str] = []
+    # eqNullSafe (NULL keys MATCH NULL keys): NULL-keyed update rows
+    # also touch every file that may hold a NULL key
+    bounds = {
+        prune_col: (b["lo"], b["hi"], b["n"] > b["n_nonnull"], pairs)
+    }
+    touched, stats = _prune_files(
+        table, latest, _manifest_files(table, latest), bounds
+    )
+    merged = None
     # A write is needed when files must be rewritten, or when INSERT
     # has unmatched rows to land (explicit emptiness check — `lo is
     # None` also holds for a NON-empty all-NULL-key update set, which
     # absolutely must be merged).
-    need_write = bool(touched) or (when_not_matched_insert and not update_empty)
-    parent_dv = latest.get("dv", {})
-    if need_write:
-        if touched:
-            # deletion vectors on touched files apply BEFORE the merge
-            # (a DV-deleted row is not in the table, so it must not
-            # match) — the rewrite then materializes them away.
-            tset = set(touched)
-            target = _scan_minus_dv(
-                spark,
-                table,
-                [os.path.join(table, r) for r in touched],
-                {r: e for r, e in parent_dv.items() if r in tset},
-                schema=_schema_for_read(spark, latest),
-            )
-        else:  # insert-only commit: nothing matched, nothing rewritten
-            target = spark.createDataFrame(
-                [], T.StructType.fromJson(latest["schema"])
-            )
+    if touched or (when_not_matched_insert and not update_empty):
+        # deletion vectors on touched files apply BEFORE the merge (a
+        # DV-deleted row is not in the table, so it must not match) —
+        # the rewrite then materializes them away. An insert-only
+        # commit merges against an empty frame.
+        target = _read_files(spark, table, latest, touched)
         if when_not_matched_insert:
             from exceldatatransform_py_spark.operators.merge import merge_full
 
@@ -1673,113 +1677,69 @@ def snapshot_merge_update_pruned(
             merged = merge_update(
                 target, updates, on=on, update_cols=update_cols
             )
-        # inherited CHECK constraints guard the rewritten rows (the
-        # inherited files were validated at their own commits)
-        _validate_constraints(merged, latest.get("constraints", {}))
-        # unique staging: collision-free under concurrency, so a
-        # rebase replays the SAME staged files at a later version
-        data_dir, staged_schema = _stage_unique(
-            table, merged, latest["version"] + 1, parent=latest
-        )
-        new_files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(os.path.join(table, data_dir))
-            if f.endswith(".parquet")
-        )
-        # fresh stats for the rewritten files, so the NEXT merge on
-        # this column prunes from the manifest alone
-        file_stats.update(_collect_stats(table, new_files, [prune_col]))
-        for rel in touched:
-            file_stats.pop(rel, None)  # no longer part of the table
-    schema = staged_schema if need_write else latest["schema"]
-    import time as _t
-
-    new_rows = _collect_rows(table, new_files)
-    # keep the bloom index live across merges: rewritten files get
-    # fresh blooms whenever the parent carried any on this column
-    fresh_blooms = (
-        _collect_blooms(spark, table, new_files, [prune_col])
-        if new_files and any(prune_col in e for e in blooms.values())
-        else {}
+    return _commit_files(
+        spark, table, latest, "merge_update_pruned", df=merged,
+        removed=touched, stats=stats, bounds=bounds,
+        rebase=rebase, max_rebase=max_rebase,
     )
-    touched_set = set(touched)
 
-    def build_manifest(cur: dict, attempts: int) -> dict:
-        v = cur["version"] + 1
-        inherited_cur = [
-            r for r in _manifest_files(table, cur) if r not in touched_set
-        ]
-        iset = set(inherited_cur)
-        cur_rows = cur.get("rows", {})
-        cur_stats = cur.get("stats", {})
-        cur_dv = cur.get("dv", {})
-        cur_blooms = cur.get("blooms", {})
-        blooms_out = {
-            r: cur_blooms[r] for r in inherited_cur if r in cur_blooms
-        }
-        blooms_out.update(fresh_blooms)
-        # per-file stats: the winner's refreshed entries merged with
-        # the ones this merge computed (bytes are immutable, so both
-        # are valid; union per column)
-        stats_out: dict = {}
-        for r in inherited_cur:
-            st = dict(cur_stats.get(r, {}), **file_stats.get(r, {}))
-            if st:
-                stats_out[r] = st
-        for r in new_files:
-            if r in file_stats:
-                stats_out[r] = file_stats[r]
-        manifest = {
-            "version": v,
-            # metadata-only commits (nothing rewritten) reference the
-            # parent's dir — the "files" list is authoritative anyway
-            "data_dir": data_dir if data_dir is not None else cur["data_dir"],
-            "files": new_files + inherited_cur,
-            "rows": {
-                **{r: cur_rows[r] for r in inherited_cur if r in cur_rows},
-                **new_rows,
-            },
-            "kind": "merge_update_pruned",
-            "parent": cur["version"],
-            "ts": _t.time(),
-            "schema": schema,
-            "stats": stats_out,
-            **({"blooms": blooms_out} if blooms_out else {}),
-            # inherited files keep their deletion vectors; touched
-            # files' DVs were applied during the read and are gone
-            **(
-                {"dv": {r: e for r, e in cur_dv.items() if r in iset}}
-                if any(r in iset for r in cur_dv)
-                else {}
-            ),
-            **(
-                {"constraints": cur["constraints"]}
-                if cur.get("constraints")
-                else {}
-            ),
-            "pruning": {
-                "col": prune_col,
-                "rewritten_files": len(touched),
-                "inherited_files": len(inherited_cur),
-                **({"rebased": attempts} if attempts else {}),
-            },
-        }
-        return manifest
 
-    def cleanup():
-        if need_write:
-            shutil.rmtree(os.path.join(table, data_dir), ignore_errors=True)
+def _delete(
+    spark: SparkSession,
+    table: str,
+    col: str,
+    lo,
+    hi,
+    extra_predicate: str | None,
+    merge_on_read: bool,
+    rebase: bool,
+    max_rebase: int,
+) -> int:
+    """Shared body of the two deletes: one pruning pass and one
+    doomed-row predicate; copy-on-write rewrites the touched files
+    without the doomed rows, merge-on-read records their positions in
+    a deletion-vector sidecar. NULL ``col`` values never match a
+    BETWEEN, so the NULL-blind min/max test is sound as is.
 
-    # disjoint-commit resolution: a writer that loses the version race
-    # replays the SAME staged files onto the winner when the winner's
-    # commit provably didn't interact with ours (_pruned_rebase_ok).
-    return _publish_with_rebase(
-        table, latest, build_manifest,
-        rebase_ok=lambda nxt: _pruned_rebase_ok(
-            table, latest, nxt, touched_set, prune_col,
-            lo, hi, nulls_in_updates, update_empty,
-        ),
-        cleanup=cleanup, rebase=rebase, max_rebase=max_rebase,
+    Disjoint-commit resolution: the delete replays onto a winner that
+    (a) left every file it touched intact with identical DVs and (b)
+    added no file that may hold keys in [lo, hi] — a winner-inserted
+    row in the delete range would have needed this delete, so that
+    race conflicts deterministically."""
+    latest = _require_latest(table)
+    # a POINT delete (lo == hi) consults per-file blooms: on an
+    # unclustered key every file's min/max range covers the key, but
+    # the bloom rules out files that provably don't hold it
+    pairs = None
+    if lo == hi and _bloomed(latest, [col]):
+        pf = _literal_probe_frame(spark, latest, col, [lo])
+        if pf is not None:
+            pairs = _bloom_probe_pairs(pf, col)
+    bounds = {col: (lo, hi, False, pairs)}
+    touched, stats = _prune_files(
+        table, latest, _manifest_files(table, latest), bounds
+    )
+    doomed = F.col(col).between(F.lit(lo), F.lit(hi))
+    if extra_predicate is not None:
+        doomed = doomed & F.coalesce(F.expr(extra_predicate), F.lit(False))
+    doomed = F.coalesce(doomed, F.lit(False))
+    if merge_on_read:
+        dv = _write_dv(
+            spark, table, latest, touched, lambda scan: scan.filter(doomed)
+        )
+        return _commit_files(
+            spark, table, latest, "delete_dv", scanned=touched, dv=dv,
+            stats=stats, bounds=bounds, rebase=rebase, max_rebase=max_rebase,
+        )
+    # rows already DV-deleted must not re-enter the rewrite
+    kept = (
+        _read_files(spark, table, latest, touched).filter(~doomed)
+        if touched
+        else None
+    )
+    return _commit_files(
+        spark, table, latest, "delete_range", df=kept, removed=touched,
+        stats=stats, bounds=bounds, rebase=rebase, max_rebase=max_rebase,
     )
 
 
@@ -1807,174 +1767,8 @@ def snapshot_delete_range(
     empty simply drops out) and commits a manifest. Rows that survive
     in rewritten files are preserved byte-exactly as data, and the
     commit inherits/enforces CHECK constraints like every other."""
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
-    files = _manifest_files(table, latest)
-    cached_stats = latest.get("stats", {})
-    blooms = latest.get("blooms", {})
-    # a POINT delete (lo == hi) consults per-file blooms: on an
-    # unclustered key every file's min/max range covers the key, but
-    # the bloom rules out files that provably don't hold it
-    probe_pairs = None
-    if lo == hi and any(col in e for e in blooms.values()):
-        pf = _literal_probe_frame(spark, latest, col, [lo])
-        if pf is not None:
-            probe_pairs = _bloom_probe_pairs(pf, col)
-
-    def file_minmax(rel: str):
-        cached = cached_stats.get(rel, {}).get(col)
-        if cached is not None:
-            return _stat_decode(cached[0]), _stat_decode(cached[1])
-        return _footer_minmax(os.path.join(table, rel), col)
-
-    touched: list[str] = []
-    inherited: list[str] = []
-    file_stats: dict = {}
-    for rel in files:
-        mm = file_minmax(rel)
-        if mm is not None:
-            lo_e, hi_e = _stat_encode(mm[0]), _stat_encode(mm[1])
-            if lo_e is not None and hi_e is not None:
-                cached = cached_stats.get(rel, {}).get(col)
-                nc = (
-                    cached[2] if cached is not None and len(cached) >= 3
-                    else _footer_nullcount(os.path.join(table, rel), col)
-                )
-                file_stats[rel] = dict(
-                    cached_stats.get(rel, {}), **{col: [lo_e, hi_e, nc]}
-                )
-        if mm is None:  # no stats: may hold matches — rewrite
-            may = True
-        else:
-            fmin, fmax = mm
-            may = not (fmax < lo or fmin > hi)
-        if may and probe_pairs is not None:
-            hexmap = blooms.get(rel, {}).get(col)
-            if hexmap is not None and not _bloom_may_contain(
-                hexmap, probe_pairs
-            ):
-                may = False
-        (touched if may else inherited).append(rel)
-
-    parent_dv = latest.get("dv", {})
-    data_dir: str | None = None
-    new_files: list[str] = []
-    if touched:
-        # rows already DV-deleted must not re-enter the rewrite
-        tset = set(touched)
-        target = _scan_minus_dv(
-            spark,
-            table,
-            [os.path.join(table, r) for r in touched],
-            {r: e for r, e in parent_dv.items() if r in tset},
-            schema=_schema_for_read(spark, latest),
-        )
-        doomed = F.col(col).between(F.lit(lo), F.lit(hi))
-        if extra_predicate is not None:
-            doomed = doomed & F.coalesce(
-                F.expr(extra_predicate), F.lit(False)
-            )
-        kept = target.filter(~F.coalesce(doomed, F.lit(False)))
-        _validate_constraints(kept, latest.get("constraints", {}))
-        # unique staging: collision-free under concurrency, so a
-        # conflicted delete can rebase its staged files verbatim
-        data_dir, _ = _stage_unique(
-            table, kept, latest["version"] + 1, parent=latest
-        )
-        new_files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(os.path.join(table, data_dir))
-            if f.endswith(".parquet")
-        )
-        file_stats.update(_collect_stats(table, new_files, [col]))
-        for rel in touched:
-            file_stats.pop(rel, None)
-    import time as _t
-
-    fresh_blooms = (
-        _collect_blooms(spark, table, new_files, [col])
-        if new_files and any(col in e for e in blooms.values())
-        else {}
-    )
-    new_rows = _collect_rows(table, new_files)
-    touched_set = set(touched)
-
-    def build_manifest(cur: dict, attempts: int) -> dict:
-        inherited_cur = [
-            r for r in _manifest_files(table, cur) if r not in touched_set
-        ]
-        iset = set(inherited_cur)
-        cur_rows = cur.get("rows", {})
-        cur_stats = cur.get("stats", {})
-        cur_dv = cur.get("dv", {})
-        cur_blooms = cur.get("blooms", {})
-        blooms_out = {
-            r: cur_blooms[r] for r in inherited_cur if r in cur_blooms
-        }
-        blooms_out.update(fresh_blooms)
-        stats_out: dict = {}
-        for r in inherited_cur:
-            st = dict(cur_stats.get(r, {}), **file_stats.get(r, {}))
-            if st:
-                stats_out[r] = st
-        for r in new_files:
-            if r in file_stats:
-                stats_out[r] = file_stats[r]
-        return {
-            "version": cur["version"] + 1,
-            "data_dir": (
-                data_dir if data_dir is not None else cur["data_dir"]
-            ),
-            "files": new_files + inherited_cur,
-            "rows": {
-                **{r: cur_rows[r] for r in inherited_cur if r in cur_rows},
-                **new_rows,
-            },
-            **({"blooms": blooms_out} if blooms_out else {}),
-            "kind": "delete_range",
-            "parent": cur["version"],
-            "ts": _t.time(),
-            "schema": cur["schema"],
-            "stats": stats_out,
-            **(
-                {"dv": {r: e for r, e in cur_dv.items() if r in iset}}
-                if any(r in iset for r in cur_dv)
-                else {}
-            ),
-            "pruning": {
-                "col": col,
-                "rewritten_files": len(touched),
-                "inherited_files": len(inherited_cur),
-                **({"rebased": attempts} if attempts else {}),
-            },
-            **(
-                {"constraints": cur["constraints"]}
-                if cur.get("constraints")
-                else {}
-            ),
-        }
-
-    def cleanup():
-        if data_dir is not None:
-            shutil.rmtree(os.path.join(table, data_dir), ignore_errors=True)
-
-    # disjoint-commit resolution: the delete replays onto a winner
-    # that (a) left every file it rewrote intact with identical DVs
-    # and (b) added no file that may hold keys in [lo, hi] — a
-    # winner-inserted row in the delete range would have needed this
-    # delete, so that race conflicts deterministically. NULL keys
-    # never match a BETWEEN, so the NULL-side test is moot
-    # (nulls_in_updates=False); update_empty=False keeps the
-    # winner-added-file check live even for a no-op delete.
-    return _publish_with_rebase(
-        table, latest, build_manifest,
-        rebase_ok=lambda nxt: _pruned_rebase_ok(
-            table, latest, nxt, touched_set, col,
-            lo, hi, False, False,
-        ),
-        cleanup=cleanup, rebase=rebase, max_rebase=max_rebase,
+    return _delete(
+        spark, table, col, lo, hi, extra_predicate, False, rebase, max_rebase
     )
 
 
@@ -2011,184 +1805,8 @@ def snapshot_delete_dv(
     get ONE fresh sidecar holding old ∪ new positions (exact
     cardinalities, no double counting); untouched files inherit their
     parent entries by reference."""
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
-    files = _manifest_files(table, latest)
-    cached_stats = latest.get("stats", {})
-    parent_dv = latest.get("dv", {})
-    blooms = latest.get("blooms", {})
-    probe_pairs = None
-    if lo == hi and any(col in e for e in blooms.values()):
-        pf = _literal_probe_frame(spark, latest, col, [lo])
-        if pf is not None:
-            probe_pairs = _bloom_probe_pairs(pf, col)
-
-    def file_minmax(rel: str):
-        cached = cached_stats.get(rel, {}).get(col)
-        if cached is not None:
-            return _stat_decode(cached[0]), _stat_decode(cached[1])
-        return _footer_minmax(os.path.join(table, rel), col)
-
-    touched: list[str] = []
-    file_stats: dict = dict(cached_stats)
-    for rel in files:
-        mm = file_minmax(rel)
-        if mm is not None and col not in cached_stats.get(rel, {}):
-            lo_e, hi_e = _stat_encode(mm[0]), _stat_encode(mm[1])
-            if lo_e is not None and hi_e is not None:
-                nc = _footer_nullcount(os.path.join(table, rel), col)
-                file_stats[rel] = dict(
-                    cached_stats.get(rel, {}), **{col: [lo_e, hi_e, nc]}
-                )
-        may = mm is None or not (mm[1] < lo or mm[0] > hi)
-        if may and probe_pairs is not None:
-            hexmap = blooms.get(rel, {}).get(col)
-            if hexmap is not None and not _bloom_may_contain(
-                hexmap, probe_pairs
-            ):
-                may = False
-        if may:
-            touched.append(rel)
-
-    v = latest["version"] + 1
-    import time as _t
-
-    new_dv = dict(parent_dv)
-    dv_dir: str | None = None
-    n_dv_files = 0
-    if touched:
-        # positions to delete, computed ONLY over overlapping files;
-        # parent DV rows for those files are folded in (union) so the
-        # fresh sidecar is each touched file's COMPLETE deletion
-        # vector and cardinalities never double-count.
-        doomed = F.col(col).between(F.lit(lo), F.lit(hi))
-        if extra_predicate is not None:
-            doomed = doomed & F.coalesce(
-                F.expr(extra_predicate), F.lit(False)
-            )
-        _rs = _schema_for_read(spark, latest)
-        scan = (
-            spark.read.schema(_rs) if _rs is not None else spark.read
-        ).parquet(*[os.path.join(table, r) for r in touched])
-        hits = (
-            scan.withColumn("rel", _rel_file_expr())
-            .withColumn("pos", F.col("_metadata.row_index"))
-            .filter(F.coalesce(doomed, F.lit(False)))
-            .select("rel", "pos")
-        )
-        old = {r: e for r, e in parent_dv.items() if r in set(touched)}
-        old_rows = _dv_rows(spark, table, old)
-        if old_rows is not None:
-            tset = list(old)
-            prior = old_rows.filter(F.col("rel").isin(tset))
-            merged = hits.join(
-                prior, ["rel", "pos"], "left_anti"
-            ).unionByName(prior)
-        else:
-            merged = hits
-        counts = {
-            r["rel"]: int(r["n"])
-            for r in merged.groupBy("rel")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        total = sum(counts.values())
-        if counts:
-            dv_dir = os.path.join(
-                _DVDIR, f"v{v:05d}-{uuid.uuid4().hex[:8]}"
-            )
-            n_out = max(1, total // 4_000_000)
-            merged.repartition(n_out, "rel").write.mode(
-                "errorifexists"
-            ).parquet(os.path.join(table, dv_dir))
-            for rel in touched:
-                if rel in counts:
-                    new_dv[rel] = {"dir": dv_dir, "count": counts[rel]}
-                else:
-                    new_dv.pop(rel, None)
-            n_dv_files = sum(1 for rel in touched if rel in counts)
-
-    # per-touched-file DV outcome (None = entry removed): applied on
-    # top of whichever parent the commit finally lands on — sound
-    # because the rebase check requires the winner to have left every
-    # touched file's bytes AND its DV entry exactly as we read them.
-    touched_set = set(touched)
-    dv_touched = {rel: new_dv.get(rel) for rel in touched}
-
-    def build_manifest(cur: dict, attempts: int) -> dict:
-        cur_files = _manifest_files(table, cur)
-        cur_rows = cur.get("rows", {})
-        cur_stats = cur.get("stats", {})
-        cur_blooms = cur.get("blooms", {})
-        dv_out = dict(cur.get("dv", {}))
-        for rel, entry in dv_touched.items():
-            if entry is None:
-                dv_out.pop(rel, None)
-            else:
-                dv_out[rel] = entry
-        stats_out = {
-            r: dict(cur_stats.get(r, {}), **file_stats.get(r, {}))
-            for r in cur_files
-            if cur_stats.get(r) or file_stats.get(r)
-        }
-        manifest = {
-            "version": cur["version"] + 1,
-            "data_dir": cur["data_dir"],
-            "files": list(cur_files),
-            "rows": {
-                r: cur_rows[r]
-                if r in cur_rows
-                else _footer_rows(os.path.join(table, r))
-                for r in cur_files
-            },
-            "kind": "delete_dv",
-            "parent": cur["version"],
-            "ts": _t.time(),
-            "schema": cur["schema"],
-            "stats": stats_out,
-            # blooms stay valid as supersets after a merge-on-read
-            # delete
-            **({"blooms": cur_blooms} if cur_blooms else {}),
-            "pruning": {
-                "col": col,
-                "rewritten_files": 0,
-                "dv_files": n_dv_files,
-                "scanned_files": len(touched),
-                "inherited_files": len(cur_files) - len(touched),
-                **({"rebased": attempts} if attempts else {}),
-            },
-            **(
-                {"constraints": cur["constraints"]}
-                if cur.get("constraints")
-                else {}
-            ),
-        }
-        if dv_out:
-            manifest["dv"] = dv_out
-        return manifest
-
-    def cleanup():
-        if dv_dir is not None:
-            shutil.rmtree(os.path.join(table, dv_dir), ignore_errors=True)
-
-    # disjoint-commit resolution: two concurrent DV deletes (or a DV
-    # delete racing a pruned merge) both commit when the winner (a)
-    # kept every file this delete scanned, bytes and DV entry intact
-    # — our fresh sidecar consolidates old ∪ new positions, so a
-    # winner-modified DV on a touched file would be silently dropped
-    # — and (b) added no file that may hold keys in [lo, hi] (a
-    # winner-inserted row in the delete range would have needed this
-    # delete). Files the winner touched that we only INHERIT are fine:
-    # dv_out starts from the winner's map.
-    return _publish_with_rebase(
-        table, latest, build_manifest,
-        rebase_ok=lambda nxt: _pruned_rebase_ok(
-            table, latest, nxt, touched_set, col,
-            lo, hi, False, False,
-        ),
-        cleanup=cleanup, rebase=rebase, max_rebase=max_rebase,
+    return _delete(
+        spark, table, col, lo, hi, extra_predicate, True, rebase, max_rebase
     )
 
 
@@ -2307,10 +1925,7 @@ def snapshot_rename_column(
     done = _txn_already_applied(table, txn)
     if done is not None:
         return done
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
+    latest = _require_latest(table)
     names = [f["name"] for f in latest["schema"]["fields"]]
     if old not in names:
         raise ValueError(f"column {old!r} not in {names}")
@@ -2379,10 +1994,7 @@ def snapshot_drop_column(
     done = _txn_already_applied(table, txn)
     if done is not None:
         return done
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    latest = ms[-1]
+    latest = _require_latest(table)
     names = [f["name"] for f in latest["schema"]["fields"]]
     if col not in names:
         raise ValueError(f"column {col!r} not in {names}")
@@ -2790,23 +2402,12 @@ def _apply_cdc_version_once(
     txn: tuple[str, int],
 ) -> int:
     """One publish attempt of ``_apply_cdc_version`` against the
-    current latest manifest (see there for semantics)."""
-    import time as _t
-
-    latest = _latest_manifest(table)
-    if latest is None:
-        raise FileNotFoundError(f"no versions in {table}")
-    files = _manifest_files(table, latest)
-    parent_dv = latest.get("dv", {})
-    cached_stats = latest.get("stats", {})
-    blooms = latest.get("blooms", {})
-    prune_col = keys[0]
-
-    # ---- deletes → consolidated deletion vectors on pruned files ----
-    new_dv = dict(parent_dv)
-    dv_dir: str | None = None
-    n_dv_files = 0
-    touched: list[str] = []
+    current latest manifest (see there for semantics): ``dels`` become
+    deletion vectors on the files pruning cannot exclude, ``ins`` is
+    staged as appended files, in ONE ``cdc_apply`` commit."""
+    latest = _require_latest(table)
+    bounds = {k: _NO_MATCH for k in keys}
+    touched, stats = [], {}
     if dels is not None:
         # one aggregation pass over the delete keys: min/max/non-null
         # count for EVERY key, so per-file exclusion can intersect
@@ -2818,50 +2419,20 @@ def _apply_cdc_version_once(
                 F.max(k).alias(f"hi{j}"),
                 F.count(k).alias(f"nn{j}"),
             ]
-        bounds = dels.agg(*aggs).first()
-        probe_pairs = {}
-        for k in keys:
-            if any(k in e for e in blooms.values()):
-                pp = _bloom_probe_pairs(dels, k)
-                if pp is not None:  # None = over cap, range-only
-                    probe_pairs[k] = pp
-        for rel in files:
-            may = True
-            for j, k in enumerate(keys):
-                cached = cached_stats.get(rel, {}).get(k)
-                if cached is not None:
-                    mm = (_stat_decode(cached[0]), _stat_decode(cached[1]))
-                    nc = cached[2] if len(cached) >= 3 else None
-                elif j == 0:
-                    # only the primary key pays a footer read when the
-                    # manifest has no cached stats; a secondary key
-                    # without cached stats simply cannot exclude
-                    mm = _footer_minmax(os.path.join(table, rel), k)
-                    nc = _footer_nullcount(os.path.join(table, rel), k)
-                else:
-                    continue
-                lo, hi = bounds[f"lo{j}"], bounds[f"hi{j}"]
-                nulls_k = bounds["n"] > bounds[f"nn{j}"]
-                may_nonnull = lo is not None and (
-                    mm is None or not (mm[1] < lo or mm[0] > hi)
-                )
-                if may_nonnull and k in probe_pairs:
-                    hexmap = blooms.get(rel, {}).get(k)
-                    if hexmap is not None and not _bloom_may_contain(
-                        hexmap, probe_pairs[k]
-                    ):
-                        may_nonnull = False
-                may_null = nulls_k and (nc is None or nc > 0)
-                if not (may_nonnull or may_null):
-                    may = False
-                    break
-            if may:
-                touched.append(rel)
-    if touched:
-        _rs = _schema_for_read(spark, latest)
-        scan = (
-            spark.read.schema(_rs) if _rs is not None else spark.read
-        ).parquet(*[os.path.join(table, r) for r in touched])
+        b = dels.agg(*aggs).first()
+        bounds = {
+            k: (
+                b[f"lo{j}"], b[f"hi{j}"], b["n"] > b[f"nn{j}"],
+                # None = no bloom on k, or over the probe cap: range-only
+                _bloom_probe_pairs(dels, k) if _bloomed(latest, [k]) else None,
+            )
+            for j, k in enumerate(keys)
+        }
+        touched, stats = _prune_files(
+            table, latest, _manifest_files(table, latest), bounds
+        )
+
+    def match(scan: DataFrame) -> DataFrame:
         d = dels.select(
             *[F.col(k).alias(f"__del_{k}") for k in keys]
         ).dropDuplicates()
@@ -2869,120 +2440,15 @@ def _apply_cdc_version_once(
         for k in keys:
             c = F.col(k).eqNullSafe(F.col(f"__del_{k}"))
             cond = c if cond is None else cond & c
-        hits = (
-            scan.withColumn("rel", _rel_file_expr())
-            .withColumn("pos", F.col("_metadata.row_index"))
-            .join(d, cond, "left_semi")
-            .select("rel", "pos")
-        )
-        # fold in prior positions so each touched file's fresh sidecar
-        # is its COMPLETE deletion vector (no double counting)
-        old = {r: e for r, e in parent_dv.items() if r in set(touched)}
-        old_rows = _dv_rows(spark, table, old)
-        if old_rows is not None:
-            prior = old_rows.filter(F.col("rel").isin(list(old)))
-            merged = hits.join(
-                prior, ["rel", "pos"], "left_anti"
-            ).unionByName(prior)
-        else:
-            merged = hits
-        counts = {
-            r["rel"]: int(r["n"])
-            for r in merged.groupBy("rel")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        if counts:
-            dv_dir = os.path.join(
-                _DVDIR, f"v{latest['version'] + 1:05d}-{uuid.uuid4().hex[:8]}"
-            )
-            n_out = max(1, sum(counts.values()) // 4_000_000)
-            merged.repartition(n_out, "rel").write.mode(
-                "errorifexists"
-            ).parquet(os.path.join(table, dv_dir))
-            for rel in touched:
-                if rel in counts:
-                    new_dv[rel] = {"dir": dv_dir, "count": counts[rel]}
-                else:
-                    new_dv.pop(rel, None)
-            n_dv_files = sum(1 for rel in touched if rel in counts)
+        return scan.join(d, cond, "left_semi")
 
-    # ---- inserts → appended files (schema may widen) ----
-    data_dir: str | None = None
-    new_files: list[str] = []
-    schema = latest["schema"]
-    if ins is not None:
-        _validate_constraints(ins, latest.get("constraints", {}))
-        data_dir, schema = _stage_unique(
-            table, ins, latest["version"] + 1, parent=latest
-        )
-        new_files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(os.path.join(table, data_dir))
-            if f.endswith(".parquet")
-        )
-
-    stats_out = dict(cached_stats)
-    if new_files:
-        # stats for EVERY replication key, so later drains can
-        # intersect exclusions across the composite key
-        stats_out.update(_collect_stats(table, new_files, list(keys)))
-    blooms_out = dict(blooms)
-    bloom_keys = [
-        k for k in keys if any(k in e for e in blooms.values())
-    ]
-    if new_files and bloom_keys:
-        blooms_out.update(
-            _collect_blooms(spark, table, new_files, bloom_keys)
-        )
-    rows_map = latest.get("rows", {})
-    manifest = {
-        "version": latest["version"] + 1,
-        "data_dir": data_dir if data_dir is not None else latest["data_dir"],
-        "files": new_files + list(files),
-        "rows": {
-            **{
-                r: rows_map[r]
-                if r in rows_map
-                else _footer_rows(os.path.join(table, r))
-                for r in files
-            },
-            **_collect_rows(table, new_files),
-        },
-        "kind": "cdc_apply",
-        "parent": latest["version"],
-        "ts": _t.time(),
-        "schema": schema,
-        "stats": stats_out,
-        **({"blooms": blooms_out} if blooms_out else {}),
-        "txn": {"app": txn[0], "batch": int(txn[1])},
-        "pruning": {
-            "col": prune_col,
-            "cols": list(keys),
-            "rewritten_files": 0,
-            "appended_files": len(new_files),
-            "dv_files": n_dv_files,
-            "scanned_files": len(touched),
-            "inherited_files": len(files),
-        },
-        **(
-            {"constraints": latest["constraints"]}
-            if latest.get("constraints")
-            else {}
-        ),
-    }
-    if new_dv:
-        manifest["dv"] = new_dv
-    _record_last_field_id(manifest, _last_field_id(table, latest))
-    try:
-        _publish(table, manifest)
-    except SnapshotConflictError:
-        if data_dir is not None:
-            shutil.rmtree(os.path.join(table, data_dir), ignore_errors=True)
-        if dv_dir is not None:
-            shutil.rmtree(os.path.join(table, dv_dir), ignore_errors=True)
-        raise
-    return manifest["version"]
+    # no rebase: a lost race re-runs the whole application against
+    # the new latest (``_apply_cdc_version``)
+    return _commit_files(
+        spark, table, latest, "cdc_apply", df=ins, scanned=touched,
+        dv=_write_dv(spark, table, latest, touched, match), stats=stats,
+        bounds=bounds, txn=txn, rebase=False,
+    )
 
 
 def replicate_snapshot_changes(

@@ -480,6 +480,21 @@ def test_cli_snapshot_replicate_loop(spark, tmp_path):
     assert sorted(tuple(r) for r in snap.snapshot_read(spark, dst).collect()) \
         == sorted(tuple(r) for r in snap.snapshot_read(spark, src).collect())
     assert snap.last_committed_txn(dst, "cdf-replica") == 2
+    # a multi-version backlog drains folded by default (the library's
+    # fold_versions=64): two row-change versions, one cdc_apply commit
+    snap.snapshot_delete_dv(spark, src, "k", 30, 39)
+    snap.snapshot_merge_update_pruned(
+        spark, src,
+        spark.createDataFrame([(501, 5.1)], "k long, x double"),
+        on=["k"], update_cols=["x"], when_not_matched_insert=True,
+    )
+    n_before = len(snap._manifests(dst))
+    main(["snapshot", "replicate", "--table", src,
+          "--replica", dst, "--keys", "k"])
+    new = snap._manifests(dst)[n_before:]
+    assert [(m["kind"], m["txn"]["batch"]) for m in new] == [("cdc_apply", 4)]
+    assert sorted(tuple(r) for r in snap.snapshot_read(spark, dst).collect()) \
+        == sorted(tuple(r) for r in snap.snapshot_read(spark, src).collect())
 
 
 def test_cli_snapshot_alter_check(spark, tmp_path, capsys):

@@ -9,6 +9,8 @@ import contextlib
 import io
 import re
 
+import pytest
+
 from exceldatatransform_py_spark.plans.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -312,19 +314,16 @@ def test_keep_latest_uses_window_group_limit(spark):
     assert "WindowGroupLimit" in plan
 
 
-def test_no_query_plans_cartesian_or_row_python(spark):
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_no_query_plans_cartesian_or_row_python(spark, name):
     """Global invariants over EVERY registered query's physical plan:
     no CartesianProduct (unbounded pair blowup) and no BatchEvalPython
     (row-at-a-time Python in a hot path). Arrow-batched Python
-    (mapInPandas) is allowed — that's the sanctioned slow path."""
-    offenders = []
-    for name in QUERIES:
-        plan = plan_of(spark, name)
-        if "CartesianProduct" in plan:
-            offenders.append((name, "CartesianProduct"))
-        if "BatchEvalPython" in plan:
-            offenders.append((name, "BatchEvalPython"))
-    assert not offenders, offenders
+    (mapInPandas) is allowed — that's the sanctioned slow path.
+    One case per query, so a failure or a hang names the query."""
+    plan = plan_of(spark, name)
+    assert "CartesianProduct" not in plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_runtime_bloom_filter_on_selective_join(spark):

@@ -723,6 +723,78 @@ def test_pruned_merge_equals_plain_merge(
     assert got == want
 
 
+# ---------------------------------------------------------------------------
+# Copy-on-write delete ≡ merge-on-read delete ≡ plain filter: for
+# arbitrary keys (NULLs included), ranges, point deletes on a
+# bloom-indexed key and an optional extra predicate, both delete
+# flavors leave exactly the rows a plain Spark filter keeps, and they
+# prune identically — the files the range delete rewrites are the
+# files the DV delete scans.
+# ---------------------------------------------------------------------------
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    keys=st.lists(
+        st.one_of(st.none(), st.integers(min_value=0, max_value=60)),
+        min_size=1, max_size=40,
+    ),
+    lo=st.integers(min_value=-5, max_value=65),
+    width=st.integers(min_value=0, max_value=20),
+    point=st.booleans(),
+    extra=st.booleans(),
+    n_files=st.integers(min_value=1, max_value=4),
+)
+def test_range_and_dv_deletes_equal_plain_filter(
+    spark, tmp_path_factory, keys, lo, width, point, extra, n_files
+):
+    import json
+    import os
+    import shutil
+
+    from exceldatatransform_py_spark.sources.snapshots import (
+        snapshot_delete_dv,
+        snapshot_delete_range,
+        snapshot_read,
+        snapshot_write,
+    )
+
+    root = str(tmp_path_factory.mktemp("del"))
+    cow, mor = os.path.join(root, "cow"), os.path.join(root, "mor")
+    base = spark.createDataFrame(
+        [(k, i) for i, k in enumerate(keys)], "k int, i int"
+    )
+    snapshot_write(
+        cow,
+        base.repartitionByRange(n_files, "k").sortWithinPartitions("k"),
+        stats_cols=["k"],
+        bloom_cols=["k"],
+    )
+    shutil.copytree(cow, mor)  # same files, so pruning must agree
+    hi = lo if point else lo + width
+    pred = "i % 2 = 0" if extra else None
+    v_cow = snapshot_delete_range(spark, cow, "k", lo, hi, pred)
+    v_mor = snapshot_delete_dv(spark, mor, "k", lo, hi, pred)
+
+    def rows(df):  # i is unique per row; k may be NULL
+        return sorted((tuple(r) for r in df.collect()), key=lambda r: r[1])
+
+    doomed = f"k BETWEEN {lo} AND {hi}" + (f" AND {pred}" if pred else "")
+    want = rows(base.filter(f"NOT coalesce({doomed}, false)"))
+    assert rows(snapshot_read(spark, cow)) == want
+    assert rows(snapshot_read(spark, mor)) == want
+
+    def pruning(table, v):
+        path = os.path.join(table, "_versions", f"v{v:05d}.json")
+        with open(path) as f:
+            return json.load(f)["pruning"]
+
+    assert (
+        pruning(cow, v_cow)["rewritten_files"]
+        == pruning(mor, v_mor)["scanned_files"]
+    )
+
+
 def test_simhash_near_dup_recall_is_exact_below_band_bound(spark):
     # Pigeonhole guarantee of the 4-band layout: EVERY pair of 63-bit
     # fingerprints within hamming distance 3 must be emitted, and no

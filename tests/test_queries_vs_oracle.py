@@ -11,12 +11,6 @@ from tests.oracle_utils import compare_with_oracle
 ORACLE_CHECKED = sorted(ORACLE)
 
 
-@pytest.mark.parametrize("name", ORACLE_CHECKED)
-def test_query_matches_oracle(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    compare_with_oracle(df, ORACLE[name], sf_dir)
-
-
 # DuckDB result type -> Spark simpleString families the driver's hasher
 # serializes identically. Anything outside this table (HUGEINT, DECIMAL,
 # FLOAT-vs-DOUBLE drift, ...) diverges in the driver's pandas/Arrow
@@ -36,32 +30,31 @@ _DUCK_TO_SPARK_OK = {
 }
 
 
-def test_oracle_dtype_parity(spark, sf_dir):
-    """DESCRIBE every oracle and pin its output types to the Spark
+def _dtype_drift(df, oracle_sql: str, sf_dir: str) -> list[tuple]:
+    """DESCRIBE the oracle and pin its output types to the Spark
     query's schema via the driver-safe family table above."""
     from tests.oracle_utils import duck_connection
 
-    con = duck_connection(sf_dir)
+    desc = duck_connection(sf_dir).execute(
+        f"DESCRIBE ({oracle_sql})"
+    ).fetchall()
+    sp = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     problems = []
-    for name in ORACLE_CHECKED:
-        desc = con.execute(f"DESCRIBE ({ORACLE[name]})").fetchall()
-        sp = {
-            f.name: f.dataType.simpleString()
-            for f in QUERIES[name](spark, sf_dir).schema.fields
-        }
-        for col, du_type, *_ in desc:
-            du_fam = du_type.split("(")[0]
-            sp_type = sp.get(col, "<missing>").split("(")[0]
-            ok = _DUCK_TO_SPARK_OK.get(du_fam)
-            if ok is None or sp_type not in ok:
-                problems.append((name, col, du_type, sp_type))
-    assert not problems, f"driver-visible dtype drift: {problems}"
+    for col, du_type, *_ in desc:
+        du_fam = du_type.split("(")[0]
+        sp_type = sp.get(col, "<missing>").split("(")[0]
+        ok = _DUCK_TO_SPARK_OK.get(du_fam)
+        if ok is None or sp_type not in ok:
+            problems.append((col, du_type, sp_type))
+    return problems
 
 
-def test_all_queries_run(spark, sf_dir):
-    for name, fn in QUERIES.items():
-        df = fn(spark, sf_dir)
-        assert df.count() >= 0, name
+@pytest.mark.parametrize("name", ORACLE_CHECKED)
+def test_query_matches_oracle(spark, sf_dir, name):
+    df = QUERIES[name](spark, sf_dir)
+    compare_with_oracle(df, ORACLE[name], sf_dir)
+    drift = _dtype_drift(df, ORACLE[name], sf_dir)
+    assert not drift, f"driver-visible dtype drift: {drift}"
 
 
 def test_entry_smoke(spark):

@@ -3639,3 +3639,70 @@ def test_replicate_fold_stops_at_schema_commit(spark, table, tmp_path):
     kinds = [m["kind"] for m in snap._manifests(dst)]
     # bootstrap + fold(v1-3) + rename + fold(v5-7)
     assert kinds == ["overwrite", "cdc_apply", "rename_column", "cdc_apply"]
+
+
+def test_replicate_fold_stops_at_schema_widening_merge(spark, table, tmp_path):
+    """A widening merge (a row-change kind whose schema signature
+    differs) ends the fold window before it and starts the next one:
+    the first window's cdc_apply keeps the old column set, the second
+    starts at the widening version and carries the new column, and
+    the replica equals the source."""
+    from exceldatatransform_py_spark.sources import snapshots as snap
+
+    src, dst = table, str(tmp_path / "replica")
+    snap.snapshot_write(
+        src,
+        spark.createDataFrame(
+            [(i, float(i)) for i in range(10)], "k long, x double"
+        ),
+        stats_cols=["k"],
+    )                                                          # v0
+    for i in range(2):                                         # v1..v2
+        snap.snapshot_merge_update_pruned(
+            spark, src,
+            spark.createDataFrame([(i, float(50 + i))], "k long, x double"),
+            on=["k"], update_cols=["x"],
+        )
+    snapshot_merge_update(                                     # v3
+        spark, src,
+        spark.createDataFrame(
+            [(3, -3.0, "w")], "k long, x double, note string"
+        ),
+        on=["k"], update_cols=["x", "note"], evolve_schema=True,
+    )
+    for i in range(2):                                         # v4..v5
+        snap.snapshot_merge_update_pruned(
+            spark, src,
+            spark.createDataFrame(
+                [(5 + i, float(70 + i), "n")],
+                "k long, x double, note string",
+            ),
+            on=["k"], update_cols=["x", "note"],
+        )
+    assert snap.replicate_snapshot_changes(
+        spark, src, dst, keys=["k"], fold_versions=100
+    ) == 6
+    cdc = [m for m in snap._manifests(dst) if m["kind"] == "cdc_apply"]
+    assert [m["txn"]["batch"] for m in cdc] == [2, 5]
+    cols = [[f["name"] for f in m["schema"]["fields"]] for m in cdc]
+    assert cols == [["k", "x"], ["k", "x", "note"]]
+    assert _rows(snap.snapshot_read(spark, dst)) == _rows(
+        snap.snapshot_read(spark, src)
+    )
+
+
+def test_snapshot_history_after_vacuum_lists_every_version(spark, table):
+    """Directory-level versions list their files from the manifest's
+    cached row counts, so the audit log reports every version's file
+    count after vacuum has removed the older data directories."""
+    from exceldatatransform_py_spark.sources.snapshots import (
+        snapshot_history,
+    )
+
+    for n in (1, 2, 3):
+        snapshot_write(table, spark.range(30).repartition(n))
+    assert vacuum(table, keep_last=1) == [0, 1]
+    assert not os.path.exists(os.path.join(table, "d00000"))
+    hist = snapshot_history(table)
+    assert [h["version"] for h in hist] == [0, 1, 2]
+    assert [h["n_files"] for h in hist] == [1, 2, 3]
