@@ -52,6 +52,11 @@ from exceldatatransform_py_spark.plans.pipeline import (
     merge_ledger_into_target,
 )
 from exceldatatransform_py_spark.session import get_spark
+from exceldatatransform_py_spark.sources.maintenance import (
+    INDEX_FAMILIES,
+    compact_index,
+    delete_from_index,
+)
 from exceldatatransform_py_spark.sources.readers import read_excel_workbook
 from exceldatatransform_py_spark.sources.writers import (
     update_excel_workbook_in_place,
@@ -164,6 +169,20 @@ def cmd_explain(spark: SparkSession, args: argparse.Namespace) -> None:
     )
 
 
+def _deliver(df: DataFrame, args: argparse.Namespace, what: str) -> None:
+    """Save ``df`` to ``--output`` (csv by extension, else parquet), or
+    print ``--limit`` rows when no output is given."""
+    if not args.output:
+        df.show(args.limit, truncate=False)
+        return
+    fmt = "csv" if args.output.endswith(".csv") else "parquet"
+    writer = df.write.mode("overwrite")
+    if fmt == "csv":
+        writer = writer.option("header", "true")
+    writer.format(fmt).save(args.output)
+    print(f"wrote {what} to {args.output}", file=sys.stderr)
+
+
 def cmd_query(spark: SparkSession, args: argparse.Namespace) -> None:
     """Run any registered query against an sf_dir and deliver the
     result — to stdout (default, ``--limit`` rows) or to a parquet/csv
@@ -174,190 +193,79 @@ def cmd_query(spark: SparkSession, args: argparse.Namespace) -> None:
     if args.name not in QUERIES:
         names = "\n".join(sorted(QUERIES))
         raise SystemExit(f"unknown query {args.name!r}; one of:\n{names}")
-    df = QUERIES[args.name](spark, args.sf_dir)
-    if args.output:
-        fmt = "csv" if args.output.endswith(".csv") else "parquet"
-        writer = df.write.mode("overwrite")
-        if fmt == "csv":
-            writer = writer.option("header", "true")
-        writer.format(fmt).save(args.output)
-        print(f"wrote {args.name} result to {args.output}", file=sys.stderr)
-    else:
-        df.show(args.limit, truncate=False)
+    _deliver(QUERIES[args.name](spark, args.sf_dir), args, f"{args.name} result")
 
 
 def cmd_index(spark: SparkSession, args: argparse.Namespace) -> None:
-    """Drive the persisted-index production loops (build → probe →
-    append) from the command line — dedup (MinHash), simhash, ivf,
-    lsh, bm25. ``probe`` delivers its result like ``query`` does
-    (stdout or a parquet/csv sink)."""
-    docs_kinds = {"dedup", "simhash", "novelty"}
-    if args.action == "delete":
-        # evict ids: tombstones consulted by every probe; the next
-        # compact purges them physically. --input is a parquet whose
-        # --id-col column names the ids (extra columns ignored).
-        from exceldatatransform_py_spark.sources.maintenance import (
-            delete_from_index,
-        )
-
-        if not args.input:
-            raise SystemExit(f"index delete {args.kind}: --input is required")
-        kind = "dedup" if args.kind == "novelty" else args.kind
-        n = delete_from_index(
-            spark, args.prefix, kind,
-            spark.read.parquet(args.input), args.id_col,
-        )
-        print(f"recorded {n} new tombstones for {args.prefix}",
-              file=sys.stderr)
-        return
+    """Drive a persisted index family (``INDEX_FAMILIES``) from the
+    command line: build → probe → append, delete and compact.
+    ``probe`` delivers its result like ``query`` does (stdout or a
+    parquet/csv sink)."""
+    family = INDEX_FAMILIES[args.kind]
     if args.action == "compact":
         # OPTIMIZE: fold streaming-append small files back to one per
-        # partition/bucket; serve output is unchanged.
-        from exceldatatransform_py_spark.sources.maintenance import (
-            compact_index,
-        )
-
-        kind = "dedup" if args.kind == "novelty" else args.kind
-        stats = compact_index(spark, args.prefix, kind)
-        for t, s in stats.items():
-            print(
-                f"{args.prefix}_{t}: {s['files_before']} -> "
-                f"{s['files_after']} files",
-                file=sys.stderr,
-            )
+        # partition/bucket and purge tombstones; serve output unchanged.
+        for t, s in compact_index(spark, args.prefix, args.kind).items():
+            print(f"{args.prefix}_{t}: {s['files_before']} -> "
+                  f"{s['files_after']} files", file=sys.stderr)
         return
-    # Validate per-action requirements up front: every action consumes
-    # --input, build additionally needs --path (else the external
-    # tables land under a literal ./None/), and ivf build needs the
-    # trained --centroids. Clear SystemExit beats an opaque TypeError
-    # out of spark.read.parquet(None).
+    # Validate up front (a clear SystemExit beats an opaque TypeError
+    # out of spark.read.parquet(None)): every other action reads
+    # --input; build writes under --path, and IVF builds read the
+    # trained --centroids.
     if not args.input:
         raise SystemExit(f"index {args.action} {args.kind}: --input is required")
     if args.action == "build" and not args.path:
         raise SystemExit(f"index build {args.kind}: --path is required")
-    if (args.action == "build" and args.kind in ("ivf", "ivf_sq8",
-                                                  "ivf_pq")
-            and not args.centroids):
+    if args.action == "build" and family.centroids and not args.centroids:
         raise SystemExit(f"index build {args.kind}: --centroids is required")
     df = spark.read.parquet(args.input)
-
-    def deliver(out):
-        if args.output:
-            fmt = "csv" if args.output.endswith(".csv") else "parquet"
-            w = out.write.mode("overwrite")
-            if fmt == "csv":
-                w = w.option("header", "true")
-            w.format(fmt).save(args.output)
-            print(f"wrote probe result to {args.output}", file=sys.stderr)
-        else:
-            out.show(args.limit, truncate=False)
-
-    if args.kind in docs_kinds:
-        from exceldatatransform_py_spark.operators import dedup as dd
-
-        id_col, text_col = args.id_col, args.text_col
-        if args.action == "build":
-            build = (
-                dd.build_simhash_index
-                if args.kind == "simhash"
-                else dd.build_dedup_index  # novelty probes the dedup index
-            )
-            build(df, args.prefix, n_buckets=args.buckets, path=args.path,
-                  id_col=id_col, text_col=text_col)
-        elif args.action == "append":
-            if args.kind == "simhash":
-                dd.append_to_simhash_index(df, args.prefix, id_col, text_col)
-            else:
-                dd.append_to_dedup_index(df, args.prefix, id_col, text_col)
-        else:
-            probe = {
-                "dedup": dd.incremental_near_dup,
-                "simhash": dd.incremental_simhash_near_dup,
-                "novelty": dd.incremental_novelty,
-            }[args.kind]
-            deliver(probe(spark, args.prefix, df, id_col, text_col))
+    if args.action == "delete":
+        # evict the --id-col ids (extra columns ignored): tombstones
+        # consulted by every probe; the next compact purges them.
+        n = delete_from_index(spark, args.prefix, args.kind, df, args.id_col)
+        print(f"recorded {n} new tombstones for {args.prefix}",
+              file=sys.stderr)
         return
 
-    if args.kind in ("phash", "audio", "video"):
-        # multimodal near-dup: input parquet of (id, media payload) —
-        # BMP / WAV / SVC; all three fingerprints flow through the
-        # SAME banded index simhash uses
-        from exceldatatransform_py_spark.operators import dedup as dd
-        from exceldatatransform_py_spark.operators import multimodal as mm
-
-        if args.kind == "phash":
-            fp = mm.image_phash(
-                df, id_col=args.id_col, image_col=args.image_col
-            )
-            fp_col = "phash"
-        elif args.kind == "audio":
-            fp = mm.audio_fingerprint(
-                df, id_col=args.id_col, audio_col=args.audio_col,
-                window_samples=args.audio_window or None,  # 0 = whole clip
-            )
-            fp_col = "afp"
-        else:
-            fp = mm.video_fingerprint(
-                df, id_col=args.id_col, video_col=args.video_col
-            )
-            fp_col = "vfp"
-        if args.action == "build":
-            dd.build_fingerprint_index(
-                fp, args.prefix, n_buckets=args.buckets, path=args.path,
-                id_col=args.id_col, fp_col=fp_col,
-            )
-        elif args.action == "append":
-            dd.append_to_fingerprint_index(
-                fp, args.prefix, id_col=args.id_col, fp_col=fp_col
-            )
-        else:
-            deliver(dd.incremental_fingerprint_near_dup(
-                spark, args.prefix, fp, id_col=args.id_col, fp_col=fp_col
-            ))
-        return
-
-    if args.kind in ("ivf", "ivf_sq8", "ivf_pq", "lsh"):
-        from exceldatatransform_py_spark.operators import similarity as sim
-
-        id_col, vec_col = args.id_col, args.vec_col
-        if args.action == "build":
-            if args.kind in ("ivf", "ivf_sq8", "ivf_pq"):
-                cent = spark.read.parquet(args.centroids)
-                build = {"ivf": sim.build_ivf_index,
-                         "ivf_sq8": sim.build_ivf_sq8_index,
-                         "ivf_pq": sim.build_ivf_pq_index}[args.kind]
-                build(df, cent, args.prefix, path=args.path,
-                      id_col=id_col, vec_col=vec_col)
-            else:
-                sim.build_lsh_index(df, args.prefix, path=args.path,
-                                    id_col=id_col, vec_col=vec_col)
-        elif args.action == "append":
-            append = {"ivf": sim.append_to_ivf_index,
-                      "ivf_sq8": sim.append_to_ivf_sq8_index,
-                      "ivf_pq": sim.append_to_ivf_pq_index,
-                      "lsh": sim.append_to_lsh_index}[args.kind]
-            append(spark, df, args.prefix, id_col=id_col, vec_col=vec_col)
-        else:
-            serve = {"ivf": sim.ivf_topk_from_index,
-                     "ivf_sq8": sim.ivf_sq8_topk_from_index,
-                     "ivf_pq": sim.ivf_pq_topk_from_index,
-                     "lsh": sim.lsh_topk_from_index}[args.kind]
-            deliver(serve(spark, args.prefix, df, id_col=id_col,
-                          vec_col=vec_col, k=args.k))
-        return
-
-    # bm25: build over documents; probe takes a query-terms parquet
-    from exceldatatransform_py_spark.operators import retrieval as ret
-
-    if args.action == "build":
-        ret.build_bm25_index(df, args.prefix, n_buckets=args.buckets,
-                             path=args.path, id_col=args.id_col,
-                             text_col=args.text_col)
-    elif args.action == "append":
-        ret.append_to_bm25_index(spark, df, args.prefix,
-                                 id_col=args.id_col, text_col=args.text_col)
+    # the options each entry point takes follow the family's input
+    opts = {"id_col": args.id_col}
+    if family.input == "media":
+        fp_opts = {o: getattr(args, o) for o in family.featurize_opts}
+        df = family.entry("featurize")(df, id_col=args.id_col, **fp_opts)
+        opts["fp_col"] = family.fp_col
+    elif family.input == "vectors":
+        opts["vec_col"] = args.vec_col
     else:
-        deliver(ret.bm25_topk_from_index(spark, args.prefix, df, k=args.k))
+        opts["text_col"] = args.text_col
+    if args.action == "build":
+        opts["path"] = args.path
+        if family.centroids:
+            opts["centroids"] = spark.read.parquet(args.centroids)
+        elif family.input != "vectors":
+            opts["n_buckets"] = args.buckets
+    elif args.action == "probe":
+        if family.input == "terms":  # query terms carry no column options
+            opts = {}
+        if family.ranked:
+            opts["k"] = args.k
+    out = family.run(args.action, spark, args.prefix, df, **opts)
+    if args.action == "probe":
+        _deliver(out, args, "probe result")
+
+
+def _checks(args: argparse.Namespace) -> dict[str, str]:
+    """``--check name=expr`` items → {name: SQL boolean}."""
+    cons = {}
+    for item in args.check or []:
+        name, _, cond = item.partition("=")
+        if not cond:
+            raise SystemExit(
+                f"snapshot {args.action}: --check expects name=expr, "
+                f"got {item!r}"
+            )
+        cons[name] = cond
+    return cons
 
 
 def cmd_snapshot(spark: SparkSession, args: argparse.Namespace) -> None:
@@ -375,16 +283,7 @@ def cmd_snapshot(spark: SparkSession, args: argparse.Namespace) -> None:
     if a == "write":
         df = spark.read.parquet(args.input)
         stats = args.stats_cols.split(",") if args.stats_cols else ()
-        cons = None
-        if args.check:
-            cons = {}
-            for item in args.check:
-                name, _, cond = item.partition("=")
-                if not cond:
-                    raise SystemExit(
-                        f"snapshot write: --check expects name=expr, got {item!r}"
-                    )
-                cons[name] = cond
+        cons = _checks(args) if args.check else None
         v = snap.snapshot_write(
             args.table, df, stats_cols=stats, constraints=cons
         )
@@ -404,11 +303,7 @@ def cmd_snapshot(spark: SparkSession, args: argparse.Namespace) -> None:
         out = snap.snapshot_read(
             spark, args.table, version=args.version, as_of_ts=args.as_of_ts
         )
-        if args.output:
-            out.write.mode("overwrite").parquet(args.output)
-            print(f"wrote snapshot read to {args.output}", file=sys.stderr)
-        else:
-            out.show(args.limit, truncate=False)
+        _deliver(out, args, "snapshot read")
     elif a == "history":
         for entry in snap.snapshot_history(args.table):
             print(entry)
@@ -418,11 +313,7 @@ def cmd_snapshot(spark: SparkSession, args: argparse.Namespace) -> None:
         out = snap.snapshot_changes(
             spark, args.table, args.from_version, to_version=args.version
         )
-        if args.output:
-            out.write.mode("overwrite").parquet(args.output)
-            print(f"wrote change feed to {args.output}", file=sys.stderr)
-        else:
-            out.show(args.limit, truncate=False)
+        _deliver(out, args, "change feed")
     elif a == "rollback":
         if args.version is None:
             raise SystemExit("snapshot rollback: --version is required")
@@ -443,14 +334,7 @@ def cmd_snapshot(spark: SparkSession, args: argparse.Namespace) -> None:
         v = snap.snapshot_drop_column(args.table, args.old)
         print(f"dropped {args.old} as version {v}", file=sys.stderr)
     elif a == "alter-check":
-        cons = {}
-        for item in args.check or []:
-            name, _, cond = item.partition("=")
-            if not cond:
-                raise SystemExit(
-                    f"snapshot alter-check expects name=expr, got {item!r}"
-                )
-            cons[name] = cond
+        cons = _checks(args)
         v = snap.snapshot_set_constraints(spark, args.table, cons)
         what = cons if cons else "ALL DROPPED"
         print(f"set constraints {what} as version {v}", file=sys.stderr)
@@ -471,6 +355,11 @@ def cmd_snapshot(spark: SparkSession, args: argparse.Namespace) -> None:
         )
         print(f"applied {n} source versions to {args.replica}",
               file=sys.stderr)
+
+
+def _whole_clip_if_zero(text: str) -> int | None:
+    """``--audio-window``: leading-excerpt samples, 0 = whole clip."""
+    return int(text) or None
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -502,25 +391,23 @@ def main(argv: list[str] | None = None) -> None:
     e.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     e.add_argument("--mode", default="formatted",
                    choices=["simple", "extended", "formatted", "cost", "codegen"])
-    q = sub.add_parser("query",
+    sink = argparse.ArgumentParser(add_help=False)  # see _deliver
+    sink.add_argument("--output", default=None,
+                      help="parquet dir or .csv path; omit to print")
+    sink.add_argument("--limit", type=int, default=20)
+    q = sub.add_parser("query", parents=[sink],
                        help="run a registered query and print or save "
                             "the result")
     q.add_argument("name")
     q.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    q.add_argument("--output", default=None,
-                   help="parquet dir or .csv path; omit to print")
-    q.add_argument("--limit", type=int, default=20)
 
-    ix = sub.add_parser("index",
+    ix = sub.add_parser("index", parents=[sink],
                         help="build / probe / append the persisted "
                              "retrieval & dedup indexes")
     ix.add_argument("action",
                     choices=["build", "probe", "append", "delete",
                              "compact"])
-    ix.add_argument("kind",
-                    choices=["dedup", "simhash", "novelty", "phash",
-                             "audio", "video", "ivf",
-                             "ivf_sq8", "ivf_pq", "lsh", "bm25"])
+    ix.add_argument("kind", choices=list(INDEX_FAMILIES))
     ix.add_argument("--prefix", required=True,
                     help="catalog table prefix, e.g. corpus_dedup")
     ix.add_argument("--input", default=None,
@@ -537,17 +424,15 @@ def main(argv: list[str] | None = None) -> None:
                     help="BMP payload column — phash kind only")
     ix.add_argument("--audio-col", default="audio",
                     help="WAV payload column — audio kind only")
-    ix.add_argument("--audio-window", type=int, default=128,
+    ix.add_argument("--audio-window", dest="window_samples",
+                    type=_whole_clip_if_zero, default=128,
                     help="leading-excerpt samples for the audio "
                          "fingerprint (0 = whole clip)")
     ix.add_argument("--video-col", default="video",
                     help="SVC payload column — video kind only")
     ix.add_argument("--k", type=int, default=5)
-    ix.add_argument("--output", default=None,
-                    help="parquet dir or .csv path; omit to print")
-    ix.add_argument("--limit", type=int, default=20)
 
-    sn = sub.add_parser("snapshot",
+    sn = sub.add_parser("snapshot", parents=[sink],
                         help="versioned snapshot tables: write / merge / "
                              "read / history / rollback / vacuum / compact")
     sn.add_argument("action",
@@ -595,9 +480,6 @@ def main(argv: list[str] | None = None) -> None:
                          "commit per source version)")
     sn.add_argument("--old", default=None, help="rename: current column name")
     sn.add_argument("--new", default=None, help="rename: new column name")
-    sn.add_argument("--output", default=None,
-                    help="read: parquet dir; omit to print")
-    sn.add_argument("--limit", type=int, default=20)
 
     args = p.parse_args(argv)
     spark = get_spark(app_name=f"edt-{args.cmd}")

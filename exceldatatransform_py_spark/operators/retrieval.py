@@ -21,6 +21,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from exceldatatransform_py_spark.functions.text import ws_tokens
+from exceldatatransform_py_spark.sources.bucketing import write_bucketed
+from exceldatatransform_py_spark.sources.maintenance import (
+    _append_index_table,
+    _truncate_index_table,
+    index_tombstones,
+    replace_table,
+)
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -36,26 +43,29 @@ def tokenize(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _term_freqs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, tok, tf): what the index stores per posting."""
+    return tokenize(docs, id_col, text_col).groupBy("doc_id", "tok").agg(
+        F.count(F.lit(1)).alias("tf")
+    )
+
+
 def bm25_stage(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> dict[str, DataFrame]:
     """Derive the three index relations live (no persistence):
     ``postings`` (tok, doc_id, tf, df), ``doclen`` (doc_id, dl),
-    ``stats`` (n_docs, avgdl). The returned frames share one
+    ``stats`` (n_docs, sum_dl, avgdl). The returned frames share one
     tokenize+tf subtree — callers that consume several of them should
     persist that subtree (the live query does)."""
     toks = tokenize(docs, id_col, text_col)
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     doclen = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = doclen.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
     return {
         "postings": tf.join(df_, "tok"),
         "doclen": doclen,
-        "stats": stats,
+        "stats": _corpus_stats(doclen),
     }
 
 
@@ -139,14 +149,7 @@ def build_bm25_index(
     Build is the only pass over document text; at 100 TB it runs once
     per ingest and every retrieval thereafter reads only index bytes.
     """
-    from exceldatatransform_py_spark.sources.bucketing import write_bucketed
-
-    tf = (
-        tokenize(docs, id_col, text_col)
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
+    tf = _term_freqs(docs, id_col, text_col).persist()
     write_bucketed(
         tf, f"{table_prefix}_postings", ["tok"], n_buckets,
         sort_cols=["tok"], path=f"{path}/postings",
@@ -161,13 +164,8 @@ def build_bm25_index(
         doclen, f"{table_prefix}_doclen", ["doc_id"], n_buckets,
         path=f"{path}/doclen",
     )
-    stats = doclen.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("sum_dl"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
     (
-        stats.coalesce(1).write.mode("overwrite")
+        _corpus_stats(doclen).coalesce(1).write.mode("overwrite")
         .option("path", f"{path}/stats").saveAsTable(f"{table_prefix}_stats")
     )
     tf.unpersist()
@@ -193,7 +191,7 @@ def append_to_bm25_index(
     one exact-integer division.
 
     NOT ATOMIC across the four tables (same caveat as
-    ``maintenance.compact_table``): postings/doclen append before the
+    ``maintenance.replace_table``): postings/doclen append before the
     df merge and stats rewrite, so a writer that dies mid-append can
     leave postings whose tokens are missing from the df table — the
     serve-side inner postings⋈df join then silently drops them, and a
@@ -202,59 +200,93 @@ def append_to_bm25_index(
     functions of it), or rebuild. The snapshot layer's
     ``CommitProtocol`` (sources/snapshots.py) is the documented
     upgrade path for making multi-table index commits atomic."""
-    from exceldatatransform_py_spark.sources.bucketing import write_bucketed
-    from exceldatatransform_py_spark.sources.maintenance import table_layout
-
-    tf_b = (
-        tokenize(new_docs, id_col, text_col)
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
+    tf_b = _term_freqs(new_docs, id_col, text_col).persist()
     tf_b.write.mode("append").insertInto(f"{table_prefix}_postings")
     doclen_b = tf_b.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     doclen_b.write.mode("append").insertInto(f"{table_prefix}_doclen")
 
-    df_b = tf_b.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    df_tbl = f"{table_prefix}_df"
-    lay = table_layout(spark, df_tbl)
+    df_b = tf_b.groupBy("tok").agg(F.count(F.lit(1)).alias("__bdf"))
     merged = (
-        spark.table(df_tbl)
-        .join(df_b.withColumnRenamed("df", "__bdf"), "tok", "full_outer")
-        .select(
-            "tok",
-            (
-                F.coalesce(F.col("df"), F.lit(0))
-                + F.coalesce(F.col("__bdf"), F.lit(0))
-            ).alias("df"),
-        )
-        .localCheckpoint(eager=True)  # must not read what it replaces
+        spark.table(f"{table_prefix}_df")
+        .join(df_b, "tok", "full_outer")
+        .select("tok", (
+            F.coalesce("df", F.lit(0)) + F.coalesce("__bdf", F.lit(0))
+        ).alias("df"))
     )
-    write_bucketed(
-        merged, df_tbl, lay["bucket_cols"], lay["n_buckets"],
-        sort_cols=lay["sort_cols"] or None, path=lay["location"],
-        mode="overwrite",
-    )
-
-    # one-row stats: exact integer increments, control-plane sized
-    old = spark.table(f"{table_prefix}_stats").first()
-    batch = doclen_b.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    ).first()
-    n_docs = int(old["n_docs"]) + int(batch["n"] or 0)
-    sum_dl = int(old["sum_dl"]) + int(batch["s"] or 0)
-    stats_lay = table_layout(spark, f"{table_prefix}_stats")
-    (
-        spark.createDataFrame(
-            [(n_docs, sum_dl, sum_dl / n_docs)],
-            "n_docs bigint, sum_dl bigint, avgdl double",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("path", stats_lay["location"])
-        .saveAsTable(f"{table_prefix}_stats")
+    # one-row stats: exact integer increments of the stored totals
+    _replace_bm25_aggregates(
+        spark, table_prefix, merged,
+        _corpus_stats(doclen_b, stored=spark.table(f"{table_prefix}_stats")),
     )
     tf_b.unpersist()
+
+
+def _corpus_stats(
+    doclen: DataFrame, stored: DataFrame | None = None
+) -> DataFrame:
+    """The one-row stats (n_docs, sum_dl, avgdl) over the (doc_id, dl)
+    rows of ``doclen``, on top of a ``stored`` stats row when given —
+    exact integer totals, avgdl one division."""
+    parts = doclen.select(
+        F.lit(1).cast("bigint").alias("n"), F.col("dl").cast("bigint").alias("s")
+    )
+    if stored is not None:
+        parts = parts.unionByName(stored.select(
+            F.col("n_docs").alias("n"), F.col("sum_dl").alias("s")
+        ))
+    n, s = F.coalesce(F.sum("n"), F.lit(0)), F.sum("s")
+    return parts.agg(
+        n.alias("n_docs"), s.alias("sum_dl"),
+        (s.cast("double") / n).alias("avgdl"),
+    )
+
+
+def _replace_bm25_aggregates(
+    spark: SparkSession, table_prefix: str, df_rows: DataFrame,
+    stats_rows: DataFrame,
+) -> dict:
+    """Overwrite ``<prefix>_df`` and ``<prefix>_stats`` (the new rows
+    may read the old tables) — the df/stats write that append and
+    purge share. Returns the df table's file counts."""
+    out = replace_table(spark, f"{table_prefix}_df", df_rows)
+    replace_table(spark, f"{table_prefix}_stats", stats_rows)
+    return out
+
+
+def _record_bm25_deletes(
+    spark: SparkSession, table_prefix: str, new_ids: DataFrame
+) -> None:
+    """The index's delete hook: per-token df removals for a NEW
+    tombstone batch, computed ONCE from the postings index and
+    appended to ``<prefix>_deldf`` (vocab-sized at most). Serves
+    subtract it from the stored df; doc-length corrections come from
+    ``doclen`` ⋈ tombstones at serve time (co-located on doc_id)."""
+    dfrm = (
+        spark.table(f"{table_prefix}_postings")
+        .join(
+            F.broadcast(new_ids.withColumnRenamed("id", "doc_id")),
+            "doc_id",
+        )
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("dfrm"))
+        .localCheckpoint(eager=True)
+    )
+    _append_index_table(spark, table_prefix, "deldf", dfrm, "postings")
+
+
+def _purge_bm25_aggregates(spark: SparkSession, table_prefix: str) -> dict:
+    """The index's purge hook: recompute df and stats as pure functions
+    of the PURGED postings / doclen tables — exact integers, so serve
+    scores land bit-equal to the logically-corrected pre-purge serve —
+    then truncate the delete corrections they now include."""
+    df_stats = _replace_bm25_aggregates(
+        spark, table_prefix,
+        spark.table(f"{table_prefix}_postings")
+        .groupBy("tok").agg(F.count(F.lit(1)).alias("df")),
+        _corpus_stats(spark.table(f"{table_prefix}_doclen")),
+    )
+    _truncate_index_table(spark, f"{table_prefix}_deldf")
+    return {"df": df_stats}
 
 
 def bm25_topk_from_index(
@@ -276,10 +308,6 @@ def bm25_topk_from_index(
     surviving doc lengths — all exact integers, so the serve is
     bit-identical before and after ``compact_index`` purges the
     tombstones physically."""
-    from exceldatatransform_py_spark.sources.maintenance import (
-        index_tombstones,
-    )
-
     postings_t = spark.table(f"{table_prefix}_postings")
     df_t = spark.table(f"{table_prefix}_df")
     doclen_t = spark.table(f"{table_prefix}_doclen")
@@ -306,13 +334,7 @@ def bm25_topk_from_index(
                 )
                 .filter(F.col("df") > 0)
             )
-        stats_t = doclen_t.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").cast("bigint").alias("sum_dl"),
-            (
-                F.sum("dl").cast("double") / F.count(F.lit(1))
-            ).alias("avgdl"),
-        )
+        stats_t = _corpus_stats(doclen_t)
     return bm25_topk(
         query_terms,
         postings_t.join(df_t, "tok"),

@@ -1,16 +1,20 @@
-"""OPTIMIZE for index tables: compact append-accumulated small files.
+"""Index-table maintenance: OPTIMIZE, tombstone deletes and purges.
 
 Every streaming-ingest loop in this engine (LSH / IVF / IVF-SQ8 /
 MinHash / SimHash / BM25 appends) adds one file per partition or
 bucket per batch — correct, but a year of batches serves from
 thousands of tiny files: scan planning, footer reads, and task
 scheduling all degrade with file count long before data size matters.
-``compact_table`` is the maintenance commit that folds them back to
-one file per partition/bucket WITHOUT changing a single row or the
-table's layout contract:
+``compact_index`` folds them back to one file per partition/bucket
+WITHOUT changing a single row, and purges the tombstones that
+``delete_from_index`` recorded. ``INDEX_FAMILIES`` declares every
+index kind once (tables, id columns, hooks, CLI entry points).
+
+Every overwrite of an existing index table goes through
+``replace_table``:
 
 * the layout (partition columns, bucket spec + sort columns,
-  location) is INTROSPECTED from the catalog, so compaction cannot
+  location) is INTROSPECTED from the catalog, so a rewrite cannot
   drift from what the index's serve path planned against — bucketed
   tables are rewritten through the same ``write_bucketed`` used at
   build time (one file per bucket, ``sortBy`` order re-established,
@@ -35,8 +39,14 @@ corpus — and runs offline like Delta's OPTIMIZE.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from dataclasses import dataclass, replace
+from importlib import import_module
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from exceldatatransform_py_spark.sources.bucketing import write_bucketed
 
 
 def table_layout(spark: SparkSession, table: str) -> dict:
@@ -65,12 +75,48 @@ def table_layout(spark: SparkSession, table: str) -> dict:
     }
 
 
-def _count_data_files(location: str) -> int:
+def _count_data_files(location: str | None) -> int:
+    if not location:
+        return -1
     path = location.removeprefix("file:")
     n = 0
     for _, _, files in os.walk(path):
         n += sum(1 for f in files if f.endswith(".parquet"))
     return n
+
+
+def replace_table(spark: SparkSession, table: str, rows) -> dict:
+    """Overwrite ``table`` with ``rows`` (which may read ``table``)
+    in its introspected layout: one file per bucket, per partition
+    value, or in all (see module docstring).
+    Returns ``{"files_before": int, "files_after": int}``."""
+    lay = table_layout(spark, table)
+    before = _count_data_files(lay["location"])
+    # eager snapshot: the rewrite must not read the files it replaces
+    rows = rows.localCheckpoint(eager=True)
+    if lay["bucket_cols"]:
+        write_bucketed(
+            rows, table, lay["bucket_cols"], lay["n_buckets"],
+            sort_cols=lay["sort_cols"] or None, path=lay["location"],
+            mode="overwrite",
+        )
+    else:
+        pcols = lay["partition_cols"]
+        # one task, hence one file, per partition value (or in all)
+        out = (
+            rows.repartition(*[rows[c] for c in pcols])
+            if pcols else rows.coalesce(1)
+        )
+        (
+            out.write.mode("overwrite")
+            .partitionBy(*pcols)
+            .option("path", lay["location"])
+            .saveAsTable(table)
+        )
+    rows.unpersist()
+    spark.catalog.refreshTable(table)  # ``rows`` may be another session's
+    return {"files_before": before,
+            "files_after": _count_data_files(lay["location"])}
 
 
 def compact_table(
@@ -82,104 +128,37 @@ def compact_table(
     matching the ids are PURGED during the rewrite (the tombstone
     materialization step of ``purge_index_deletes``).
     Returns ``{"files_before": int, "files_after": int}``."""
-    from pyspark.sql import functions as F
-
-    from exceldatatransform_py_spark.sources.bucketing import write_bucketed
-
-    lay = table_layout(spark, table)
-    before = _count_data_files(lay["location"]) if lay["location"] else -1
     src = spark.table(table)
     if minus is not None:
         ids_df, idc = minus
         src = src.join(F.broadcast(ids_df.select(idc)), idc, "left_anti")
-    # eager snapshot: the rewrite must not read the files it replaces
-    rows = src.localCheckpoint(eager=True)
-    if lay["bucket_cols"]:
-        write_bucketed(
-            rows,
-            table,
-            lay["bucket_cols"],
-            lay["n_buckets"],
-            sort_cols=lay["sort_cols"] or None,
-            path=lay["location"],
-            mode="overwrite",
-        )
-    elif lay["partition_cols"]:
-        (
-            rows.repartition(*[rows[c] for c in lay["partition_cols"]])
-            .write.mode("overwrite")
-            .partitionBy(*lay["partition_cols"])
-            .option("path", lay["location"])
-            .saveAsTable(table)
-        )
-    else:
-        (
-            rows.coalesce(1)
-            .write.mode("overwrite")
-            .option("path", lay["location"])
-            .saveAsTable(table)
-        )
-    rows.unpersist()
-    after = _count_data_files(lay["location"]) if lay["location"] else -1
-    return {"files_before": before, "files_after": after}
+    return replace_table(spark, table, src)
 
 
-#: data-bearing tables of each index family, as <prefix>_<suffix>;
-#: control-plane one-row tables (planes/centroids/codebook/stats) are
-#: deliberately left alone — they never accumulate append files.
-INDEX_FAMILY_TABLES = {
-    "lsh": ["buckets"],
-    "ivf": ["cells"],
-    "ivf_sq8": ["cells"],
-    "ivf_pq": ["cells"],
-    "dedup": ["bands", "shingles"],
-    "simhash": ["simbands"],
-    "phash": ["simbands"],  # image fingerprints share the banded layout
-    "audio": ["simbands"],  # ... as do audio energy-delta fingerprints
-    "video": ["simbands"],  # ... and keyframe video fingerprints
-    "bm25": ["postings", "df", "doclen"],
-}
+def _family(kind: str) -> "IndexFamily":
+    """The registered spec of index ``kind`` (``INDEX_FAMILIES``)."""
+    if kind not in INDEX_FAMILIES:
+        raise ValueError(
+            f"unknown index kind {kind!r}; one of {sorted(INDEX_FAMILIES)}"
+        )
+    return INDEX_FAMILIES[kind]
 
 
 def compact_index(
     spark: SparkSession, table_prefix: str, kind: str
 ) -> dict:
-    """OPTIMIZE an index family's data tables (see
-    ``INDEX_FAMILY_TABLES``); returns per-table before/after file
-    counts. Serve results are byte-identical afterwards — compaction
-    changes layout economics, never content: tombstoned ids recorded
-    by ``delete_from_index`` are PURGED physically here, but probes
-    were already subtracting them logically."""
-    if kind not in INDEX_FAMILY_TABLES:
-        raise ValueError(
-            f"unknown index kind {kind!r}; one of "
-            f"{sorted(INDEX_FAMILY_TABLES)}"
-        )
-    purged = purge_index_deletes(spark, table_prefix, kind)
-    if purged:
-        return purged
-    return {
+    """OPTIMIZE an index family's data tables (see ``INDEX_FAMILIES``);
+    returns per-table before/after file counts. Serve results are
+    byte-identical afterwards — compaction changes layout economics,
+    never content: tombstoned ids recorded by ``delete_from_index``
+    are PURGED physically here, but probes were already subtracting
+    them logically."""
+    family = _family(kind)
+    return purge_index_deletes(spark, table_prefix, kind) or {
         suffix: compact_table(spark, f"{table_prefix}_{suffix}")
-        for suffix in INDEX_FAMILY_TABLES[kind]
+        for suffix in (*family.tables, *family.aggregates)
     }
 
-
-#: stored id column of each data-bearing table, for tombstone
-#: anti-joins and physical purges. ``None`` = introspect: the banded
-#: fingerprint table keeps the caller's id column name, which is the
-#: only column outside the fixed (simhash, band, bv) layout.
-INDEX_FAMILY_ID_COLS = {
-    "lsh": {"buckets": "neighbor_id"},
-    "ivf": {"cells": "neighbor_id"},
-    "ivf_sq8": {"cells": "neighbor_id"},
-    "ivf_pq": {"cells": "neighbor_id"},
-    "dedup": {"bands": "doc", "shingles": "doc"},
-    "simhash": {"simbands": None},
-    "phash": {"simbands": None},
-    "audio": {"simbands": None},
-    "video": {"simbands": None},
-    "bm25": {"postings": "doc_id", "doclen": "doc_id"},
-}
 
 _SIMBAND_LAYOUT_COLS = {"simhash", "band", "bv"}
 
@@ -210,6 +189,24 @@ def index_tombstones(spark: SparkSession, table_prefix: str):
     return spark.table(t)
 
 
+def _append_index_table(
+    spark: SparkSession, table_prefix: str, suffix: str, rows, beside: str
+) -> None:
+    """Append ``rows`` to ``<prefix>_<suffix>``, or create it as a
+    single-file external table next to the ``<prefix>_<beside>`` data,
+    so the whole index stays one relocatable directory."""
+    table = f"{table_prefix}_{suffix}"
+    if spark.catalog.tableExists(table):
+        rows.coalesce(1).write.mode("append").insertInto(table)
+        return
+    lay = table_layout(spark, f"{table_prefix}_{beside}")
+    root = os.path.dirname(lay["location"].removeprefix("file:"))
+    (
+        rows.coalesce(1).write.mode("overwrite")
+        .option("path", os.path.join(root, suffix)).saveAsTable(table)
+    )
+
+
 def delete_from_index(
     spark: SparkSession,
     table_prefix: str,
@@ -227,165 +224,57 @@ def delete_from_index(
     moment the delete commits, without a rebuild.
 
     ``ids`` is any DataFrame carrying ``id_col``; duplicates and
-    already-deleted ids collapse. For ``bm25`` the per-token df
-    removals and the deleted docs' length stats are computed ONCE here
-    (one scan of the postings index — index bytes, not corpus bytes)
-    into ``<prefix>_deldf``, so serves can correct df/avgdl without
-    re-scanning. Returns the number of NEW tombstones recorded."""
-    if kind not in INDEX_FAMILY_TABLES:
-        raise ValueError(
-            f"unknown index kind {kind!r}; one of "
-            f"{sorted(INDEX_FAMILY_TABLES)}"
-        )
-    from pyspark.sql import functions as F
-
-    new = ids.select(F.col(id_col).alias("id")).dropDuplicates()
-    t = f"{table_prefix}_deleted"
-    existing = index_tombstones(spark, table_prefix)
-    if existing is not None:
-        new = new.join(existing, "id", "left_anti")
-    new = new.localCheckpoint(eager=True)  # pin before any overwrite
+    already-deleted ids collapse, and the family's ``on_delete`` hook
+    sees the new batch (BM25 records its df corrections). Returns the
+    number of NEW tombstones recorded."""
+    family = _family(kind)
+    new = minus_tombstones(
+        spark, table_prefix,
+        ids.select(F.col(id_col).alias("id")).dropDuplicates(), "id",
+    ).localCheckpoint(eager=True)  # pin before any overwrite
     n_new = new.count()
     if not n_new:
         return 0
-    if existing is None:
-        # external table sited next to the family's data tables, so
-        # the whole index stays one relocatable directory
-        first_suffix = INDEX_FAMILY_TABLES[kind][0]
-        lay = table_layout(spark, f"{table_prefix}_{first_suffix}")
-        root = os.path.dirname(lay["location"].removeprefix("file:"))
-        (
-            new.coalesce(1).write.mode("overwrite")
-            .option("path", os.path.join(root, "deleted"))
-            .saveAsTable(t)
-        )
-    else:
-        new.coalesce(1).write.mode("append").insertInto(t)
-
-    if kind == "bm25":
-        _record_bm25_delete_corrections(spark, table_prefix, new)
-    return n_new
-
-
-def _record_bm25_delete_corrections(
-    spark: SparkSession, table_prefix: str, new_ids
-) -> None:
-    """Per-token df removals for a NEW tombstone batch, appended to
-    ``<prefix>_deldf`` (vocab-sized at most). Serves subtract it from
-    the stored df; doc-length corrections come straight from
-    ``doclen`` ⋈ tombstones at serve time (doclen is bucketed by
-    doc_id, the join is co-located)."""
-    from pyspark.sql import functions as F
-
-    postings = spark.table(f"{table_prefix}_postings")
-    dfrm = (
-        postings.join(
-            F.broadcast(new_ids.withColumnRenamed("id", "doc_id")),
-            "doc_id",
-        )
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("dfrm"))
-        .localCheckpoint(eager=True)
+    _append_index_table(
+        spark, table_prefix, "deleted", new, next(iter(family.tables))
     )
-    t = f"{table_prefix}_deldf"
-    if spark.catalog.tableExists(t):
-        dfrm.write.mode("append").insertInto(t)
-    else:
-        lay = table_layout(spark, f"{table_prefix}_postings")
-        root = os.path.dirname(lay["location"].removeprefix("file:"))
-        (
-            dfrm.coalesce(1).write.mode("overwrite")
-            .option("path", os.path.join(root, "deldf"))
-            .saveAsTable(t)
-        )
+    if family.on_delete is not None:
+        family.entry("on_delete")(spark, table_prefix, new)
+    return n_new
 
 
 def purge_index_deletes(
     spark: SparkSession, table_prefix: str, kind: str
 ) -> dict:
-    """Physically remove tombstoned rows from every data table of the
-    family (rewrite preserving the introspected layout — the purge
-    half of ``compact_index``), then truncate the tombstone (and, for
-    bm25, rewrite df/stats from the purged tables and truncate the
-    correction table). Serve results are IDENTICAL before and after:
-    probes already subtracted the tombstones logically."""
-    from pyspark.sql import functions as F
-
+    """Physically remove tombstoned rows from every id-bearing table
+    of the family (rewrite preserving the introspected layout — the
+    purge half of ``compact_index``), run the family's ``on_purge``
+    hook (BM25 rebuilds df/stats from the purged tables and truncates
+    its correction table), then truncate the tombstones. Serve results
+    are IDENTICAL before and after: probes already subtracted the
+    tombstones logically."""
+    family = _family(kind)
     tomb = index_tombstones(spark, table_prefix)
     if tomb is None:
         return {}
     tomb = tomb.localCheckpoint(eager=True)  # survives the truncation
     stats = {}
-    for suffix in INDEX_FAMILY_TABLES[kind]:
+    for suffix, declared in family.tables.items():
         table = f"{table_prefix}_{suffix}"
-        if suffix not in INDEX_FAMILY_ID_COLS[kind]:
-            # aggregate tables with no per-doc rows (bm25's df) are
-            # rewritten from the purged tables below, not anti-joined
-            stats[suffix] = compact_table(spark, table)
-            continue
-        idc = _table_id_col(
-            spark, table, INDEX_FAMILY_ID_COLS[kind][suffix]
-        )
+        idc = _table_id_col(spark, table, declared)
         stats[suffix] = compact_table(
             spark, table,
             minus=(tomb.withColumnRenamed("id", idc), idc),
         )
-    if kind == "bm25":
-        _rewrite_bm25_aggregates(spark, table_prefix)
-        _truncate_index_table(spark, f"{table_prefix}_deldf")
+    if family.on_purge is not None:
+        stats.update(family.entry("on_purge")(spark, table_prefix))
     _truncate_index_table(spark, f"{table_prefix}_deleted")
     return stats
 
 
 def _truncate_index_table(spark: SparkSession, table: str) -> None:
-    if not spark.catalog.tableExists(table):
-        return
-    lay = table_layout(spark, table)
-    empty = spark.table(table).filter("1 = 0").localCheckpoint(eager=True)
-    (
-        empty.coalesce(1).write.mode("overwrite")
-        .option("path", lay["location"]).saveAsTable(table)
-    )
-
-
-def _rewrite_bm25_aggregates(spark: SparkSession, table_prefix: str) -> None:
-    """Recompute df and stats as pure functions of the PURGED postings
-    / doclen tables — exact integers, so serve scores land bit-equal
-    to the logically-corrected pre-purge serve."""
-    from pyspark.sql import functions as F
-
-    df_tbl = f"{table_prefix}_df"
-    lay = table_layout(spark, df_tbl)
-    from exceldatatransform_py_spark.sources.bucketing import write_bucketed
-
-    merged = (
-        spark.table(f"{table_prefix}_postings")
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .localCheckpoint(eager=True)
-    )
-    write_bucketed(
-        merged, df_tbl, lay["bucket_cols"], lay["n_buckets"],
-        sort_cols=lay["sort_cols"] or None, path=lay["location"],
-        mode="overwrite",
-    )
-    doclen = spark.table(f"{table_prefix}_doclen")
-    agg = doclen.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("dl").cast("bigint").alias("s"),
-    ).first()
-    n_docs, sum_dl = int(agg["n"] or 0), int(agg["s"] or 0)
-    stats_lay = table_layout(spark, f"{table_prefix}_stats")
-    (
-        spark.createDataFrame(
-            [(n_docs, sum_dl, (sum_dl / n_docs) if n_docs else 0.0)],
-            "n_docs bigint, sum_dl bigint, avgdl double",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("path", stats_lay["location"])
-        .saveAsTable(f"{table_prefix}_stats")
-    )
+    if spark.catalog.tableExists(table):
+        replace_table(spark, table, spark.table(table).filter("1 = 0"))
 
 
 def minus_tombstones(
@@ -398,9 +287,134 @@ def minus_tombstones(
     tomb = index_tombstones(spark, table_prefix)
     if tomb is None:
         return df
-    from pyspark.sql import functions as F
-
     return df.join(
         F.broadcast(tomb.withColumnRenamed("id", id_col)),
         id_col, "left_anti",
     )
+
+
+@dataclass(frozen=True)
+class IndexFamily:
+    """One persisted index kind.
+
+    ``tables``: each per-row data table suffix → its stored id column
+    (``None`` = introspect: the banded fingerprint table keeps the
+    caller's id column). ``aggregates``: data tables without per-row
+    ids (BM25's df), rebuilt by ``on_purge(spark, prefix)`` instead of
+    anti-joined. ``on_delete(spark, prefix, new_ids)`` sees each new
+    tombstone batch. One-row control tables (planes, centroids,
+    codebook, stats) never accumulate append files and are absent.
+
+    The hooks, ``build``/``append``/``probe`` and a media kind's
+    ``featurize`` are ``"module:function"`` refs under ``operators``,
+    resolved on use since those modules import this one. What the
+    entry points take follows ``input``: ``docs``, ``media`` (payloads
+    are fingerprinted into ``fp_col``, with the ``featurize_opts`` CLI
+    options), ``vectors`` (``centroids``: the build takes trained
+    centroids) or ``terms`` (documents to build and append, query
+    terms to probe)."""
+
+    tables: dict[str, str | None]
+    input: str
+    build: str
+    append: str
+    probe: str
+    aggregates: tuple[str, ...] = ()
+    on_delete: str | None = None
+    on_purge: str | None = None
+    centroids: bool = False
+    featurize: str | None = None
+    fp_col: str | None = None
+    featurize_opts: tuple[str, ...] = ()
+
+    @property
+    def ranked(self) -> bool:
+        """Top-k kinds: probes take ``k``, appends take the session."""
+        return self.input in ("vectors", "terms")
+
+    def entry(self, name: str) -> Callable:
+        """The operator function behind entry point ``name``."""
+        module, fn = getattr(self, name).split(":")
+        return getattr(
+            import_module(f"exceldatatransform_py_spark.operators.{module}"),
+            fn,
+        )
+
+    def run(self, action: str, spark: SparkSession, table_prefix: str,
+            df, **opts):
+        """Call entry point ``action`` (build / append / probe) on
+        ``df`` with keyword ``opts``; returns what it returns."""
+        fn = self.entry(action)
+        if action == "build":
+            return fn(df, table_prefix=table_prefix, **opts)
+        if action == "append":
+            lead = (spark,) if self.ranked else ()
+            return fn(*lead, df, table_prefix, **opts)
+        return fn(spark, table_prefix, df, **opts)
+
+
+def _media(featurize: str, fp_col: str, *opts: str) -> IndexFamily:
+    """A media kind: its fingerprints share SimHash's banded table."""
+    return IndexFamily(
+        {"simbands": None}, "media",
+        "dedup:build_fingerprint_index",
+        "dedup:append_to_fingerprint_index",
+        "dedup:incremental_fingerprint_near_dup",
+        featurize=f"multimodal:{featurize}", fp_col=fp_col,
+        featurize_opts=opts,
+    )
+
+
+_CELLS = {"cells": "neighbor_id"}  # shared by IVF, IVF-SQ8 and IVF-PQ
+_DEDUP = IndexFamily(
+    {"bands": "doc", "shingles": "doc"}, "docs",
+    "dedup:build_dedup_index", "dedup:append_to_dedup_index",
+    "dedup:incremental_near_dup",
+)
+
+#: every index kind, exactly once
+INDEX_FAMILIES: dict[str, IndexFamily] = {
+    "dedup": _DEDUP,
+    # a probe-only alias: novelty scores against the dedup index
+    "novelty": replace(_DEDUP, probe="dedup:incremental_novelty"),
+    "simhash": IndexFamily(
+        {"simbands": None}, "docs",
+        "dedup:build_simhash_index", "dedup:append_to_simhash_index",
+        "dedup:incremental_simhash_near_dup",
+    ),
+    "phash": _media("image_phash", "phash", "image_col"),
+    "audio": _media(
+        "audio_fingerprint", "afp", "audio_col", "window_samples"
+    ),
+    "video": _media("video_fingerprint", "vfp", "video_col"),
+    "ivf": IndexFamily(
+        _CELLS, "vectors",
+        "similarity:build_ivf_index", "similarity:append_to_ivf_index",
+        "similarity:ivf_topk_from_index", centroids=True,
+    ),
+    "ivf_sq8": IndexFamily(
+        _CELLS, "vectors",
+        "similarity:build_ivf_sq8_index",
+        "similarity:append_to_ivf_sq8_index",
+        "similarity:ivf_sq8_topk_from_index", centroids=True,
+    ),
+    "ivf_pq": IndexFamily(
+        _CELLS, "vectors",
+        "similarity:build_ivf_pq_index",
+        "similarity:append_to_ivf_pq_index",
+        "similarity:ivf_pq_topk_from_index", centroids=True,
+    ),
+    "lsh": IndexFamily(
+        {"buckets": "neighbor_id"}, "vectors",
+        "similarity:build_lsh_index", "similarity:append_to_lsh_index",
+        "similarity:lsh_topk_from_index",
+    ),
+    "bm25": IndexFamily(
+        {"postings": "doc_id", "doclen": "doc_id"}, "terms",
+        "retrieval:build_bm25_index", "retrieval:append_to_bm25_index",
+        "retrieval:bm25_topk_from_index",
+        aggregates=("df",),
+        on_delete="retrieval:_record_bm25_deletes",
+        on_purge="retrieval:_purge_bm25_aggregates",
+    ),
+}

@@ -99,8 +99,8 @@ def _manifests(table: str) -> list[dict]:
 
 
 def latest_version(table: str) -> int | None:
-    ms = _manifests(table)
-    return ms[-1]["version"] if ms else None
+    m = _latest_manifest(table)
+    return None if m is None else m["version"]
 
 
 def _latest_manifest(table: str) -> dict | None:
@@ -289,12 +289,12 @@ def _bloom_may_contain(hexmap: str, pairs: list[tuple]) -> bool:
     )
 
 
-def _bloom_probe_pairs(
-    keys: DataFrame, col: str, cap: int = _BLOOM_PROBE_CAP
-) -> list[tuple] | None:
+def _bloom_probe_pairs(keys: DataFrame, col: str) -> list[tuple] | None:
     """The distinct non-NULL probe keys' bloom bit tuples, or None
-    when the key set exceeds ``cap`` (bulk merge — bloom consultation
-    would cost more than it saves; range pruning still applies)."""
+    when the key set exceeds ``_BLOOM_PROBE_CAP`` (bulk merge — bloom
+    consultation would cost more than it saves; range pruning still
+    applies)."""
+    cap = _BLOOM_PROBE_CAP
     rows = (
         keys.filter(F.col(col).isNotNull())
         .select(
@@ -650,15 +650,6 @@ def _validate_constraints(df: DataFrame, constraints: dict) -> None:
             raise SnapshotConstraintError(name, cond, int(bad))
 
 
-def _parent_constraints(table: str, parent: int | None) -> dict:
-    if parent is None:
-        return {}
-    for m in _manifests(table):
-        if m["version"] == parent:
-            return m.get("constraints", {})
-    return {}
-
-
 def last_committed_txn(table: str, app_id: str) -> int | None:
     """Highest ``batch_id`` any version of ``table`` recorded for
     writer ``app_id`` (manifest-only — the idempotence ledger for
@@ -701,23 +692,24 @@ def _commit(
     import time
 
     v = 0 if parent is None else parent + 1
+    # the parent's manifest alone (one file, not the history) carries
+    # what this commit inherits
+    parent_manifest = None
+    if parent is not None and os.path.exists(_version_path(table, parent)):
+        with open(_version_path(table, parent)) as f:
+            parent_manifest = json.load(f)
     # CHECK constraints persist across commits (Delta's ADD CONSTRAINT
     # contract): None inherits the parent's; a dict replaces them
     # ({} drops all). Validation runs BEFORE staging, so a rejected
     # commit leaves no trace.
     effective = (
-        _parent_constraints(table, parent)
+        (parent_manifest or {}).get("constraints", {})
         if constraints is None
         else dict(constraints)
     )
     _validate_constraints(df, effective)
     # stable field IDs (rename-safe schema evolution): inherited by
     # name from the parent, fresh 1..n on a new table
-    parent_manifest = None
-    if parent is not None:
-        parent_manifest = next(
-            (m for m in _manifests(table) if m["version"] == parent), None
-        )
     floor = _last_field_id(table, parent_manifest)
     df = _attach_field_ids(df, parent_manifest, floor=floor)
     data_dir = _active_protocol.stage_data_dir(table, df, v)

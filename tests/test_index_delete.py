@@ -5,19 +5,23 @@ stop returning the dead ids IMMEDIATELY (DV-style logical delete), and
 IDENTICAL before and after the purge — the retrieval layer must not
 resurrect what the storage layer deleted.
 
-The strongest check in each cycle is equality against an index REBUILT
-from scratch over the corpus minus the victims: the tombstoned index
-must serve exactly what a never-indexed-the-victims index serves
-(for BM25 that includes the df/avgdl corrections, bit-exact)."""
+One lifecycle — build → append → delete → probe → compact — runs for
+every family through the ``INDEX_FAMILIES`` entry points. Its
+strongest check is equality against an index that never saw the
+victims: the tombstoned index must serve exactly what that index
+serves (for BM25 that includes the df/avgdl corrections, bit-exact).
+The banded fingerprint family is exercised through SimHash text;
+pHash/audio/video share the exact same table layout and probe."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
+from exceldatatransform_py_spark.operators.retrieval import tokenize
 from exceldatatransform_py_spark.sources.maintenance import (
+    INDEX_FAMILIES,
     compact_index,
     delete_from_index,
     index_tombstones,
@@ -25,6 +29,22 @@ from exceldatatransform_py_spark.sources.maintenance import (
 from exceldatatransform_py_spark.sources.readers import read_table
 
 SF = "/root/testdata/sf0.001"
+
+#: probe options per kind: exhaustive SimHash banding, one-bit LSH
+#: probing, two IVF cells
+PROBE_OPTS = {
+    "dedup": {},
+    "simhash": {"max_band_docs": None},
+    "lsh": {"probe_hamming": 1},
+    "ivf": {"n_probe": 2},
+    "ivf_sq8": {"n_probe": 2},
+    "ivf_pq": {"n_probe": 2},
+    "bm25": {},
+}
+#: kinds whose build trains a quantizer on its input: their victims
+#: come from the appended batch, so the reference index trains on
+#: exactly the rows the tested index trained on
+TRAINED = {"ivf_sq8", "ivf_pq"}
 
 
 def _dir_bytes(path: str) -> int:
@@ -42,268 +62,132 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _drop(spark, prefix, suffixes):
-    for t in (*suffixes, "deleted", "deldf"):
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+def _inputs(spark, kind):
+    """(seed to build, batch to append, probe input, id column,
+    build options) of ``kind``'s cycle."""
+    family = INDEX_FAMILIES[kind]
+    if family.input == "vectors":
+        emb = read_table(spark, SF, "embeddings")
+        opts = {"id_col": "vec_id", "vec_col": "embedding"}
+        if family.centroids:
+            opts["centroids"] = emb.filter(F.col("vec_id") < 8).select(
+                F.col("vec_id").alias("cent_id"),
+                F.col("embedding").alias("cent_vec"),
+            )
+        return (
+            emb.filter(F.col("vec_id") % 2 == 0),
+            emb.filter(F.col("vec_id") % 2 == 1),
+            emb.filter(F.col("vec_id") < 10), "vec_id", opts,
+        )
+    docs = read_table(spark, SF, "documents")
+    if family.input == "terms":
+        q = (
+            tokenize(docs.filter(F.col("doc_id") < 10), "doc_id", "text")
+            .select(F.col("doc_id").alias("query_id"), "tok")
+            .distinct()
+        )
+        return (
+            docs.filter(F.col("doc_id") % 2 == 0),
+            docs.filter(F.col("doc_id") % 2 == 1),
+            q, "doc_id", {"n_buckets": 4},
+        )
+    return (
+        docs.filter(F.col("doc_id") % 3 == 1),
+        docs.filter(F.col("doc_id") % 3 == 2),
+        docs.filter(F.col("doc_id") % 3 == 0), "doc_id", {"n_buckets": 4},
+    )
+
+
+def _index_lifecycle(spark, tmp_path, kind):
+    family = INDEX_FAMILIES[kind]
+    seed, extra, probe_in, idc, build_opts = _inputs(spark, kind)
+    col_opts = {
+        k: v for k, v in build_opts.items() if k in ("id_col", "vec_col")
+    }
+    probe_opts = {**PROBE_OPTS[kind], **col_opts}
+    if family.ranked:
+        probe_opts["k"] = 5
+    p, pr = f"del{kind}_idx", f"del{kind}_ref"
+
+    def index(prefix, path, victims=()):
+        keep = ~F.col(idc).isin(list(victims))
+        family.run("build", spark, prefix, seed.filter(keep),
+                   path=str(tmp_path / path), **build_opts)
+        family.run("append", spark, prefix, extra.filter(keep), **col_opts)
+
+    def serve(prefix, probe_kind=kind):
+        return _rows(INDEX_FAMILIES[probe_kind].run(
+            "probe", spark, prefix, probe_in, **probe_opts
+        ))
+
+    try:
+        index(p, "a")
+        pre = serve(p)
+        assert pre, "synthetic corpus must produce matches"
+        pool = {r[1] for r in pre}
+        if kind in TRAINED:
+            pool &= {r[0] for r in extra.select(idc).collect()}
+        n_victims = 10 if family.ranked else max(1, len(pre) // 2)
+        victims = sorted(pool)[:n_victims]
+        vdf = spark.createDataFrame([(v,) for v in victims], f"{idc} long")
+        assert delete_from_index(spark, p, kind, vdf, idc) == len(victims)
+        # idempotent: re-deleting records nothing new
+        assert delete_from_index(spark, p, kind, vdf, idc) == 0
+
+        post = serve(p)
+        assert not {r[1] for r in post} & set(victims)
+        if not family.ranked:  # a match set, not a refilled top-k
+            assert post == [r for r in pre if r[1] not in set(victims)]
+        # ground truth: an index that never saw the victims
+        index(pr, "b", victims)
+        assert post == serve(pr)
+        if kind == "dedup":
+            nov_post = serve(p, "novelty")
+            assert nov_post == serve(pr, "novelty")
+
+        bytes_before = _dir_bytes(str(tmp_path / "a"))
+        compact_index(spark, p, kind)
+        assert _dir_bytes(str(tmp_path / "a")) < bytes_before
+        assert serve(p) == post
+        if kind == "dedup":
+            assert serve(p, "novelty") == nov_post
+        assert index_tombstones(spark, p).count() == 0
+        if kind == "bm25":  # the df corrections are folded in too
+            assert spark.table(f"{p}_deldf").count() == 0
+    finally:
+        for t in spark.catalog.listTables():
+            if t.name.startswith((f"{p}_", f"{pr}_")):
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
 
 def test_dedup_index_delete_cycle(spark, tmp_path):
-    """MinHash family: build → append → delete → probe returns none of
-    the victims (and equals a rebuild without them, novelty included)
-    → compact → probe identical + index bytes shrink."""
-    from exceldatatransform_py_spark.operators.dedup import (
-        append_to_dedup_index,
-        build_dedup_index,
-        incremental_near_dup,
-        incremental_novelty,
-    )
-
-    docs = read_table(spark, SF, "documents")
-    seed = docs.filter(F.col("doc_id") % 3 == 1)
-    extra = docs.filter(F.col("doc_id") % 3 == 2)
-    batch = docs.filter(F.col("doc_id") % 3 == 0)
-    p, pr = "deldd_idx", "deldd_ref"
-    try:
-        build_dedup_index(seed, p, n_buckets=4, path=str(tmp_path / "a"))
-        append_to_dedup_index(extra, p)
-        pre = _rows(incremental_near_dup(spark, p, batch))
-        assert pre, "synthetic corpus must produce near-dups"
-        victims = sorted({r[1] for r in pre})[: max(1, len(pre) // 2)]
-        vdf = spark.createDataFrame([(v,) for v in victims], "doc_id long")
-        n = delete_from_index(spark, p, "dedup", vdf, "doc_id")
-        assert n == len(victims)
-        # idempotent: re-deleting records nothing new
-        assert delete_from_index(spark, p, "dedup", vdf, "doc_id") == 0
-
-        post = _rows(incremental_near_dup(spark, p, batch))
-        assert not {r[1] for r in post} & set(victims)
-        assert post == [r for r in pre if r[1] not in set(victims)]
-        nov_post = _rows(incremental_novelty(spark, p, batch))
-
-        # ground truth: an index that never saw the victims
-        corpus_minus = docs.filter(
-            (F.col("doc_id") % 3 != 0) & ~F.col("doc_id").isin(victims)
-        )
-        build_dedup_index(
-            corpus_minus, pr, n_buckets=4, path=str(tmp_path / "b")
-        )
-        assert post == _rows(incremental_near_dup(spark, pr, batch))
-        assert nov_post == _rows(incremental_novelty(spark, pr, batch))
-
-        bytes_before = _dir_bytes(str(tmp_path / "a"))
-        compact_index(spark, p, "dedup")
-        assert _dir_bytes(str(tmp_path / "a")) < bytes_before
-        assert _rows(incremental_near_dup(spark, p, batch)) == post
-        assert _rows(incremental_novelty(spark, p, batch)) == nov_post
-        assert index_tombstones(spark, p).count() == 0
-    finally:
-        _drop(spark, p, ("bands", "shingles"))
-        _drop(spark, pr, ("bands", "shingles"))
+    """MinHash family, novelty probes included."""
+    _index_lifecycle(spark, tmp_path, "dedup")
 
 
 def test_fingerprint_index_delete_cycle(spark, tmp_path):
-    """Banded-fingerprint family (SimHash text here; pHash/audio/video
-    share the exact same table layout and probe): the full
-    delete → probe → purge cycle."""
-    from exceldatatransform_py_spark.operators.dedup import (
-        append_to_simhash_index,
-        build_simhash_index,
-        incremental_simhash_near_dup,
-    )
-
-    docs = read_table(spark, SF, "documents")
-    seed = docs.filter(F.col("doc_id") % 3 == 1)
-    extra = docs.filter(F.col("doc_id") % 3 == 2)
-    batch = docs.filter(F.col("doc_id") % 3 == 0)
-    p = "delsh_idx"
-    try:
-        build_simhash_index(seed, p, n_buckets=4, path=str(tmp_path / "a"))
-        append_to_simhash_index(extra, p)
-        pre = _rows(
-            incremental_simhash_near_dup(spark, p, batch, max_band_docs=None)
-        )
-        assert pre
-        victims = sorted({r[1] for r in pre})[: max(1, len(pre) // 2)]
-        vdf = spark.createDataFrame([(v,) for v in victims], "doc_id long")
-        delete_from_index(spark, p, "simhash", vdf, "doc_id")
-
-        post = _rows(
-            incremental_simhash_near_dup(spark, p, batch, max_band_docs=None)
-        )
-        assert not {r[1] for r in post} & set(victims)
-        assert post == [r for r in pre if r[1] not in set(victims)]
-
-        bytes_before = _dir_bytes(str(tmp_path / "a"))
-        compact_index(spark, p, "simhash")
-        assert _dir_bytes(str(tmp_path / "a")) < bytes_before
-        assert _rows(
-            incremental_simhash_near_dup(spark, p, batch, max_band_docs=None)
-        ) == post
-        assert index_tombstones(spark, p).count() == 0
-    finally:
-        _drop(spark, p, ("simbands",))
+    """Banded-fingerprint family (SimHash text)."""
+    _index_lifecycle(spark, tmp_path, "simhash")
 
 
 def test_lsh_index_delete_cycle(spark, tmp_path):
-    """LSH buckets: deleted vectors leave the top-k immediately; serve
-    equals an index rebuilt without them; purge keeps it identical."""
-    from exceldatatransform_py_spark.operators.similarity import (
-        append_to_lsh_index,
-        build_lsh_index,
-        lsh_topk_from_index,
-    )
-
-    emb = read_table(spark, SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    p, pr = "dellsh_idx", "dellsh_ref"
-
-    def serve(prefix):
-        return _rows(
-            lsh_topk_from_index(
-                spark, prefix, queries, id_col="vec_id",
-                vec_col="embedding", k=5, probe_hamming=1,
-            )
-        )
-
-    try:
-        build_lsh_index(
-            emb.filter(F.col("vec_id") % 2 == 0), p,
-            path=str(tmp_path / "a"), id_col="vec_id", vec_col="embedding",
-        )
-        append_to_lsh_index(
-            spark, emb.filter(F.col("vec_id") % 2 == 1), p,
-            id_col="vec_id", vec_col="embedding",
-        )
-        pre = serve(p)
-        victims = sorted({r[1] for r in pre})[:10]
-        vdf = spark.createDataFrame([(v,) for v in victims], "vec_id long")
-        delete_from_index(spark, p, "lsh", vdf, "vec_id")
-
-        post = serve(p)
-        assert not {r[1] for r in post} & set(victims)
-        build_lsh_index(
-            emb.filter(~F.col("vec_id").isin(victims)), pr,
-            path=str(tmp_path / "b"), id_col="vec_id", vec_col="embedding",
-        )
-        assert post == serve(pr)
-
-        bytes_before = _dir_bytes(str(tmp_path / "a"))
-        compact_index(spark, p, "lsh")
-        assert _dir_bytes(str(tmp_path / "a")) < bytes_before
-        assert serve(p) == post
-        assert index_tombstones(spark, p).count() == 0
-    finally:
-        _drop(spark, p, ("buckets", "planes"))
-        _drop(spark, pr, ("buckets", "planes"))
+    _index_lifecycle(spark, tmp_path, "lsh")
 
 
 def test_ivf_index_delete_cycle(spark, tmp_path):
-    """IVF cells (the layout IVF-SQ8/IVF-PQ share): the same cycle."""
-    from exceldatatransform_py_spark.operators.similarity import (
-        append_to_ivf_index,
-        build_ivf_index,
-        ivf_topk_from_index,
-    )
+    _index_lifecycle(spark, tmp_path, "ivf")
 
-    emb = read_table(spark, SF, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("cent_vec"),
-    )
-    queries = emb.filter(F.col("vec_id") < 10)
-    p, pr = "delivf_idx", "delivf_ref"
 
-    def serve(prefix):
-        return _rows(
-            ivf_topk_from_index(
-                spark, prefix, queries, id_col="vec_id",
-                vec_col="embedding", k=5, n_probe=2,
-            )
-        )
+def test_ivf_sq8_index_delete_cycle(spark, tmp_path):
+    _index_lifecycle(spark, tmp_path, "ivf_sq8")
 
-    try:
-        build_ivf_index(
-            emb.filter(F.col("vec_id") % 2 == 0), centroids, p,
-            path=str(tmp_path / "a"), id_col="vec_id", vec_col="embedding",
-        )
-        append_to_ivf_index(
-            spark, emb.filter(F.col("vec_id") % 2 == 1), p,
-            id_col="vec_id", vec_col="embedding",
-        )
-        pre = serve(p)
-        victims = sorted({r[1] for r in pre})[:10]
-        vdf = spark.createDataFrame([(v,) for v in victims], "vec_id long")
-        delete_from_index(spark, p, "ivf", vdf, "vec_id")
 
-        post = serve(p)
-        assert not {r[1] for r in post} & set(victims)
-        build_ivf_index(
-            emb.filter(~F.col("vec_id").isin(victims)), centroids, pr,
-            path=str(tmp_path / "b"), id_col="vec_id", vec_col="embedding",
-        )
-        assert post == serve(pr)
-
-        bytes_before = _dir_bytes(str(tmp_path / "a"))
-        compact_index(spark, p, "ivf")
-        assert _dir_bytes(str(tmp_path / "a")) < bytes_before
-        assert serve(p) == post
-        assert index_tombstones(spark, p).count() == 0
-    finally:
-        _drop(spark, p, ("cells", "centroids"))
-        _drop(spark, pr, ("cells", "centroids"))
+def test_ivf_pq_index_delete_cycle(spark, tmp_path):
+    _index_lifecycle(spark, tmp_path, "ivf_pq")
 
 
 def test_bm25_index_delete_cycle(spark, tmp_path):
-    """BM25: the hardest family — df and avgdl are corpus aggregates,
-    so a correct delete must adjust them, not just hide postings. The
-    tombstoned serve must be BIT-IDENTICAL to an index rebuilt over
-    the corpus minus the victims (the deldf corrections + doclen
-    recount guarantee it), and stay identical across the purge."""
-    from exceldatatransform_py_spark.operators.retrieval import (
-        append_to_bm25_index,
-        bm25_topk_from_index,
-        build_bm25_index,
-        tokenize,
-    )
-
-    docs = read_table(spark, SF, "documents")
-    q = (
-        tokenize(docs.filter(F.col("doc_id") < 10), "doc_id", "text")
-        .select(F.col("doc_id").alias("query_id"), "tok")
-        .distinct()
-    )
-    p, pr = "delbm_idx", "delbm_ref"
-
-    def serve(prefix):
-        return _rows(bm25_topk_from_index(spark, prefix, q, k=5))
-
-    try:
-        build_bm25_index(
-            docs.filter(F.col("doc_id") % 2 == 0), p,
-            n_buckets=4, path=str(tmp_path / "a"),
-        )
-        append_to_bm25_index(
-            spark, docs.filter(F.col("doc_id") % 2 == 1), p
-        )
-        pre = serve(p)
-        victims = sorted({r[1] for r in pre})[:10]
-        vdf = spark.createDataFrame([(v,) for v in victims], "doc_id long")
-        delete_from_index(spark, p, "bm25", vdf, "doc_id")
-
-        post = serve(p)
-        assert not {r[1] for r in post} & set(victims)
-        build_bm25_index(
-            docs.filter(~F.col("doc_id").isin(victims)), pr,
-            n_buckets=4, path=str(tmp_path / "b"),
-        )
-        assert post == serve(pr)  # df/avgdl corrections are exact
-
-        bytes_before = _dir_bytes(str(tmp_path / "a"))
-        compact_index(spark, p, "bm25")
-        assert _dir_bytes(str(tmp_path / "a")) < bytes_before
-        assert serve(p) == post
-        assert index_tombstones(spark, p).count() == 0
-        assert spark.table(f"{p}_deldf").count() == 0
-    finally:
-        _drop(spark, p, ("postings", "df", "doclen", "stats"))
-        _drop(spark, pr, ("postings", "df", "doclen", "stats"))
+    """BM25: df and avgdl are corpus aggregates, so a correct delete
+    must adjust them, not just hide postings; the deldf corrections
+    and the doclen recount make the tombstoned serve bit-identical."""
+    _index_lifecycle(spark, tmp_path, "bm25")

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from exceldatatransform_py_spark.sources.maintenance import (
     compact_index,
     compact_table,
+    delete_from_index,
     table_layout,
 )
 from exceldatatransform_py_spark.sources.readers import read_table
@@ -144,6 +145,9 @@ def test_compact_preserves_sorted_bucket_layout(spark, tmp_path):
 def test_compact_unknown_kind_raises(spark):
     with pytest.raises(ValueError, match="unknown index kind"):
         compact_index(spark, "x", "nope")
+    with pytest.raises(ValueError, match="unknown index kind"):
+        delete_from_index(spark, "x", "nope", spark.range(1), "id")
+    assert not spark.catalog.tableExists("x_deleted")
 
 
 def test_compact_plain_table_single_file(spark, tmp_path):
@@ -160,3 +164,15 @@ def test_compact_plain_table_single_file(spark, tmp_path):
         assert spark.table(t).count() == 100
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_every_index_family_reference_resolves():
+    """Each registered kind's entry points and hooks name real
+    operator functions (the CLI resolves them only when called)."""
+    from exceldatatransform_py_spark.sources.maintenance import INDEX_FAMILIES
+
+    refs = ("build", "append", "probe", "featurize", "on_delete", "on_purge")
+    for kind, family in INDEX_FAMILIES.items():
+        for ref in refs:
+            if getattr(family, ref) is not None:
+                assert callable(family.entry(ref)), (kind, ref)

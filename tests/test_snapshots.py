@@ -2164,6 +2164,29 @@ def test_txn_write_commit_idempotent(spark, table):
     assert snapshot_write(table, df, txn=("loader", 8)) == 1
 
 
+def test_write_reads_only_the_parent_manifest(spark, table):
+    """A non-txn commit on a table with history parses the parent's
+    manifest alone, never the whole history, and still inherits the
+    parent's constraints and field ids."""
+    from unittest import mock
+
+    from exceldatatransform_py_spark.sources import snapshots as snap
+
+    df = spark.range(5).select(F.col("id"), (F.col("id") * 2).alias("v"))
+    for _ in range(3):
+        snap.snapshot_write(table, df, constraints={"pos": "v >= 0"})
+    with mock.patch.object(
+        snap, "_manifests", side_effect=AssertionError("history parsed")
+    ):
+        v = snap.snapshot_write(table, df)
+        assert v == latest_version(table) == 3
+    with pytest.raises(snap.SnapshotConstraintError):
+        snap.snapshot_write(table, df.withColumn("v", F.lit(-1)))
+    ms = snap._manifests(table)
+    assert ms[3]["schema"] == ms[2]["schema"]
+    assert ms[3]["constraints"] == {"pos": "v >= 0"}
+
+
 # ---------------------------------------------------------------------------
 # Manifest bloom filters: point-lookup file skipping where min/max
 # provably cannot prune.
@@ -2282,10 +2305,13 @@ def test_bloom_bulk_merge_skips_probe_and_stays_correct(spark, table):
     ups = spark.range(100).select(
         F.col("id").alias("k"), F.lit(-1.0).alias("x")
     )
-    with mock.patch.object(snap, "_BLOOM_PROBE_CAP", 10):
+    with mock.patch.object(snap, "_BLOOM_PROBE_CAP", 10), mock.patch.object(
+        snap, "_bloom_may_contain", wraps=snap._bloom_may_contain
+    ) as probe:
         v = snap.snapshot_merge_update_pruned(
             spark, table, ups, on=["k"], update_cols=["x"]
         )
+    assert probe.call_count == 0  # the over-cap key set skipped the bloom
     got = {r.k: r.x for r in snapshot_read(spark, table, version=v).collect()}
     assert len(got) == 100 and all(x == -1.0 for x in got.values())
 
