@@ -44,9 +44,15 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from exceldatatransform_py_spark.operators import dedup as dd
+from exceldatatransform_py_spark.operators import multimodal as mm
+from exceldatatransform_py_spark.operators import retrieval as ret
+from exceldatatransform_py_spark.operators import similarity as sim
 from exceldatatransform_py_spark.plans.pipeline import (
     build_daily_ledger,
     merge_ledger_into_target,
@@ -196,12 +202,96 @@ def cmd_query(spark: SparkSession, args: argparse.Namespace) -> None:
     _deliver(QUERIES[args.name](spark, args.sf_dir), args, f"{args.name} result")
 
 
+@dataclass(frozen=True)
+class IndexCommand:
+    """The operator functions ``index build/append/probe`` call for one
+    kind, and the input they take: ``docs`` (``--id-col``,
+    ``--text-col``), ``media`` (payloads that ``featurize(df, args)``
+    turns into ``fp_col`` fingerprints, indexed like SimHash's),
+    ``vectors`` (``--id-col``, ``--vec-col``; ``centroids``: the build
+    takes the trained ``--centroids``) or ``terms`` (documents to
+    build and append, query terms to probe)."""
+
+    input: str
+    build: Callable
+    append: Callable
+    probe: Callable
+    featurize: Callable | None = None
+    fp_col: str | None = None
+    centroids: bool = False
+
+    @property
+    def ranked(self) -> bool:
+        """Top-k kinds: probes take ``k``, appends take the session."""
+        return self.input in ("vectors", "terms")
+
+    def run(self, action: str, spark: SparkSession, table_prefix: str,
+            df: DataFrame, **opts):
+        """Call ``action`` (build / append / probe) on ``df`` with
+        keyword ``opts``; returns what it returns."""
+        fn = getattr(self, action)
+        if action == "build":
+            return fn(df, table_prefix=table_prefix, **opts)
+        if action == "append":
+            lead = (spark,) if self.ranked else ()
+            return fn(*lead, df, table_prefix, **opts)
+        return fn(spark, table_prefix, df, **opts)
+
+
+def _media(featurize: Callable, fp_col: str) -> IndexCommand:
+    return IndexCommand(
+        "media", dd.build_fingerprint_index, dd.append_to_fingerprint_index,
+        dd.incremental_fingerprint_near_dup, featurize=featurize,
+        fp_col=fp_col,
+    )
+
+
+def _vectors(build: Callable, append: Callable, probe: Callable,
+             centroids: bool = True) -> IndexCommand:
+    return IndexCommand("vectors", build, append, probe, centroids=centroids)
+
+
+#: ``index`` entry points of every kind in ``INDEX_FAMILIES``
+INDEX_COMMANDS: dict[str, IndexCommand] = {
+    "dedup": IndexCommand(
+        "docs", dd.build_dedup_index, dd.append_to_dedup_index,
+        dd.incremental_near_dup,
+    ),
+    "novelty": IndexCommand(  # probes novelty against the dedup index
+        "docs", dd.build_dedup_index, dd.append_to_dedup_index,
+        dd.incremental_novelty,
+    ),
+    "simhash": IndexCommand(
+        "docs", dd.build_simhash_index, dd.append_to_simhash_index,
+        dd.incremental_simhash_near_dup,
+    ),
+    "phash": _media(lambda df, a: mm.image_phash(
+        df, id_col=a.id_col, image_col=a.image_col), "phash"),
+    "audio": _media(lambda df, a: mm.audio_fingerprint(
+        df, id_col=a.id_col, audio_col=a.audio_col,
+        window_samples=a.audio_window or None,  # 0 = whole clip
+    ), "afp"),
+    "video": _media(lambda df, a: mm.video_fingerprint(
+        df, id_col=a.id_col, video_col=a.video_col), "vfp"),
+    "ivf": _vectors(sim.build_ivf_index, sim.append_to_ivf_index,
+                    sim.ivf_topk_from_index),
+    "ivf_sq8": _vectors(sim.build_ivf_sq8_index, sim.append_to_ivf_sq8_index,
+                        sim.ivf_sq8_topk_from_index),
+    "ivf_pq": _vectors(sim.build_ivf_pq_index, sim.append_to_ivf_pq_index,
+                       sim.ivf_pq_topk_from_index),
+    "lsh": _vectors(sim.build_lsh_index, sim.append_to_lsh_index,
+                    sim.lsh_topk_from_index, centroids=False),
+    "bm25": IndexCommand(
+        "terms", ret.build_bm25_index, ret.append_to_bm25_index,
+        ret.bm25_topk_from_index,
+    ),
+}
+
+
 def cmd_index(spark: SparkSession, args: argparse.Namespace) -> None:
-    """Drive a persisted index family (``INDEX_FAMILIES``) from the
-    command line: build → probe → append, delete and compact.
-    ``probe`` delivers its result like ``query`` does (stdout or a
-    parquet/csv sink)."""
-    family = INDEX_FAMILIES[args.kind]
+    """Drive a persisted index kind from the command line: build →
+    probe → append, delete and compact. ``probe`` delivers its result
+    like ``query`` does (stdout or a parquet/csv sink)."""
     if args.action == "compact":
         # OPTIMIZE: fold streaming-append small files back to one per
         # partition/bucket and purge tombstones; serve output unchanged.
@@ -209,6 +299,7 @@ def cmd_index(spark: SparkSession, args: argparse.Namespace) -> None:
             print(f"{args.prefix}_{t}: {s['files_before']} -> "
                   f"{s['files_after']} files", file=sys.stderr)
         return
+    command = INDEX_COMMANDS[args.kind]
     # Validate up front (a clear SystemExit beats an opaque TypeError
     # out of spark.read.parquet(None)): every other action reads
     # --input; build writes under --path, and IVF builds read the
@@ -217,7 +308,7 @@ def cmd_index(spark: SparkSession, args: argparse.Namespace) -> None:
         raise SystemExit(f"index {args.action} {args.kind}: --input is required")
     if args.action == "build" and not args.path:
         raise SystemExit(f"index build {args.kind}: --path is required")
-    if args.action == "build" and family.centroids and not args.centroids:
+    if args.action == "build" and command.centroids and not args.centroids:
         raise SystemExit(f"index build {args.kind}: --centroids is required")
     df = spark.read.parquet(args.input)
     if args.action == "delete":
@@ -228,28 +319,27 @@ def cmd_index(spark: SparkSession, args: argparse.Namespace) -> None:
               file=sys.stderr)
         return
 
-    # the options each entry point takes follow the family's input
+    # the options each entry point takes follow the kind's input
     opts = {"id_col": args.id_col}
-    if family.input == "media":
-        fp_opts = {o: getattr(args, o) for o in family.featurize_opts}
-        df = family.entry("featurize")(df, id_col=args.id_col, **fp_opts)
-        opts["fp_col"] = family.fp_col
-    elif family.input == "vectors":
+    if command.input == "media":
+        df = command.featurize(df, args)
+        opts["fp_col"] = command.fp_col
+    elif command.input == "vectors":
         opts["vec_col"] = args.vec_col
     else:
         opts["text_col"] = args.text_col
     if args.action == "build":
         opts["path"] = args.path
-        if family.centroids:
+        if command.centroids:
             opts["centroids"] = spark.read.parquet(args.centroids)
-        elif family.input != "vectors":
+        elif command.input != "vectors":
             opts["n_buckets"] = args.buckets
     elif args.action == "probe":
-        if family.input == "terms":  # query terms carry no column options
+        if command.input == "terms":  # query terms carry no column options
             opts = {}
-        if family.ranked:
+        if command.ranked:
             opts["k"] = args.k
-    out = family.run(args.action, spark, args.prefix, df, **opts)
+    out = command.run(args.action, spark, args.prefix, df, **opts)
     if args.action == "probe":
         _deliver(out, args, "probe result")
 
@@ -357,11 +447,6 @@ def cmd_snapshot(spark: SparkSession, args: argparse.Namespace) -> None:
               file=sys.stderr)
 
 
-def _whole_clip_if_zero(text: str) -> int | None:
-    """``--audio-window``: leading-excerpt samples, 0 = whole clip."""
-    return int(text) or None
-
-
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(
         prog="exceldatatransform_py_spark",
@@ -424,8 +509,7 @@ def main(argv: list[str] | None = None) -> None:
                     help="BMP payload column — phash kind only")
     ix.add_argument("--audio-col", default="audio",
                     help="WAV payload column — audio kind only")
-    ix.add_argument("--audio-window", dest="window_samples",
-                    type=_whole_clip_if_zero, default=128,
+    ix.add_argument("--audio-window", type=int, default=128,
                     help="leading-excerpt samples for the audio "
                          "fingerprint (0 = whole clip)")
     ix.add_argument("--video-col", default="video",

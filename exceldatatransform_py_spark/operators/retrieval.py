@@ -226,7 +226,7 @@ def _corpus_stats(
 ) -> DataFrame:
     """The one-row stats (n_docs, sum_dl, avgdl) over the (doc_id, dl)
     rows of ``doclen``, on top of a ``stored`` stats row when given —
-    exact integer totals, avgdl one division."""
+    exact integer totals, avgdl one division (0, 0, 0.0 when empty)."""
     parts = doclen.select(
         F.lit(1).cast("bigint").alias("n"), F.col("dl").cast("bigint").alias("s")
     )
@@ -234,10 +234,11 @@ def _corpus_stats(
         parts = parts.unionByName(stored.select(
             F.col("n_docs").alias("n"), F.col("sum_dl").alias("s")
         ))
-    n, s = F.coalesce(F.sum("n"), F.lit(0)), F.sum("s")
+    n, s = (F.coalesce(F.sum(c), F.lit(0)) for c in ("n", "s"))
     return parts.agg(
         n.alias("n_docs"), s.alias("sum_dl"),
-        (s.cast("double") / n).alias("avgdl"),
+        F.when(n > 0, s.cast("double") / n)
+        .otherwise(F.lit(0.0)).alias("avgdl"),
     )
 
 

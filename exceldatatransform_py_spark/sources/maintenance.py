@@ -8,7 +8,7 @@ scheduling all degrade with file count long before data size matters.
 ``compact_index`` folds them back to one file per partition/bucket
 WITHOUT changing a single row, and purges the tombstones that
 ``delete_from_index`` recorded. ``INDEX_FAMILIES`` declares every
-index kind once (tables, id columns, hooks, CLI entry points).
+index kind once (its tables, id columns and delete/purge hooks).
 
 Every overwrite of an existing index table goes through
 ``replace_table``:
@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 from importlib import import_module
 
 from pyspark.sql import SparkSession
@@ -239,7 +239,7 @@ def delete_from_index(
         spark, table_prefix, "deleted", new, next(iter(family.tables))
     )
     if family.on_delete is not None:
-        family.entry("on_delete")(spark, table_prefix, new)
+        family.hook("on_delete")(spark, table_prefix, new)
     return n_new
 
 
@@ -267,7 +267,7 @@ def purge_index_deletes(
             minus=(tomb.withColumnRenamed("id", idc), idc),
         )
     if family.on_purge is not None:
-        stats.update(family.entry("on_purge")(spark, table_prefix))
+        stats.update(family.hook("on_purge")(spark, table_prefix))
     _truncate_index_table(spark, f"{table_prefix}_deleted")
     return stats
 
@@ -295,124 +295,46 @@ def minus_tombstones(
 
 @dataclass(frozen=True)
 class IndexFamily:
-    """One persisted index kind.
+    """What the storage layer knows of one persisted index kind.
 
     ``tables``: each per-row data table suffix → its stored id column
     (``None`` = introspect: the banded fingerprint table keeps the
     caller's id column). ``aggregates``: data tables without per-row
     ids (BM25's df), rebuilt by ``on_purge(spark, prefix)`` instead of
     anti-joined. ``on_delete(spark, prefix, new_ids)`` sees each new
-    tombstone batch. One-row control tables (planes, centroids,
-    codebook, stats) never accumulate append files and are absent.
-
-    The hooks, ``build``/``append``/``probe`` and a media kind's
-    ``featurize`` are ``"module:function"`` refs under ``operators``,
-    resolved on use since those modules import this one. What the
-    entry points take follows ``input``: ``docs``, ``media`` (payloads
-    are fingerprinted into ``fp_col``, with the ``featurize_opts`` CLI
-    options), ``vectors`` (``centroids``: the build takes trained
-    centroids) or ``terms`` (documents to build and append, query
-    terms to probe)."""
+    tombstone batch. The hooks are ``"module:function"`` refs under
+    ``operators``, imported on use since those modules import this
+    one. One-row control tables (planes, centroids, codebook, stats)
+    never accumulate append files and are absent."""
 
     tables: dict[str, str | None]
-    input: str
-    build: str
-    append: str
-    probe: str
     aggregates: tuple[str, ...] = ()
     on_delete: str | None = None
     on_purge: str | None = None
-    centroids: bool = False
-    featurize: str | None = None
-    fp_col: str | None = None
-    featurize_opts: tuple[str, ...] = ()
 
-    @property
-    def ranked(self) -> bool:
-        """Top-k kinds: probes take ``k``, appends take the session."""
-        return self.input in ("vectors", "terms")
-
-    def entry(self, name: str) -> Callable:
-        """The operator function behind entry point ``name``."""
+    def hook(self, name: str) -> Callable:
+        """The operator function behind hook ``name``."""
         module, fn = getattr(self, name).split(":")
         return getattr(
             import_module(f"exceldatatransform_py_spark.operators.{module}"),
             fn,
         )
 
-    def run(self, action: str, spark: SparkSession, table_prefix: str,
-            df, **opts):
-        """Call entry point ``action`` (build / append / probe) on
-        ``df`` with keyword ``opts``; returns what it returns."""
-        fn = self.entry(action)
-        if action == "build":
-            return fn(df, table_prefix=table_prefix, **opts)
-        if action == "append":
-            lead = (spark,) if self.ranked else ()
-            return fn(*lead, df, table_prefix, **opts)
-        return fn(spark, table_prefix, df, **opts)
 
-
-def _media(featurize: str, fp_col: str, *opts: str) -> IndexFamily:
-    """A media kind: its fingerprints share SimHash's banded table."""
-    return IndexFamily(
-        {"simbands": None}, "media",
-        "dedup:build_fingerprint_index",
-        "dedup:append_to_fingerprint_index",
-        "dedup:incremental_fingerprint_near_dup",
-        featurize=f"multimodal:{featurize}", fp_col=fp_col,
-        featurize_opts=opts,
-    )
-
-
-_CELLS = {"cells": "neighbor_id"}  # shared by IVF, IVF-SQ8 and IVF-PQ
-_DEDUP = IndexFamily(
-    {"bands": "doc", "shingles": "doc"}, "docs",
-    "dedup:build_dedup_index", "dedup:append_to_dedup_index",
-    "dedup:incremental_near_dup",
-)
-
-#: every index kind, exactly once
+#: every index kind, exactly once (the CLI's ``index`` kinds); kinds
+#: that share a table layout share a spec
 INDEX_FAMILIES: dict[str, IndexFamily] = {
-    "dedup": _DEDUP,
-    # a probe-only alias: novelty scores against the dedup index
-    "novelty": replace(_DEDUP, probe="dedup:incremental_novelty"),
-    "simhash": IndexFamily(
-        {"simbands": None}, "docs",
-        "dedup:build_simhash_index", "dedup:append_to_simhash_index",
-        "dedup:incremental_simhash_near_dup",
-    ),
-    "phash": _media("image_phash", "phash", "image_col"),
-    "audio": _media(
-        "audio_fingerprint", "afp", "audio_col", "window_samples"
-    ),
-    "video": _media("video_fingerprint", "vfp", "video_col"),
-    "ivf": IndexFamily(
-        _CELLS, "vectors",
-        "similarity:build_ivf_index", "similarity:append_to_ivf_index",
-        "similarity:ivf_topk_from_index", centroids=True,
-    ),
-    "ivf_sq8": IndexFamily(
-        _CELLS, "vectors",
-        "similarity:build_ivf_sq8_index",
-        "similarity:append_to_ivf_sq8_index",
-        "similarity:ivf_sq8_topk_from_index", centroids=True,
-    ),
-    "ivf_pq": IndexFamily(
-        _CELLS, "vectors",
-        "similarity:build_ivf_pq_index",
-        "similarity:append_to_ivf_pq_index",
-        "similarity:ivf_pq_topk_from_index", centroids=True,
-    ),
-    "lsh": IndexFamily(
-        {"buckets": "neighbor_id"}, "vectors",
-        "similarity:build_lsh_index", "similarity:append_to_lsh_index",
-        "similarity:lsh_topk_from_index",
-    ),
+    # MinHash; novelty probes score against the dedup index
+    **dict.fromkeys(("dedup", "novelty"), IndexFamily(
+        {"bands": "doc", "shingles": "doc"})),
+    # SimHash text and the media fingerprints: one banded table
+    **dict.fromkeys(("simhash", "phash", "audio", "video"), IndexFamily(
+        {"simbands": None})),
+    **dict.fromkeys(("ivf", "ivf_sq8", "ivf_pq"), IndexFamily(
+        {"cells": "neighbor_id"})),
+    "lsh": IndexFamily({"buckets": "neighbor_id"}),
     "bm25": IndexFamily(
-        {"postings": "doc_id", "doclen": "doc_id"}, "terms",
-        "retrieval:build_bm25_index", "retrieval:append_to_bm25_index",
-        "retrieval:bm25_topk_from_index",
+        {"postings": "doc_id", "doclen": "doc_id"},
         aggregates=("df",),
         on_delete="retrieval:_record_bm25_deletes",
         on_purge="retrieval:_purge_bm25_aggregates",

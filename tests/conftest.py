@@ -21,30 +21,3 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_CORRECTNESS
-
-
-@pytest.fixture(scope="session")
-def query_plans():
-    """{(sf_dir, query name): formatted plan}, recorded by
-    ``test_query_matches_oracle`` for the per-query plan checks."""
-    return {}
-
-
-def pytest_collection_modifyitems(items):
-    """Run the per-query plan checks right after the oracle tests that
-    record those plans, so the checks need no second build."""
-    plan_checks = [
-        i for i in items
-        if getattr(i, "originalname", None)
-        == "test_no_query_plans_cartesian_or_row_python"
-    ]
-    if not plan_checks:
-        return
-    moved = set(map(id, plan_checks))
-    rest = [i for i in items if id(i) not in moved]
-    at = 1 + max(
-        (k for k, i in enumerate(rest)
-         if getattr(i, "originalname", None) == "test_query_matches_oracle"),
-        default=len(rest) - 1,
-    )
-    items[:] = rest[:at] + plan_checks + rest[at:]

@@ -5,32 +5,13 @@ canonicalization."""
 
 from __future__ import annotations
 
-import contextlib
 import datetime
-import io
 import math
 import os
 
 import duckdb
 
 from exceldatatransform_py_spark.sources.readers import TABLES
-
-
-def formatted_plan(df) -> str:
-    """``df``'s formatted physical plan, as ``explain`` prints it."""
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def assert_no_cartesian_or_row_python(plan: str) -> None:
-    """Global invariants of every registered query's physical plan:
-    no CartesianProduct (unbounded pair blowup) and no BatchEvalPython
-    (row-at-a-time Python in a hot path). Arrow-batched Python
-    (mapInPandas) is allowed — that's the sanctioned slow path."""
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -171,6 +171,17 @@ def test_every_registered_query_is_documented():
     )
 
 
+
+def test_every_index_kind_has_cli_entry_points():
+    """``index`` takes the kinds of ``INDEX_FAMILIES``; each must have
+    its build / append / probe entry points."""
+    from exceldatatransform_py_spark.cli import INDEX_COMMANDS
+    from exceldatatransform_py_spark.sources.maintenance import (
+        INDEX_FAMILIES,
+    )
+
+    assert INDEX_COMMANDS.keys() == INDEX_FAMILIES.keys()
+
 def test_cli_index_build_probe_append_loop(spark, tmp_path):
     """The production dedup loop driven entirely through the CLI:
     build an index from a corpus parquet, probe a batch, append it,

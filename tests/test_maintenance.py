@@ -165,14 +165,3 @@ def test_compact_plain_table_single_file(spark, tmp_path):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
-
-def test_every_index_family_reference_resolves():
-    """Each registered kind's entry points and hooks name real
-    operator functions (the CLI resolves them only when called)."""
-    from exceldatatransform_py_spark.sources.maintenance import INDEX_FAMILIES
-
-    refs = ("build", "append", "probe", "featurize", "on_delete", "on_purge")
-    for kind, family in INDEX_FAMILIES.items():
-        for ref in refs:
-            if getattr(family, ref) is not None:
-                assert callable(family.entry(ref)), (kind, ref)
