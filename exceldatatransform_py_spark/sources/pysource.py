@@ -398,9 +398,9 @@ def register(spark) -> None:
 
 from exceldatatransform_py_spark.sources.snapshot_common import (
     LAYOUT_ONLY_KINDS as _CDF_LAYOUT_ONLY,
-    SnapshotRetentionError,
     SnapshotStreamSchemaChangedError,
     manifest_files,
+    require_retained,
 )
 
 
@@ -480,41 +480,6 @@ def _cdf_file_rows(
         )
 
 
-def _snapshot_require_retained(
-    table: str, v: int, ms: dict, rels
-) -> None:
-    """Typed retention error shared by the batch ``snapshot`` source
-    and the ``snapshot_cdf`` stream: a read that needs files vacuum
-    already dropped must not surface as a raw file-not-found. Scans
-    manifests newest-first for the oldest fully retained version to
-    name as the resume horizon."""
-    missing = next(
-        (r for r in rels
-         if not os.path.exists(os.path.join(table, r))),
-        None,
-    )
-    if missing is None:
-        return
-    horizon = None
-    for vv in sorted(ms, reverse=True):
-        m = ms[vv]
-        if "files" not in m and not os.path.isdir(
-            os.path.join(table, m["data_dir"])
-        ):
-            break
-        ok = all(
-            os.path.exists(os.path.join(table, r))
-            for r in manifest_files(table, m)
-        ) and all(
-            os.path.isdir(os.path.join(table, e["dir"]))
-            for e in m.get("dv", {}).values()
-        )
-        if not ok:
-            break
-        horizon = vv
-    raise SnapshotRetentionError(table, v, horizon, missing)
-
-
 def _snapshot_resolve_manifest(options: dict) -> tuple[str, int, dict]:
     """(table, version, manifest) for the batch ``snapshot`` source's
     options: ``path`` (required), ``version`` (time travel) or
@@ -572,18 +537,15 @@ class SnapshotBatchReader(DataSourceReader):
         }
         self.schema_json = m["schema"]
         self.dv = m.get("dv", {})
-        if "files" not in m and not os.path.isdir(
-            os.path.join(self.table, m["data_dir"])
-        ):
-            _snapshot_require_retained(
-                self.table, self.version, ms, [m["data_dir"]]
-            )
         self.files = manifest_files(self.table, m)
-        _snapshot_require_retained(
-            self.table, self.version, ms,
+        # a read that needs vacuumed files raises the typed retention
+        # error, not a raw pyarrow file-not-found
+        require_retained(
+            self.table, self.version,
             self.files + sorted(
                 {e["dir"] for r, e in self.dv.items() if r in set(self.files)}
             ),
+            ms.values(),
         )
 
     def partitions(self) -> list[InputPartition]:
@@ -727,12 +689,6 @@ class SnapshotCDFStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"version": self.from_version}
 
-    def _require_retained(self, v: int, ms: dict, rels) -> None:
-        """Typed retention error (shared with the batch source): a
-        vacuumed file under a checkpointed offset range must not
-        surface as a raw pyarrow file-not-found."""
-        _snapshot_require_retained(self.table, v, ms, rels)
-
     def _between(self, from_v: int, to_v: int):
         ms = _cdf_manifests(self.table)
         for v in range(from_v + 1, to_v + 1):
@@ -740,11 +696,6 @@ class SnapshotCDFStreamReader(SimpleDataSourceStreamReader):
             self._check_schema(v, m_cur)
             if m_cur.get("kind") in _CDF_LAYOUT_ONLY:
                 continue
-            for m in (m_prev, m_cur):
-                if "files" not in m and not os.path.isdir(
-                    os.path.join(self.table, m["data_dir"])
-                ):
-                    self._require_retained(v, ms, [m["data_dir"]])
             prev_files = set(manifest_files(self.table, m_prev))
             cur_files = set(manifest_files(self.table, m_cur))
             dv_prev = m_prev.get("dv", {})
@@ -763,8 +714,11 @@ class SnapshotCDFStreamReader(SimpleDataSourceStreamReader):
             } | {
                 dv_prev[r]["dir"] for r in removed + grown if r in dv_prev
             }
-            self._require_retained(
-                v, ms, added + removed + grown + sorted(needed_dv)
+            # a vacuumed file under a checkpointed offset range raises
+            # the typed retention error, not a raw pyarrow error
+            require_retained(
+                self.table, v, added + removed + grown + sorted(needed_dv),
+                ms.values(),
             )
             if added:
                 dvs = _cdf_dv_positions(

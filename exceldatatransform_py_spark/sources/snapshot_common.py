@@ -1,5 +1,5 @@
-"""Constants, the manifest file listing and error types shared by
-the snapshot table layer
+"""Constants, the manifest file listing, the retention check and error
+types shared by the snapshot table layer
 (``snapshots.py``) and the ``snapshot_cdf`` streaming reader
 (``pysource.py``).
 
@@ -25,27 +25,36 @@ LAYOUT_ONLY_KINDS = frozenset({"compact", "zorder"})
 SCHEMA_ONLY_KINDS = frozenset({"rename_column", "drop_column"})
 
 
-def parquet_files(table: str, data_dir: str) -> list[str]:
-    """Parquet files under ``data_dir``, relative to the table root."""
-    return sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(os.path.join(table, data_dir))
-        if f.endswith(".parquet")
-    )
-
-
 def manifest_files(table: str, manifest: dict) -> list[str]:
-    """Data files of one version, as paths relative to the table root.
-    File-level manifests list them explicitly; directory-level
-    manifests own every parquet in their data_dir, which each commit
-    records as the keys of ``rows`` — so the list survives ``vacuum``
-    removing the directory. Only legacy manifests without ``rows``
-    list the directory itself."""
-    if "files" in manifest:
-        return list(manifest["files"])
-    if "rows" in manifest:
-        return sorted(manifest["rows"])
-    return parquet_files(table, manifest["data_dir"])
+    """Data files of one version, as paths relative to the table root
+    (every commit lists them explicitly)."""
+    return list(manifest["files"])
+
+
+def require_retained(
+    table: str, version: int, rels, manifests
+) -> None:
+    """Raise ``SnapshotRetentionError`` when any of ``rels`` (paths
+    relative to the table root) a read of ``version`` needs was
+    vacuumed — instead of a raw file-not-found, or worse, an empty
+    scan. The error names the oldest version from which every version
+    through the latest still has all its data files and deletion-vector
+    sidecars on disk (the resume point)."""
+    missing = next(
+        (r for r in rels if not os.path.exists(os.path.join(table, r))),
+        None,
+    )
+    if missing is None:
+        return
+    horizon = None
+    for m in sorted(manifests, key=lambda m: m["version"], reverse=True):
+        needed = manifest_files(table, m) + [
+            e["dir"] for e in m.get("dv", {}).values()
+        ]
+        if not all(os.path.exists(os.path.join(table, r)) for r in needed):
+            break
+        horizon = m["version"]
+    raise SnapshotRetentionError(table, version, horizon, missing)
 
 
 class SnapshotRetentionError(ValueError):

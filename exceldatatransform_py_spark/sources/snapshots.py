@@ -5,35 +5,42 @@ Iceberg, Hudi) formalizes, reduced to its primitives so it runs on any
 filesystem with nothing but parquet and one JSON manifest per commit:
 
     table/
-      _versions/v00000.json   {"version": 0, "data_dir": "d00000", ...}
+      _versions/v00000.json   {"version": 0, "files": [...], ...}
       _versions/v00001.json
-      d00000/*.parquet        immutable data of version 0
-      d00001/*.parquet        immutable data of version 1
+      d00000-3fa9c1d2/*.parquet   files written by version 0
+      d00001-77b0e4aa/*.parquet   files written by version 1
+      _dv/v00002-9c0e51f3/        deletion-vector sidecars of version 2
 
-* Writers NEVER mutate existing data: each commit writes a fresh data
-  directory, then publishes it by writing the next manifest. The
-  manifest write is the commit point, and it is put-if-absent:
+* Writers NEVER mutate existing data: each commit stages the files it
+  writes under a fresh, globally unique directory, then publishes the
+  next manifest, which lists the version's files explicitly — the
+  ones it wrote plus the ones it inherits BY REFERENCE from its parent.
+  The manifest write is the commit point, and it is put-if-absent:
   concurrent writers racing for the same version see exactly one
   winner, and the loser gets ``SnapshotConflictError`` instead of
   silently clobbering — the same optimistic-concurrency protocol
   Delta runs on its log store (put-if-absent on the next log entry).
+  Staging needs no atomic primitive (unique names cannot collide);
   HOW put-if-absent is achieved is pluggable (``CommitProtocol``):
-  ``PosixCommitProtocol`` (default) uses create-exclusive hardlinks +
-  atomic directory rename — right for local disk/HDFS;
-  ``ConditionalPutCommitProtocol`` never renames or links anything
-  (unique data-dir names + conditional PUT of the manifest object) —
-  the shape object stores need, where rename is copy+delete and not
+  ``PosixCommitProtocol`` (default) uses a create-exclusive hardlink
+  — right for local disk/HDFS; ``ConditionalPutCommitProtocol`` never
+  renames or links anything (conditional PUT of the manifest object)
+  — the shape object stores need, where rename is copy+delete and not
   atomic. Read-modify-write
   commits (``snapshot_merge_update``) capture the version they read
   and commit conditionally on it, so lost updates are impossible;
   ``max_retries`` re-runs the read-merge-commit loop on conflict.
-* Readers resolve the manifest FIRST, then read only that version's
-  data directory — a reader never sees a half-written commit, and
-  old versions stay readable until vacuumed (snapshot isolation).
+* Readers resolve the manifest FIRST, then read only the files it
+  lists — a reader never sees a half-written commit, and old
+  versions stay readable until vacuumed (snapshot isolation).
 * ``overwrite`` and ``merge_update`` are the two commit kinds the
   reference pipeline needs (full rewrite / S5 update-only merge,
   ``timesheet_transform.py:105-138``); both go through the same
-  commit path. The merge commit carries the FULL MERGE clause
+  commit path as every other data commit (``_commit_files``, one
+  add/remove file list per commit, like Delta's log actions): the
+  overwrite removes every parent file, the full-read merge rewrites
+  every file, the file-pruned merge only the files that may match.
+  The merge commit carries the FULL MERGE clause
   surface (``operators.merge.merge_full``): WHEN MATCHED UPDATE
   always, optional WHEN NOT MATCHED INSERT and WHEN NOT MATCHED BY
   SOURCE DELETE; the file-pruned variant supports INSERT too.
@@ -45,7 +52,7 @@ filesystem with nothing but parquet and one JSON manifest per commit:
   subtract them, COUNT(*) subtracts cached cardinalities, and
   compaction/merges materialize them away).
 
-At 100 TB: data directories are written by the cluster with normal
+At 100 TB: data files are written by the cluster with normal
 parallelism (this module adds no driver-side data movement); only the
 KB-sized manifest is driver-written. Version history is O(commits)
 small files; ``vacuum`` drops data directories older than a retention
@@ -65,13 +72,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from exceldatatransform_py_spark.operators.merge import merge_update
 from exceldatatransform_py_spark.sources.snapshot_common import (
     LAYOUT_ONLY_KINDS as _LAYOUT_ONLY_KINDS,
     SCHEMA_ONLY_KINDS as _SCHEMA_ONLY_KINDS,
-    SnapshotRetentionError,
+    SnapshotRetentionError,  # re-exported: raised by the feed readers
     manifest_files as _manifest_files,
-    parquet_files as _parquet_files,
+    require_retained as _require_retained,
 )
 
 _VDIR = "_versions"
@@ -446,18 +452,15 @@ class SnapshotConflictError(RuntimeError):
 
 
 class CommitProtocol:
-    """The two primitives the snapshot log's atomicity rests on,
-    abstracted so the commit point is pluggable per storage system —
-    the split Delta formalizes as its LogStore interface. Everything
-    ABOVE this class (merge logic, manifests, pruning, time travel,
-    vacuum) is storage-agnostic; only these two operations decide
-    which writer wins a race:
+    """The primitive the snapshot log's atomicity rests on, abstracted
+    so the commit point is pluggable per storage system — the split
+    Delta formalizes as its LogStore interface. Everything ABOVE this
+    class (staging, merge logic, manifests, pruning, time travel,
+    vacuum) is storage-agnostic: every commit stages its files under a
+    globally unique directory name (``_stage_unique``), so racing
+    writers cannot collide before the commit point, and only this one
+    operation decides which writer wins a race:
 
-    * ``stage_data_dir(table, df, version) -> rel_dir`` — make the
-      version's parquet files durable under ``table`` and return the
-      directory name the manifest should reference. Losers of a
-      version race must either be unable to collide here (unique
-      names) or fail cleanly with ``SnapshotConflictError``.
     * ``publish(table, manifest)`` — the COMMIT POINT: make the
       manifest for ``manifest['version']`` visible iff no other
       writer published that version first (put-if-absent), else
@@ -466,40 +469,19 @@ class CommitProtocol:
 
     name = "abstract"
 
-    def stage_data_dir(
-        self, table: str, df: DataFrame, version: int
-    ) -> str:
-        raise NotImplementedError
-
     def publish(self, table: str, manifest: dict) -> None:
         raise NotImplementedError
 
 
 class PosixCommitProtocol(CommitProtocol):
-    """Default protocol for POSIX-rename filesystems (local disk,
-    HDFS, NFS): data dirs keep their pretty ``d00007`` names via an
-    atomic directory rename, and the manifest publish is
-    CREATE-EXCLUSIVE (unique temp + ``os.link``): the link makes the
-    full content appear atomically AND fails with ``FileExistsError``
-    if any other writer published this version first (unlike
-    ``os.replace``, which would silently clobber the winner)."""
+    """Default protocol for POSIX filesystems (local disk, HDFS, NFS):
+    the manifest publish is CREATE-EXCLUSIVE (unique temp +
+    ``os.link``): the link makes the full content appear atomically
+    AND fails with ``FileExistsError`` if any other writer published
+    this version first (unlike ``os.replace``, which would silently
+    clobber the winner)."""
 
     name = "posix"
-
-    def stage_data_dir(
-        self, table: str, df: DataFrame, version: int
-    ) -> str:
-        data_dir = f"d{version:05d}"
-        stage = os.path.join(
-            table, f"{data_dir}.stage-{uuid.uuid4().hex[:8]}"
-        )
-        df.write.mode("errorifexists").parquet(stage)
-        try:
-            os.rename(stage, os.path.join(table, data_dir))
-        except OSError as e:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise SnapshotConflictError(table, version) from e
-        return data_dir
 
     def publish(self, table: str, manifest: dict) -> None:
         v = manifest["version"]
@@ -522,23 +504,16 @@ class ConditionalPutCommitProtocol(CommitProtocol):
     its absence (S3 ``If-None-Match: *`` / GCS ``ifGenerationMatch=0``
     / Azure ``If-None-Match``), GET, LIST. NO ``os.rename`` and NO
     ``os.link`` anywhere on the commit path, because on object stores
-    "rename" is a non-atomic copy+delete and hardlinks don't exist:
+    "rename" is a non-atomic copy+delete and hardlinks don't exist.
 
-    * data directories get a GLOBALLY UNIQUE name
-      (``d00007-3fa9c1d2``) and are written directly in place — two
-      writers racing for the same version can never collide on a
-      name, so the promote-by-rename step (whose atomicity the POSIX
-      protocol leans on) doesn't exist at all; a loser just deletes
-      its own never-referenced directory.
-    * the manifest object is the sole commit point, published through
-      ``_put_if_absent`` — the one method to override for a real
-      store (conditional PUT, or a DynamoDB-style commit table when
-      the store lacks conditional writes). The local implementation
-      simulates the store's internally-atomic conditional PUT by
-      serializing writers through a per-table advisory ``flock``
-      while checking absence and writing the full payload; the lock
-      stands in for the store's own serialization and is NOT part of
-      the protocol.
+    The manifest object is the sole commit point, published through
+    ``_put_if_absent`` — the one method to override for a real store
+    (conditional PUT, or a DynamoDB-style commit table when the store
+    lacks conditional writes). The local implementation simulates the
+    store's internally-atomic conditional PUT by serializing writers
+    through a per-table advisory ``flock`` while checking absence and
+    writing the full payload; the lock stands in for the store's own
+    serialization and is NOT part of the protocol.
 
     Note on the parquet job itself: ``df.write`` runs under Spark's
     Hadoop output committer, whose task-commit renames are a separate,
@@ -547,15 +522,6 @@ class ConditionalPutCommitProtocol(CommitProtocol):
     own commit protocol rename-free."""
 
     name = "conditional_put"
-
-    def stage_data_dir(
-        self, table: str, df: DataFrame, version: int
-    ) -> str:
-        data_dir = f"d{version:05d}-{uuid.uuid4().hex[:8]}"
-        df.write.mode("errorifexists").parquet(
-            os.path.join(table, data_dir)
-        )
-        return data_dir
 
     def publish(self, table: str, manifest: dict) -> None:
         v = manifest["version"]
@@ -679,69 +645,12 @@ def _txn_already_applied(
     return None
 
 
-def _commit(
-    table: str,
-    df: DataFrame,
-    kind: str,
-    parent: int | None,
-    stats_cols: Sequence[str] = (),
-    constraints: dict | None = None,
-    txn: tuple[str, int] | None = None,
-    bloom_cols: Sequence[str] = (),
-) -> int:
-    import time
-
-    v = 0 if parent is None else parent + 1
-    # the parent's manifest alone (one file, not the history) carries
-    # what this commit inherits
-    parent_manifest = None
-    if parent is not None and os.path.exists(_version_path(table, parent)):
-        with open(_version_path(table, parent)) as f:
-            parent_manifest = json.load(f)
-    # CHECK constraints persist across commits (Delta's ADD CONSTRAINT
-    # contract): None inherits the parent's; a dict replaces them
-    # ({} drops all). Validation runs BEFORE staging, so a rejected
-    # commit leaves no trace.
-    effective = (
-        (parent_manifest or {}).get("constraints", {})
-        if constraints is None
-        else dict(constraints)
-    )
-    _validate_constraints(df, effective)
-    # stable field IDs (rename-safe schema evolution): inherited by
-    # name from the parent, fresh 1..n on a new table
-    floor = _last_field_id(table, parent_manifest)
-    df = _attach_field_ids(df, parent_manifest, floor=floor)
-    data_dir = _active_protocol.stage_data_dir(table, df, v)
-    manifest = {
-        "version": v,
-        "data_dir": data_dir,
-        "kind": kind,
-        "parent": parent,
-        "ts": time.time(),
-        "schema": df.schema.jsonValue(),
-    }
-    _record_last_field_id(manifest, floor)
-    if effective:
-        manifest["constraints"] = effective
-    if txn is not None:
-        manifest["txn"] = {"app": txn[0], "batch": int(txn[1])}
-    rel_files = _parquet_files(table, data_dir)
-    manifest["rows"] = _collect_rows(table, rel_files)
-    if stats_cols:
-        manifest["stats"] = _collect_stats(table, rel_files, stats_cols)
-    if bloom_cols:
-        manifest["blooms"] = _collect_blooms(
-            df.sparkSession, table, rel_files, bloom_cols
-        )
-    try:
-        _publish(table, manifest)
-    except SnapshotConflictError:
-        # a writer that never staged data (rollback is metadata-only)
-        # may have taken this version: withdraw our unreferenced dir.
-        shutil.rmtree(os.path.join(table, data_dir), ignore_errors=True)
-        raise
-    return v
+#: the parent of a table's first commit: no files, no constraints, no
+#: field ids minted yet — so v0 commits through ``_commit_files`` like
+#: any later overwrite
+_EMPTY_PARENT = {
+    "version": -1, "files": [], "schema": {"fields": []}, "last_field_id": 0,
+}
 
 
 def snapshot_write(
@@ -774,10 +683,13 @@ def snapshot_write(
     done = _txn_already_applied(table, txn)
     if done is not None:
         return done
-    return _commit(
-        table, df, "overwrite", latest_version(table),
-        stats_cols=stats_cols, constraints=constraints, txn=txn,
-        bloom_cols=bloom_cols,
+    parent = _latest_manifest(table) or _EMPTY_PARENT
+    # a blind overwrite removes every parent file and never rebases: a
+    # lost race raises, so it can never carry files a winner added
+    return _commit_files(
+        df.sparkSession, table, parent, "overwrite", df=df,
+        removed=_manifest_files(table, parent), constraints=constraints,
+        stats_cols=stats_cols, bloom_cols=bloom_cols, txn=txn, rebase=False,
     )
 
 
@@ -1122,29 +1034,30 @@ def snapshot_merge_update(
     winner's rows, so insert/delete decisions are re-taken against the
     state that actually committed.
 
+    The read set is every file, so the commit rewrites them all (and
+    the change feed shows the version as a full delete/insert); the
+    file-pruned twin is ``snapshot_merge_update_pruned``.
+
     ``txn=(app_id, batch_id)`` makes the merge idempotent for
     exactly-once streaming CDC sinks: a replayed micro-batch whose
     (app, batch) the manifest log already records is a no-op — the
     check re-runs inside the CAS loop, so a retry racing its own
     duplicate still applies exactly once."""
-    from exceldatatransform_py_spark.operators.merge import merge_full
-
     for attempt in range(max_retries + 1):
         done = _txn_already_applied(table, txn)
         if done is not None:
             return done
-        parent = latest_version(table)
-        if parent is None:
-            raise FileNotFoundError(f"no versions in {table}")
-        current = snapshot_read(spark, table, version=parent)
-        merged = merge_full(
-            current, updates, on=on, update_cols=update_cols,
-            insert=when_not_matched_insert,
-            delete_unmatched_target=when_not_matched_by_source_delete,
-            evolve_schema=evolve_schema,
-        )
+        latest = _require_latest(table)
         try:
-            return _commit(table, merged, "merge_update", parent, txn=txn)
+            # no rebase: every file is read, so any winner interacts;
+            # the CAS loop re-runs the merge against it instead
+            return _merge(
+                spark, table, latest, "merge_update",
+                _manifest_files(table, latest), updates, on, update_cols,
+                insert=when_not_matched_insert,
+                delete_unmatched=when_not_matched_by_source_delete,
+                evolve_schema=evolve_schema, txn=txn, rebase=False,
+            )
         except SnapshotConflictError:
             if attempt == max_retries:
                 raise
@@ -1212,7 +1125,7 @@ def _record_last_field_id(manifest: dict, floor: int) -> None:
 
 
 def _attach_field_ids(
-    df: DataFrame, parent: dict | None, floor: int = 0
+    df: DataFrame, parent: dict, floor: int = 0
 ) -> DataFrame:
     """Attach Iceberg-style stable field IDs to ``df``'s columns as
     ``parquet.field.id`` metadata (Spark writes them into the parquet
@@ -1221,17 +1134,14 @@ def _attach_field_ids(
     that old files survive).
 
     IDs are inherited from the parent manifest BY NAME; brand-new
-    columns get the next unused id; a brand-new table numbers 1..n. A
-    LEGACY parent without ids leaves the frame untouched — its files
-    carry no ids, so claiming ids in the manifest would make id-based
-    reads of inherited files fail; legacy tables stay name-matched
-    end-to-end."""
-    if parent is not None:
-        pids = _schema_field_ids(parent["schema"])
-        if not any(v is not None for v in pids.values()):
-            return df
-    else:
-        pids = {}
+    columns get the next unused id; a brand-new table (the empty
+    parent) numbers 1..n. A LEGACY parent without ids leaves the frame
+    untouched — its files carry no ids, so claiming ids in the
+    manifest would make id-based reads of inherited files fail; legacy
+    tables stay name-matched end-to-end."""
+    pids = _schema_field_ids(parent["schema"])
+    if pids and not any(v is not None for v in pids.values()):
+        return df
     used = [v for v in pids.values() if v is not None]
     nxt = max(max(used, default=0), floor) + 1
     out = []
@@ -1265,20 +1175,24 @@ def _schema_for_read(spark: SparkSession, m: dict):
 def _stage_unique(
     table: str, df: DataFrame, parent: dict
 ) -> tuple[str, dict, list[str]]:
-    """Stage a file-level commit's new files under a globally UNIQUE
-    directory name — protocol-agnostic (no rename/link:
-    object-store-safe) and collision-free under any concurrency, so a
-    conflicted file-level commit can REBASE onto the new latest
-    without re-staging its parquet. Field IDs are attached from
-    ``parent`` before the write. Returns ``(data_dir, schema_json,
-    files)`` — the schema as staged, ids included, and the staged
-    parquet files relative to the table root. The manifest's explicit
-    "files" list is authoritative; ``vacuum`` sweeps never-published
-    unique dirs past the retention horizon."""
+    """Stage a commit's new files under a globally UNIQUE directory
+    name — protocol-agnostic (no rename/link: object-store-safe) and
+    collision-free under any concurrency, so a conflicted commit can
+    REBASE onto the new latest without re-staging its parquet. Field
+    IDs are attached from ``parent`` before the write. Returns
+    ``(data_dir, schema_json, files)`` — the schema as staged, ids
+    included, and the staged parquet files relative to the table root.
+    The manifest's explicit "files" list is authoritative; ``vacuum``
+    sweeps never-published unique dirs past the retention horizon."""
     df = _attach_field_ids(df, parent, floor=_last_field_id(table, parent))
     data_dir = f"d{parent['version'] + 1:05d}-{uuid.uuid4().hex[:8]}"
     df.write.mode("errorifexists").parquet(os.path.join(table, data_dir))
-    return data_dir, df.schema.jsonValue(), _parquet_files(table, data_dir)
+    files = sorted(
+        os.path.join(data_dir, f)
+        for f in os.listdir(os.path.join(table, data_dir))
+        if f.endswith(".parquet")
+    )
+    return data_dir, df.schema.jsonValue(), files
 
 
 def _pruned_rebase_ok(
@@ -1400,19 +1314,27 @@ def _write_dv(
     if prior is not None:
         prior = prior.filter(F.col("rel").isin(list(old)))
         hits = hits.join(prior, ["rel", "pos"], "left_anti").unionByName(prior)
-    counts = {
-        r["rel"]: int(r["n"])
-        for r in hits.groupBy("rel").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    if not counts:
-        return None, {}
-    dv_dir = os.path.join(
-        _DVDIR, f"v{m['version'] + 1:05d}-{uuid.uuid4().hex[:8]}"
-    )
-    n_out = max(1, sum(counts.values()) // 4_000_000)
-    hits.repartition(n_out, "rel").write.mode("errorifexists").parquet(
-        os.path.join(table, dv_dir)
-    )
+    # the (rel, pos) positions are tiny next to the touched files: keep
+    # them so the counts and the sidecar write share ONE scan
+    hits = hits.persist()
+    try:
+        counts = {
+            r["rel"]: int(r["n"])
+            for r in hits.groupBy("rel")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        if not counts:
+            return None, {}
+        dv_dir = os.path.join(
+            _DVDIR, f"v{m['version'] + 1:05d}-{uuid.uuid4().hex[:8]}"
+        )
+        n_out = max(1, sum(counts.values()) // 4_000_000)
+        hits.repartition(n_out, "rel").write.mode("errorifexists").parquet(
+            os.path.join(table, dv_dir)
+        )
+    finally:
+        hits.unpersist()
     return dv_dir, {
         rel: {"dir": dv_dir, "count": counts[rel]} if rel in counts else None
         for rel in touched
@@ -1433,22 +1355,24 @@ def _commit_files(
     bounds: dict | None = None,
     stats_cols: Sequence[str] = (),
     bloom_cols: Sequence[str] = (),
+    constraints: dict | None = None,
     txn: tuple[str, int] | None = None,
     rebase: bool = True,
     max_rebase: int = 5,
 ) -> int:
-    """The one file-level commit (pruned merge, range/DV delete, CDC
-    apply, compact, zorder): stage ``df`` (if any) as new files, then
+    """The one data commit (overwrite, both merges, range/DV delete,
+    CDC apply, compact, zorder): stage ``df`` (if any) as new files, then
     publish a manifest that drops the ``removed`` files, adds the
     staged ones, applies the ``dv`` outcome from ``_write_dv``, and
     inherits every other file BY REFERENCE — with its rows, stats,
     blooms and DV entry — from whichever parent the commit lands on.
 
-    * Row-changing commits validate ``df`` against the inherited CHECK
+    * Row-changing commits validate ``df`` against the CHECK
       constraints before staging (the inherited files were validated
       at their own commits) and carry the staged schema (a CDC insert
       may widen it); layout-only kinds do neither — their rows are
-      the parent's.
+      the parent's. ``constraints`` (the overwrite's) replaces the
+      parent's set (``{}`` drops it); None inherits it.
     * New files get fresh stats for ``stats_cols`` (default: the
       ``bounds`` keys, so the NEXT commit on them prunes from the
       manifest alone) and blooms for ``bloom_cols`` (default: the
@@ -1469,10 +1393,15 @@ def _commit_files(
 
     row_change = kind not in _LAYOUT_ONLY_KINDS
     keys = list(bounds or ())
+    # a rebase requires the winner's constraints to equal the base's,
+    # so the set validated here is the one every attempt publishes
+    checks = (
+        base.get("constraints", {}) if constraints is None else constraints
+    )
     data_dir, schema, new_files = None, None, []
     if df is not None:
         if row_change:
-            _validate_constraints(df, base.get("constraints", {}))
+            _validate_constraints(df, checks)
         data_dir, schema, new_files = _stage_unique(table, df, base)
     new_rows = _collect_rows(table, new_files)
     new_stats = _collect_stats(table, new_files, stats_cols or keys)
@@ -1527,7 +1456,7 @@ def _commit_files(
                 **new_rows,
             },
             "kind": kind,
-            "parent": cur["version"],
+            "parent": cur["version"] if cur is not _EMPTY_PARENT else None,
             "ts": _t.time(),
             "schema": schema if schema and row_change else cur["schema"],
             "stats": stats_out,
@@ -1537,8 +1466,8 @@ def _commit_files(
             manifest["blooms"] = blooms_out
         if dv_out:
             manifest["dv"] = dv_out
-        if cur.get("constraints"):
-            manifest["constraints"] = cur["constraints"]
+        if checks:
+            manifest["constraints"] = checks
         if txn is not None:
             manifest["txn"] = {"app": txn[0], "batch": int(txn[1])}
         return manifest
@@ -1554,6 +1483,46 @@ def _commit_files(
             table, base, nxt, held, bounds
         ),
         cleanup=cleanup, rebase=rebase, max_rebase=max_rebase,
+    )
+
+
+def _merge(
+    spark: SparkSession,
+    table: str,
+    latest: dict,
+    kind: str,
+    rewrite: list[str],
+    updates: DataFrame,
+    on: Sequence[str],
+    update_cols: Sequence[str],
+    *,
+    insert: bool = False,
+    delete_unmatched: bool = False,
+    evolve_schema: bool = False,
+    **commit,
+) -> int:
+    """Shared body of the two merges: read the ``rewrite`` files of
+    ``latest`` with their deletion vectors applied (a DV-deleted row
+    is not in the table, so it must not match — the rewrite then
+    materializes the DVs away), merge ``updates`` into them
+    (``merge_full``'s clauses) and commit the result through
+    ``_commit_files``, which drops the rewritten files and inherits
+    every other one. ``commit`` carries the commit options (pruning
+    stats and bounds, ``txn``, rebase). Nothing is staged when nothing
+    is rewritten, inserted or widened; an insert-only commit merges
+    against an empty frame."""
+    from exceldatatransform_py_spark.operators.merge import merge_full
+
+    merged = None
+    if rewrite or insert or evolve_schema:
+        merged = merge_full(
+            _read_files(spark, table, latest, rewrite), updates, on=on,
+            update_cols=update_cols, insert=insert,
+            delete_unmatched_target=delete_unmatched,
+            evolve_schema=evolve_schema,
+        )
+    return _commit_files(
+        spark, table, latest, kind, df=merged, removed=rewrite, **commit
     )
 
 
@@ -1648,31 +1617,14 @@ def snapshot_merge_update_pruned(
     touched, stats = _prune_files(
         table, latest, _manifest_files(table, latest), bounds
     )
-    merged = None
-    # A write is needed when files must be rewritten, or when INSERT
-    # has unmatched rows to land (explicit emptiness check — `lo is
-    # None` also holds for a NON-empty all-NULL-key update set, which
-    # absolutely must be merged).
-    if touched or (when_not_matched_insert and not update_empty):
-        # deletion vectors on touched files apply BEFORE the merge (a
-        # DV-deleted row is not in the table, so it must not match) —
-        # the rewrite then materializes them away. An insert-only
-        # commit merges against an empty frame.
-        target = _read_files(spark, table, latest, touched)
-        if when_not_matched_insert:
-            from exceldatatransform_py_spark.operators.merge import merge_full
-
-            merged = merge_full(
-                target, updates, on=on, update_cols=update_cols, insert=True
-            )
-        else:
-            merged = merge_update(
-                target, updates, on=on, update_cols=update_cols
-            )
-    return _commit_files(
-        spark, table, latest, "merge_update_pruned", df=merged,
-        removed=touched, stats=stats, bounds=bounds,
-        rebase=rebase, max_rebase=max_rebase,
+    # INSERT has rows to land only for a non-empty update set
+    # (explicit emptiness check — `lo is None` also holds for a
+    # NON-empty all-NULL-key update set, which absolutely must be
+    # merged)
+    return _merge(
+        spark, table, latest, "merge_update_pruned", touched, updates, on,
+        update_cols, insert=when_not_matched_insert and not update_empty,
+        stats=stats, bounds=bounds, rebase=rebase, max_rebase=max_rebase,
     )
 
 
@@ -2125,47 +2077,6 @@ def rollback(table: str, version: int) -> int:
     return v
 
 
-def _fully_retained(table: str, m: dict) -> bool:
-    """True iff every data file and DV sidecar dir of manifest ``m``
-    still exists on disk (vacuum has not touched this version)."""
-    if "files" not in m and not os.path.isdir(
-        os.path.join(table, m["data_dir"])
-    ):
-        return False
-    for rel in _manifest_files(table, m):
-        if not os.path.exists(os.path.join(table, rel)):
-            return False
-    for e in m.get("dv", {}).values():
-        if not os.path.isdir(os.path.join(table, e["dir"])):
-            return False
-    return True
-
-
-def _retention_horizon(table: str, ms: list[dict]) -> int | None:
-    """Oldest version from which every version through latest is
-    still fully retained — the resume point named by
-    ``SnapshotRetentionError``."""
-    horizon = None
-    for m in reversed(ms):
-        if not _fully_retained(table, m):
-            break
-        horizon = m["version"]
-    return horizon
-
-
-def _require_retained(
-    table: str, version: int, rels: list[str], ms: list[dict]
-) -> None:
-    """Raise ``SnapshotRetentionError`` (instead of a raw downstream
-    file-not-found, or — worse — an empty scan) when any file a feed
-    step must read was vacuumed."""
-    for rel in rels:
-        if not os.path.exists(os.path.join(table, rel)):
-            raise SnapshotRetentionError(
-                table, version, _retention_horizon(table, ms), rel
-            )
-
-
 def snapshot_changes(
     spark: SparkSession,
     table: str,
@@ -2232,21 +2143,11 @@ def snapshot_changes(
     # from pre-rename files come out under the current names instead
     # of NULL-filling a second column set in the union)
     rs = _schema_for_read(spark, ms[to_version])
-    all_ms = [ms[v] for v in sorted(ms)]
     pieces: list[DataFrame] = []
     for v in range(from_version + 1, to_version + 1):
         m_cur, m_prev = ms[v], ms[v - 1]
         if m_cur.get("kind") in _LAYOUT_ONLY_KINDS:
             continue
-        # a vacuumed DIRECTORY-level manifest can't even list its
-        # files — surface the typed retention error, not the listdir
-        for m in (m_prev, m_cur):
-            dd = os.path.join(table, m["data_dir"])
-            if "files" not in m and not os.path.isdir(dd):
-                raise SnapshotRetentionError(
-                    table, v, _retention_horizon(table, all_ms),
-                    m["data_dir"],
-                )
         prev_files = set(_manifest_files(table, m_prev))
         cur_files = set(_manifest_files(table, m_cur))
         dv_prev = m_prev.get("dv", {})
@@ -2272,7 +2173,7 @@ def snapshot_changes(
             dv_prev[r]["dir"] for r in removed + grown if r in dv_prev
         }
         _require_retained(
-            table, v, added + removed + grown + sorted(needed_dv), all_ms
+            table, v, added + removed + grown + sorted(needed_dv), ms.values()
         )
         if added:
             pieces.append(tag(_scan_minus_dv(
@@ -2518,15 +2419,8 @@ def replicate_snapshot_changes(
         src_v0 = src_ms[0]
         # a vacuumed v0 must surface as the typed retention error the
         # rest of the feed raises, not a raw parquet file-not-found
-        if "files" not in src_v0 and not os.path.isdir(
-            os.path.join(src_table, src_v0["data_dir"])
-        ):
-            _require_retained(
-                src_table, 0, [src_v0["data_dir"]], list(src_ms.values())
-            )
         _require_retained(
-            src_table, 0, _manifest_files(src_table, src_v0),
-            list(src_ms.values()),
+            src_table, 0, _manifest_files(src_table, src_v0), src_ms.values()
         )
         # carry v0's CHECK constraints: without them the replica's
         # manifests lack enforcement until a later set_constraints
@@ -2713,10 +2607,11 @@ def vacuum(
     the last ``keep_last`` — bounded storage growth, the VACUUM
     analogue. Directories shared with retained versions — rollback
     commits, and files INHERITED across pruned merges — are kept.
-    Also sweeps orphaned ``*.stage-*`` directories, but ONLY those
-    older than ``stage_retention_sec`` (mtime of the directory): a
-    completed commit or a detected conflict removes its own staging,
-    so an old stage dir means a crashed writer — but a YOUNG one may
+    Also sweeps staged data and deletion-vector directories no
+    manifest references, but ONLY those older than
+    ``stage_retention_sec`` (mtime of the directory): a completed
+    commit or a detected conflict removes its own staging, so an old
+    unreferenced dir means a crashed writer — but a YOUNG one may
     belong to an in-flight concurrent writer mid-parquet-job, and
     deleting it would fail that commit non-atomically (same reason
     Delta's VACUUM has a retention horizon). Returns the vacuumed
@@ -2725,69 +2620,50 @@ def vacuum(
     import time as _time
 
     ms = _manifests(table)
-    # every dir ANY manifest references, including pruned-merge
-    # inherited files and deletion-vector sidecars — a conditional-put
-    # data dir becomes sweepable only if its version was never
-    # published (crashed writer)
-    referenced = {m["data_dir"] for m in ms}
-    for m in ms:
-        for f in m.get("files", []):
-            referenced.add(os.path.dirname(f))
-        for e in m.get("dv", {}).values():
-            referenced.add(e["dir"])
-    now = _time.time()
-    for entry in os.listdir(table):
-        # orphans: POSIX staging dirs, and conditional-put unique dirs
-        # (d00007-3fa9c1d2) no manifest ever published — both only
-        # past the retention age, since a young one may belong to an
-        # in-flight writer mid-parquet-job
-        orphan = ".stage-" in entry or (
-            re.fullmatch(r"d\d{5}-[0-9a-f]{8}", entry)
-            and entry not in referenced
-        )
-        if orphan:
-            p = os.path.join(table, entry)
-            try:
-                age = now - os.path.getmtime(p)
-            except OSError:
-                continue  # racing writer renamed/removed it — alive
-            if age >= stage_retention_sec:
-                shutil.rmtree(p, ignore_errors=True)
-    # deletion-vector sidecars a crashed writer staged but never
-    # published — same retention discipline as data-dir orphans
-    dv_root = os.path.join(table, _DVDIR)
-    if os.path.isdir(dv_root):
-        for entry in os.listdir(dv_root):
-            rel = os.path.join(_DVDIR, entry)
-            if (
-                re.fullmatch(r"v\d{5}-[0-9a-f]{8}", entry)
-                and rel not in referenced
-            ):
-                p = os.path.join(dv_root, entry)
-                try:
-                    age = now - os.path.getmtime(p)
-                except OSError:
-                    continue
-                if age >= stage_retention_sec:
-                    shutil.rmtree(p, ignore_errors=True)
-    if len(ms) <= keep_last:
-        return []
-    keep = {m["data_dir"] for m in ms[-keep_last:]}
-    for m in ms[-keep_last:]:
-        for f in m.get("files", []):
-            keep.add(os.path.dirname(f))
-        for e in m.get("dv", {}).values():
-            keep.add(e["dir"])
-    dropped = []
-    for m in ms[:-keep_last]:
-        refs = (
+
+    def refs(m: dict) -> set:
+        # every dir a manifest references: its data dir, the dirs of
+        # its (own and inherited) files, its deletion-vector sidecars
+        return (
             {m["data_dir"]}
-            | {os.path.dirname(f) for f in m.get("files", [])}
+            | {os.path.dirname(f) for f in m["files"]}
             | {e["dir"] for e in m.get("dv", {}).values()}
         )
-        if refs & keep:
+
+    # orphans: staged data dirs (d00007-3fa9c1d2) and DV sidecars
+    # (_dv/v00007-3fa9c1d2) no manifest ever published — a crashed
+    # writer's — swept only past the retention age, since a young one
+    # may belong to an in-flight writer mid-parquet-job
+    referenced = set().union(*map(refs, ms))
+    staged = [
+        e for e in os.listdir(table) if re.fullmatch(r"d\d{5}-[0-9a-f]{8}", e)
+    ]
+    dv_root = os.path.join(table, _DVDIR)
+    if os.path.isdir(dv_root):
+        staged += [
+            os.path.join(_DVDIR, e)
+            for e in os.listdir(dv_root)
+            if re.fullmatch(r"v\d{5}-[0-9a-f]{8}", e)
+        ]
+    now = _time.time()
+    for rel in staged:
+        if rel in referenced:
             continue
-        for d in refs:
+        p = os.path.join(table, rel)
+        try:
+            age = now - os.path.getmtime(p)
+        except OSError:
+            continue  # racing writer removed it
+        if age >= stage_retention_sec:
+            shutil.rmtree(p, ignore_errors=True)
+    if len(ms) <= keep_last:
+        return []
+    keep = set().union(*map(refs, ms[-keep_last:]))
+    dropped = []
+    for m in ms[:-keep_last]:
+        if refs(m) & keep:
+            continue
+        for d in refs(m):
             shutil.rmtree(os.path.join(table, d), ignore_errors=True)
         dropped.append(m["version"])
     return dropped

@@ -9,7 +9,6 @@ only unreferenced data directories.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 import pytest
@@ -32,6 +31,21 @@ def table(tmp_path):
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _data_dirs(table):
+    return sorted(
+        d for d in os.listdir(table)
+        if d.startswith("d") and os.path.isdir(os.path.join(table, d))
+    )
+
+
+def _unreferenced_data_dirs(table):
+    """Data dirs on disk that no published manifest lists a file of."""
+    from exceldatatransform_py_spark.sources.snapshots import _manifests
+
+    live = {os.path.dirname(f) for m in _manifests(table) for f in m["files"]}
+    return [d for d in _data_dirs(table) if d not in live]
 
 
 def test_write_read_roundtrip_and_versioning(spark, table):
@@ -174,9 +188,13 @@ def test_rollback_is_metadata_only(spark, table):
     v = rollback(table, 0)
     assert v == 2
     assert _rows(snapshot_read(spark, table)) == _rows(df0)
-    # no data was copied: v2 points at v0's directory
-    dirs = [d for d in os.listdir(table) if d.startswith("d")]
-    assert sorted(dirs) == ["d00000", "d00001"]
+    # no data was copied: v2 points at v0's files, and the only data
+    # dirs are the two the overwrites wrote
+    from exceldatatransform_py_spark.sources.snapshots import _manifests
+
+    ms = _manifests(table)
+    assert ms[2]["files"] == ms[0]["files"]
+    assert len(_data_dirs(table)) == 2 and not _unreferenced_data_dirs(table)
 
 
 def test_vacuum_drops_only_unreferenced(spark, table):
@@ -300,7 +318,7 @@ def test_manifest_stats_prune_without_footer_reads(spark, table):
     def forbid_parent_reads(path, col):
         # fresh stats for NEWLY written files are computed once from
         # their footers; the parent's files must come from the manifest
-        assert "/d00000/" not in path, f"parent footer read: {path}"
+        assert "/d00000-" not in path, f"parent footer read: {path}"
         return real_minmax(path, col)
 
     ups = spark.createDataFrame([(7, -7.0)], "k long, x double")
@@ -320,7 +338,7 @@ def test_manifest_stats_prune_without_footer_reads(spark, table):
     # second merge: rewritten-file stats were refreshed in v1's
     # manifest, so pruning again reads no pre-existing footers
     def forbid_old_reads(path, col):
-        assert "/d00000/" not in path and "/d00001/" not in path, (
+        assert "/d00000-" not in path and "/d00001-" not in path, (
             f"pre-existing footer read: {path}"
         )
         return real_minmax(path, col)
@@ -409,37 +427,92 @@ def test_concurrent_commit_loser_detects_conflict(spark, table):
     from exceldatatransform_py_spark.operators.merge import merge_update
     from exceldatatransform_py_spark.sources.snapshots import (
         SnapshotConflictError,
-        _commit,
+        _commit_files,
+        _latest_manifest,
+        _manifest_files,
     )
 
     base = spark.range(4).select(F.col("id"), (F.col("id") * 2).alias("v"))
     assert snapshot_write(table, base) == 0
 
     # both writers read version 0 …
-    parent_a = latest_version(table)
-    parent_b = latest_version(table)
-    read_a = snapshot_read(spark, table, version=parent_a)
-    read_b = snapshot_read(spark, table, version=parent_b)
+    parent_a = _latest_manifest(table)
+    parent_b = _latest_manifest(table)
+    read_a = snapshot_read(spark, table, version=parent_a["version"])
+    read_b = snapshot_read(spark, table, version=parent_b["version"])
     upd_a = spark.createDataFrame([(1, 100)], "id long, v long")
     upd_b = spark.createDataFrame([(2, 200)], "id long, v long")
     merged_a = merge_update(read_a, upd_a, on=["id"], update_cols=["v"])
     merged_b = merge_update(read_b, upd_b, on=["id"], update_cols=["v"])
 
+    def commit(parent, merged):  # the full-read merge's commit
+        return _commit_files(
+            spark, table, parent, "merge_update", df=merged,
+            removed=_manifest_files(table, parent), rebase=False,
+        )
+
     # … writer A publishes first, writer B must lose, not clobber.
-    assert _commit(table, merged_a, "merge_update", parent_a) == 1
+    assert commit(parent_a, merged_a) == 1
+    dirs = _data_dirs(table)
     with pytest.raises(SnapshotConflictError):
-        _commit(table, merged_b, "merge_update", parent_b)
+        commit(parent_b, merged_b)
 
     assert latest_version(table) == 1
     assert _rows(snapshot_read(spark, table)) == [
         (0, 0), (1, 100), (2, 4), (3, 6),
     ]
-    # the loser withdrew everything: only v0+v1 data dirs remain.
-    dirs = sorted(
-        d for d in os.listdir(table)
-        if d.startswith("d") and os.path.isdir(os.path.join(table, d))
-    )
-    assert dirs == ["d00000", "d00001"]
+    # the loser withdrew everything: its staged dir is gone, and only
+    # the v0 and v1 data dirs remain, both referenced by a manifest.
+    assert _data_dirs(table) == dirs and len(dirs) == 2
+    assert not _unreferenced_data_dirs(table)
+
+
+def test_blind_overwrites_race_one_winner(spark, table):
+    """Two blind overwrites race for v1: exactly one wins, the loser
+    raises SnapshotConflictError and its staged directory is removed.
+    An overwrite never rebases: one that loses to a commit which KEPT
+    the parent's files and added one (an insert-only merge) must raise
+    rather than carry the winner's file, and the re-run overwrite
+    carries none of the winner's files."""
+    from unittest import mock
+
+    import exceldatatransform_py_spark.sources.snapshots as snap
+
+    assert snapshot_write(table, spark.range(3).select("id")) == 0
+    real_publish = snap._publish
+    staged = []
+
+    def race(winner):
+        def interloper(tbl, manifest):
+            # the winner lands v<n> while the loser, already staged
+            # against v<n-1>, is about to publish
+            if not staged:
+                staged.append(manifest["data_dir"])
+                winner()
+            return real_publish(tbl, manifest)
+
+        staged.clear()
+        with mock.patch.object(snap, "_publish", side_effect=interloper):
+            with pytest.raises(snap.SnapshotConflictError):
+                snapshot_write(table, spark.range(20, 25).select("id"))
+        assert not os.path.exists(os.path.join(table, staged[0]))
+        assert not _unreferenced_data_dirs(table)
+
+    race(lambda: snapshot_write(table, spark.range(10, 14).select("id")))
+    assert latest_version(table) == 1
+    assert _rows(snapshot_read(spark, table)) == [(i,) for i in range(10, 14)]
+
+    race(lambda: snap.snapshot_merge_update_pruned(
+        spark, table, spark.createDataFrame([(99,)], "id long"),
+        on=["id"], update_cols=[], when_not_matched_insert=True,
+    ))
+    assert latest_version(table) == 2
+    winner = set(snap._manifests(table)[2]["files"])
+    assert snapshot_write(table, spark.range(30, 32).select("id")) == 3
+    m3 = snap._manifests(table)[3]
+    assert not winner & set(m3["files"])
+    assert {os.path.dirname(f) for f in m3["files"]} == {m3["data_dir"]}
+    assert _rows(snapshot_read(spark, table)) == [(30,), (31,)]
 
 
 def test_merge_update_retry_wins_after_conflict(spark, table):
@@ -450,6 +523,7 @@ def test_merge_update_retry_wins_after_conflict(spark, table):
     from unittest import mock
 
     import exceldatatransform_py_spark.sources.snapshots as snap
+    from exceldatatransform_py_spark.operators.merge import merge_update
 
     base = spark.range(4).select(F.col("id"), (F.col("id") * 2).alias("v"))
     assert snapshot_write(table, base) == 0
@@ -457,20 +531,20 @@ def test_merge_update_retry_wins_after_conflict(spark, table):
     upd_a = spark.createDataFrame([(1, 100)], "id long, v long")
     upd_b = spark.createDataFrame([(2, 200)], "id long, v long")
 
-    real_commit = snap._commit
+    real_commit = snap._commit_files
     fired = {"done": False}
 
-    def interloper(tbl, df, kind, parent, stats_cols=(), **kw):
+    def interloper(spark_, tbl, parent, kind, **kw):
         # writer A sneaks in its commit after B's read, once.
         if not fired["done"]:
             fired["done"] = True
-            real_commit(tbl, snap.merge_update(
-                snapshot_read(spark, tbl, version=parent),
+            real_commit(spark_, tbl, parent, "merge_update", df=merge_update(
+                snapshot_read(spark, tbl, version=parent["version"]),
                 upd_a, on=["id"], update_cols=["v"],
-            ), "merge_update", parent)
-        return real_commit(tbl, df, kind, parent, stats_cols, **kw)
+            ), removed=snap._manifest_files(tbl, parent), rebase=False)
+        return real_commit(spark_, tbl, parent, kind, **kw)
 
-    with mock.patch.object(snap, "_commit", side_effect=interloper):
+    with mock.patch.object(snap, "_commit_files", side_effect=interloper):
         v = snap.snapshot_merge_update(
             spark, table, upd_b, on=["id"], update_cols=["v"],
             max_retries=1,
@@ -484,35 +558,11 @@ def test_merge_update_retry_wins_after_conflict(spark, table):
     from exceldatatransform_py_spark.sources.snapshots import (
         SnapshotConflictError,
     )
-    with mock.patch.object(snap, "_commit", side_effect=interloper):
+    with mock.patch.object(snap, "_commit_files", side_effect=interloper):
         with pytest.raises(SnapshotConflictError):
             snap.snapshot_merge_update(
                 spark, table, upd_b, on=["id"], update_cols=["v"],
             )
-
-
-def test_vacuum_sweeps_orphaned_staging_dirs(spark, table):
-    """A writer that crashed between staging and rename leaves a
-    *.stage-* directory no manifest references; vacuum removes it once
-    it is older than the retention horizon — but a YOUNG stage dir
-    (an in-flight concurrent writer mid-parquet-job) is left alone,
-    so a vacuum racing a live writer cannot fail its commit."""
-    base = spark.range(3).select(F.col("id"), (F.col("id") + 1).alias("v"))
-    snapshot_write(table, base)
-    orphan = os.path.join(table, "d00001.stage-deadbeef")
-    live = os.path.join(table, "d00001.stage-cafef00d")
-    for d in (orphan, live):
-        os.makedirs(d)
-        with open(os.path.join(d, "part-x.parquet"), "wb") as f:
-            f.write(b"junk")
-    # backdate the orphan past the horizon; `live` keeps mtime = now
-    old = time.time() - 7200
-    os.utime(orphan, (old, old))
-    assert vacuum(table, keep_last=2, stage_retention_sec=3600) == []
-    assert not os.path.exists(orphan)
-    assert os.path.exists(live)  # in-flight writer's staging survives
-    shutil.rmtree(live)
-    assert _rows(snapshot_read(spark, table)) == [(0, 1), (1, 2), (2, 3)]
 
 
 def test_publish_create_exclusive_under_real_concurrency(tmp_path):
@@ -615,6 +665,11 @@ def test_commit_protocol_end_to_end(spark, table, proto):
         kinds = [h["kind"] for h in snapshot_history(table)]
         assert kinds == ["overwrite", "merge_update", "merge_update",
                          "merge_update_pruned"]
+        # every commit, overwrite and full-read merge included, lists
+        # its files explicitly
+        from exceldatatransform_py_spark.sources.snapshots import _manifests
+
+        assert all("files" in m for m in _manifests(table))
 
 
 def test_conditional_put_commit_path_never_renames_or_links(
@@ -790,21 +845,21 @@ def test_merge_full_retry_converges_after_conflict(spark, table):
     # B's update set) and still delete key 2.
     upd_b = spark.createDataFrame([(1, 11.0), (3, 33.0)], "k int, x double")
 
-    real_commit = snap._commit
+    real_commit = snap._commit_files
     fired = {"done": False}
 
-    def interloper(tbl, df, kind, parent, stats_cols=(), **kw):
+    def interloper(spark_, tbl, parent, kind, **kw):
         if not fired["done"]:
             fired["done"] = True
             from exceldatatransform_py_spark.operators.merge import merge_full
 
-            real_commit(tbl, merge_full(
-                snapshot_read(spark, tbl, version=parent),
+            real_commit(spark_, tbl, parent, "merge_update", df=merge_full(
+                snapshot_read(spark, tbl, version=parent["version"]),
                 upd_a, on=["k"], update_cols=["x"], insert=True,
-            ), "merge_update", parent)
-        return real_commit(tbl, df, kind, parent, stats_cols, **kw)
+            ), removed=snap._manifest_files(tbl, parent), rebase=False)
+        return real_commit(spark_, tbl, parent, kind, **kw)
 
-    with mock.patch.object(snap, "_commit", side_effect=interloper):
+    with mock.patch.object(snap, "_commit_files", side_effect=interloper):
         v = snap.snapshot_merge_update(
             spark, table, upd_b, on=["k"], update_cols=["x"],
             when_not_matched_by_source_delete=True, max_retries=1,
@@ -1155,9 +1210,8 @@ def test_check_constraints_enforced_and_inherited(spark, table):
     with pytest.raises(SnapshotConstraintError, match="x_nonneg"):
         snapshot_write(table, bad)
     assert latest_version(table) == 0
-    dirs = [d for d in os.listdir(table)
-            if d.startswith("d") and os.path.isdir(os.path.join(table, d))]
-    assert dirs == ["d00000"]
+    dirs = _data_dirs(table)
+    assert len(dirs) == 1 and dirs[0].startswith("d00000-")
 
     # merges inherit the constraint and reject violating updates
     ups_bad = spark.createDataFrame([(1, -5.0)], "k int, x double")
@@ -3718,9 +3772,9 @@ def test_replicate_fold_stops_at_schema_widening_merge(spark, table, tmp_path):
 
 
 def test_snapshot_history_after_vacuum_lists_every_version(spark, table):
-    """Directory-level versions list their files from the manifest's
-    cached row counts, so the audit log reports every version's file
-    count after vacuum has removed the older data directories."""
+    """Every version lists its files in its manifest, so the audit log
+    reports every version's file count after vacuum has removed the
+    older data directories."""
     from exceldatatransform_py_spark.sources.snapshots import (
         snapshot_history,
     )
@@ -3728,7 +3782,7 @@ def test_snapshot_history_after_vacuum_lists_every_version(spark, table):
     for n in (1, 2, 3):
         snapshot_write(table, spark.range(30).repartition(n))
     assert vacuum(table, keep_last=1) == [0, 1]
-    assert not os.path.exists(os.path.join(table, "d00000"))
+    assert [d[:6] for d in _data_dirs(table)] == ["d00002"]
     hist = snapshot_history(table)
     assert [h["version"] for h in hist] == [0, 1, 2]
     assert [h["n_files"] for h in hist] == [1, 2, 3]
