@@ -13,6 +13,42 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the driver heap on a machine with room for it (local mode: the
+#: driver is the only JVM)
+_DRIVER_HEAP_MB = 48 * 1024
+
+
+def driver_memory(total_mb: int | None) -> str:
+    """Default ``spark.driver.memory`` for a machine (or cgroup) with
+    ``total_mb`` of memory: 48g, capped at half the total so the heap,
+    the JVM's off-heap memory and the Python driver all fit (a heap
+    larger than RAM grows past it without a leak and gets the process
+    OOM-killed), never below 512m. ``None`` (unknown) keeps 48g."""
+    if total_mb is None:
+        return f"{_DRIVER_HEAP_MB}m"
+    return f"{max(512, min(_DRIVER_HEAP_MB, total_mb // 2))}m"
+
+
+def _memory_total_mb() -> int | None:
+    """The memory this process may use, in MB: the cgroup v2
+    ``memory.max`` when it sets a limit, else ``MemTotal``; read-only,
+    None when neither is readable."""
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = f.read().strip()
+        if limit != "max":
+            return int(limit) // (1024 * 1024)
+    except (OSError, ValueError):
+        pass
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
 
 def get_spark(
     app_name: str = "exceldatatransform_py_spark",
@@ -50,9 +86,12 @@ def get_spark(
         .config("spark.sql.icu.caseMappings.enabled", "false")
         # Arrow transfer for toPandas / pandas_udf exchange.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Local mode: the driver is the only JVM; give it headroom.
+        # Local mode: the driver is the only JVM; give it headroom
+        # the machine actually has.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or driver_memory(_memory_total_mb()),
         )
         # Whole-stage-codegen classes run interpreted until the JIT
         # compiles them; with many distinct queries per session the

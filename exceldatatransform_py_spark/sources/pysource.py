@@ -388,49 +388,31 @@ def register(spark) -> None:
 # number) names immutable manifests and immutable data files, so
 # ``readBetweenOffsets`` replays a checkpointed range byte-identically
 # (the vacuum retention horizon is the one caveat, exactly as for
-# Delta's CDF reads). Reconstruction runs in pure Python over
-# manifests + pyarrow (the reader executes without a SparkSession),
-# mirroring snapshot_changes' three manifest-derived pieces: added
-# files minus own DVs = inserts; removed files minus parent DVs =
-# deletes; DV growth on carried files = merge-on-read deletes.
-# Layout-only commits (compact/zorder) are skipped.
+# Delta's CDF reads). The reader executes without a SparkSession: it
+# runs the same ``snapshot_common.feed_actions`` list the batch feed
+# runs, reading each action's file and deletion-vector sidecars with
+# pyarrow.
 # ---------------------------------------------------------------------------
 
 from exceldatatransform_py_spark.sources.snapshot_common import (
-    LAYOUT_ONLY_KINDS as _CDF_LAYOUT_ONLY,
     SnapshotStreamSchemaChangedError,
+    feed_actions,
+    load_manifests,
     manifest_files,
     require_retained,
+    resolve_manifest,
 )
 
 
-def _cdf_manifests(table: str) -> dict[int, dict]:
-    import json
-
-    vdir = os.path.join(table, "_versions")
-    out: dict[int, dict] = {}
-    for f in sorted(os.listdir(vdir)):
-        if f.endswith(".json"):
-            with open(os.path.join(vdir, f)) as fh:
-                m = json.load(fh)
-            out[m["version"]] = m
-    return out
-
-
-def _cdf_dv_positions(table: str, entries: dict) -> dict[str, set]:
-    """{rel: {dir, count}} → {rel: set(row positions)} — each sidecar
-    dir read once via pyarrow."""
+def _cdf_dv_positions(table: str, dv_dir: str) -> dict[str, set]:
+    """{rel: set(row positions)} of one deletion-vector sidecar
+    directory, read once via pyarrow."""
     import pyarrow.parquet as pq
 
-    bydir: dict[str, set] = {}
-    for rel, e in entries.items():
-        bydir.setdefault(e["dir"], set()).add(rel)
+    t = pq.read_table(os.path.join(table, dv_dir), columns=["rel", "pos"])
     out: dict[str, set] = {}
-    for d, rels in bydir.items():
-        t = pq.read_table(os.path.join(table, d))
-        for r, p in zip(t["rel"].to_pylist(), t["pos"].to_pylist()):
-            if r in rels:
-                out.setdefault(r, set()).add(p)
+    for r, p in zip(t["rel"].to_pylist(), t["pos"].to_pylist()):
+        out.setdefault(r, set()).add(p)
     return out
 
 
@@ -480,34 +462,19 @@ def _cdf_file_rows(
         )
 
 
-def _snapshot_resolve_manifest(options: dict) -> tuple[str, int, dict]:
-    """(table, version, manifest) for the batch ``snapshot`` source's
-    options: ``path`` (required), ``version`` (time travel) or
-    ``asofts`` (TIMESTAMP AS OF, epoch seconds) — same resolution
-    rules as ``snapshot_read``."""
+def _snapshot_manifest(options: dict) -> tuple[str, dict]:
+    """(table, manifest) for the batch ``snapshot`` source's options:
+    ``path`` (required), ``version`` (time travel) or ``asofts``
+    (TIMESTAMP AS OF, epoch seconds), resolved like ``snapshot_read``."""
     path = options.get("path")
     if not path:
         raise ValueError("snapshot source requires option 'path'")
-    ms = _cdf_manifests(path)
-    v_opt, ts_opt = options.get("version"), options.get("asofts")
-    if v_opt is not None and ts_opt is not None:
-        raise ValueError("pass either version or asofts, not both")
-    if ts_opt is not None:
-        eligible = [
-            v for v, m in ms.items() if m.get("ts", 0) <= float(ts_opt)
-        ]
-        if not eligible:
-            raise ValueError(
-                f"no version of {path} existed at ts {ts_opt}"
-            )
-        v = max(eligible)
-    elif v_opt is not None:
-        v = int(v_opt)
-        if v not in ms:
-            raise ValueError(f"version {v} not in {sorted(ms)}")
-    else:
-        v = max(ms)
-    return path, v, ms[v]
+    v, ts = options.get("version"), options.get("asofts")
+    return path, resolve_manifest(
+        path,
+        None if v is None else int(v),
+        None if ts is None else float(ts),
+    )
 
 
 class _SnapshotFilePartition(InputPartition):
@@ -527,8 +494,8 @@ class SnapshotBatchReader(DataSourceReader):
     the commit-sized change feed is not."""
 
     def __init__(self, options: dict) -> None:
-        self.table, self.version, m = _snapshot_resolve_manifest(options)
-        ms = _cdf_manifests(self.table)
+        self.table, m = _snapshot_manifest(options)
+        self.version = m["version"]
         fields = m["schema"]["fields"]
         self.fields = [f["name"] for f in fields]
         self.field_ids = {
@@ -545,7 +512,6 @@ class SnapshotBatchReader(DataSourceReader):
             self.files + sorted(
                 {e["dir"] for r, e in self.dv.items() if r in set(self.files)}
             ),
-            ms.values(),
         )
 
     def partitions(self) -> list[InputPartition]:
@@ -563,7 +529,7 @@ class SnapshotBatchReader(DataSourceReader):
         t = pq.read_table(os.path.join(self.table, partition.rel))
         if partition.dv_entry is not None:
             dead = _cdf_dv_positions(
-                self.table, {partition.rel: partition.dv_entry}
+                self.table, partition.dv_entry["dir"]
             ).get(partition.rel, set())
             if dead:
                 mask = pa.array(
@@ -608,7 +574,7 @@ class SnapshotDataSource(DataSource):
     def schema(self):
         from pyspark.sql import types as T
 
-        _, _, m = _snapshot_resolve_manifest(self.options)
+        _, m = _snapshot_manifest(self.options)
         base = T.StructType.fromJson(m["schema"])
         # metadata-free, all-nullable copy: field-id resolution happens
         # inside the reader, and pre-evolution files NULL-fill added
@@ -633,9 +599,9 @@ class SnapshotCDFStreamReader(SimpleDataSourceStreamReader):
             raise ValueError("snapshot_cdf source requires option 'path'")
         self.table = path
         self.from_version = int(options.get("fromversion", 0))
-        ms = _cdf_manifests(self.table)
-        self.init_version = max(ms)
-        latest_fields = ms[self.init_version]["schema"]["fields"]
+        latest = resolve_manifest(self.table)
+        self.init_version = latest["version"]
+        latest_fields = latest["schema"]["fields"]
         self.fields = [f["name"] for f in latest_fields]
         self.field_ids = {
             f["name"]: (f.get("metadata") or {}).get("parquet.field.id")
@@ -689,85 +655,34 @@ class SnapshotCDFStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"version": self.from_version}
 
-    def _between(self, from_v: int, to_v: int):
-        ms = _cdf_manifests(self.table)
-        for v in range(from_v + 1, to_v + 1):
-            m_cur, m_prev = ms[v], ms[v - 1]
-            self._check_schema(v, m_cur)
-            if m_cur.get("kind") in _CDF_LAYOUT_ONLY:
-                continue
-            prev_files = set(manifest_files(self.table, m_prev))
-            cur_files = set(manifest_files(self.table, m_cur))
-            dv_prev = m_prev.get("dv", {})
-            dv_cur = m_cur.get("dv", {})
+    def _between(self, ms: dict, from_v: int, to_v: int):
+        """The feed rows of versions (from_v, to_v] — tuples in
+        ``fields`` order plus (change, version) — from the manifests
+        ``ms`` (version → manifest): each step checks the schema
+        contract, then runs its ``feed_actions``."""
+        dvs: dict[str, dict] = {}  # sidecar dir → {rel: positions}
 
-            added = sorted(cur_files - prev_files)
-            removed = sorted(prev_files - cur_files)
-            grown = sorted(
-                r for r in (cur_files & prev_files)
-                if r in dv_cur and dv_cur[r].get("dir") != (
-                    dv_prev.get(r) or {}
-                ).get("dir")
-            )
-            needed_dv = {
-                dv_cur[r]["dir"] for r in added + grown if r in dv_cur
-            } | {
-                dv_prev[r]["dir"] for r in removed + grown if r in dv_prev
-            }
-            # a vacuumed file under a checkpointed offset range raises
-            # the typed retention error, not a raw pyarrow error
-            require_retained(
-                self.table, v, added + removed + grown + sorted(needed_dv),
-                ms.values(),
-            )
-            if added:
-                dvs = _cdf_dv_positions(
-                    self.table, {r: dv_cur[r] for r in added if r in dv_cur}
-                )
-                for rel in added:
-                    yield from (
-                        row + ("insert", v)
-                        for row in _cdf_file_rows(
-                            self.table, rel, self.fields,
-                            field_ids=self.field_ids,
-                            skip_pos=dvs.get(rel),
-                        )
-                    )
-            if removed:
-                dvs = _cdf_dv_positions(
-                    self.table,
-                    {r: dv_prev[r] for r in removed if r in dv_prev},
-                )
-                for rel in removed:
-                    yield from (
-                        row + ("delete", v)
-                        for row in _cdf_file_rows(
-                            self.table, rel, self.fields,
-                            field_ids=self.field_ids,
-                            skip_pos=dvs.get(rel),
-                        )
-                    )
-            if grown:
-                cur_pos = _cdf_dv_positions(
-                    self.table, {r: dv_cur[r] for r in grown}
-                )
-                prev_pos = _cdf_dv_positions(
-                    self.table,
-                    {r: dv_prev[r] for r in grown if r in dv_prev},
-                )
-                for rel in grown:
-                    newly = cur_pos.get(rel, set()) - prev_pos.get(rel, set())
-                    if newly:
-                        yield from (
-                            row + ("delete", v)
-                            for row in _cdf_file_rows(
-                                self.table, rel, self.fields,
-                                field_ids=self.field_ids, keep_pos=newly,
-                            )
-                        )
+        def positions(dv_dir, rel):
+            if dv_dir is None:
+                return None
+            if dv_dir not in dvs:
+                dvs[dv_dir] = _cdf_dv_positions(self.table, dv_dir)
+            return dvs[dv_dir].get(rel, set())
+
+        for v in range(from_v + 1, to_v + 1):
+            self._check_schema(v, ms[v])
+            for _, change, rel, keep, drop in feed_actions(
+                self.table, ms, v - 1, v
+            ):
+                for row in _cdf_file_rows(
+                    self.table, rel, self.fields, field_ids=self.field_ids,
+                    keep_pos=positions(keep, rel),
+                    skip_pos=positions(drop, rel),
+                ):
+                    yield row + (change, v)
 
     def read(self, start: dict):
-        ms = _cdf_manifests(self.table)
+        ms = {m["version"]: m for m in load_manifests(self.table)}
         latest = max(ms)
         v0 = int(start["version"])
         if latest <= v0:
@@ -775,11 +690,12 @@ class SnapshotCDFStreamReader(SimpleDataSourceStreamReader):
         end = {"version": latest}
         # materialized: the prefetch cache copy.copy()s the iterator,
         # which a generator cannot survive (list iterators can)
-        return iter(list(self._between(v0, latest))), end
+        return iter(list(self._between(ms, v0, latest))), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
+        ms = {m["version"]: m for m in load_manifests(self.table)}
         return iter(list(
-            self._between(int(start["version"]), int(end["version"]))
+            self._between(ms, int(start["version"]), int(end["version"]))
         ))
 
     def commit(self, end: dict) -> None:
@@ -804,8 +720,7 @@ class SnapshotCDFDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("snapshot_cdf source requires option 'path'")
-        ms = _cdf_manifests(path)
-        base = T.StructType.fromJson(ms[max(ms)]["schema"])
+        base = T.StructType.fromJson(resolve_manifest(path)["schema"])
         # metadata-free copy: the stream's output schema must not
         # carry parquet.field.id metadata (the Python data source
         # runner trips on field metadata; id-based column resolution

@@ -1,18 +1,21 @@
-"""Constants, the manifest file listing, the retention check and error
-types shared by the snapshot table layer
-(``snapshots.py``) and the ``snapshot_cdf`` streaming reader
-(``pysource.py``).
+"""Constants, the manifest loaders, the version resolver, the
+change-feed planner, the retention check and error types shared by the
+snapshot table layer (``snapshots.py``) and the ``snapshot`` /
+``snapshot_cdf`` data sources (``pysource.py``).
 
-The streaming reader reconstructs the change feed in pure
-Python/pyarrow and must run without a SparkSession or the snapshots
-import, so anything BOTH sides need lives here, dependency-free —
-one definition, so a future layout-only commit kind (or a new
-retention rule) cannot drift between the batch and streaming feeds.
+The data sources run without a SparkSession or the snapshots import,
+so anything BOTH sides need lives here, dependency-free — one
+definition, so a future layout-only commit kind (or a new retention
+rule, or a new way a commit changes rows) cannot drift between the
+batch and streaming feeds.
 """
 
 from __future__ import annotations
 
+import json
 import os
+
+VERSIONS_DIR = "_versions"
 
 #: layout-maintenance commit kinds: rows identical before/after, so
 #: the change feed skips them (Delta's dataChange=false files).
@@ -25,15 +28,127 @@ LAYOUT_ONLY_KINDS = frozenset({"compact", "zorder"})
 SCHEMA_ONLY_KINDS = frozenset({"rename_column", "drop_column"})
 
 
+def _manifest_names(table: str) -> list[str]:
+    vdir = os.path.join(table, VERSIONS_DIR)
+    if not os.path.isdir(vdir):
+        return []
+    return sorted(
+        n for n in os.listdir(vdir) if n.startswith("v") and n.endswith(".json")
+    )
+
+
+def _load(table: str, name: str) -> dict:
+    with open(os.path.join(table, VERSIONS_DIR, name)) as f:
+        return json.load(f)
+
+
+def load_manifests(table: str) -> list[dict]:
+    """Every manifest of ``table``, oldest first — the one history
+    loader. Only time travel, rollback, the change feed and the
+    full-history audits need it."""
+    return [_load(table, n) for n in _manifest_names(table)]
+
+
+def latest_manifest(table: str) -> dict | None:
+    """Parse ONLY the newest manifest file — the per-commit hot paths
+    (CDC replication applies one commit per source version) and reads
+    of the latest version must not re-parse the whole history."""
+    names = _manifest_names(table)
+    return _load(table, names[-1]) if names else None
+
+
+def resolve_manifest(
+    table: str, version: int | None = None, as_of_ts: float | None = None
+) -> dict:
+    """The manifest a read of ``table`` resolves to: ``version`` (time
+    travel), the latest version whose commit timestamp is ≤
+    ``as_of_ts`` (TIMESTAMP AS OF; pre-timestamp manifests count as
+    ts 0), or the latest version. Only time travel loads the history."""
+    if version is not None and as_of_ts is not None:
+        raise ValueError("pass either version or as_of_ts, not both")
+    if version is None and as_of_ts is None:
+        m = latest_manifest(table)
+        if m is None:
+            raise FileNotFoundError(f"no versions in {table}")
+        return m
+    by_v = {m["version"]: m for m in load_manifests(table)}
+    if not by_v:
+        raise FileNotFoundError(f"no versions in {table}")
+    if as_of_ts is not None:
+        eligible = [v for v, m in by_v.items() if m.get("ts", 0) <= as_of_ts]
+        if not eligible:
+            raise ValueError(f"no version of {table} existed at ts {as_of_ts}")
+        version = max(eligible)
+    if version not in by_v:
+        raise ValueError(f"version {version} not in {sorted(by_v)}")
+    return by_v[version]
+
+
 def manifest_files(table: str, manifest: dict) -> list[str]:
     """Data files of one version, as paths relative to the table root
     (every commit lists them explicitly)."""
     return list(manifest["files"])
 
 
-def require_retained(
-    table: str, version: int, rels, manifests
-) -> None:
+def feed_actions(
+    table: str, manifests: dict, from_v: int, to_v: int
+) -> list[tuple]:
+    """The change feed between two versions as a flat action list —
+    the one per-version diff both the Spark feed
+    (``snapshots.snapshot_changes``) and the ``snapshot_cdf`` stream
+    run. ``manifests`` maps version → manifest.
+
+    Each action ``(version, change, rel, keep_dv_dir, drop_dv_dir)``
+    emits, as ``change`` rows of ``version``, the rows of file ``rel``
+    whose position is in the ``keep`` sidecar (when one is set) and
+    not in the ``drop`` sidecar. Per commit step:
+
+    * a file the commit ADDED: ``insert``, drop = the commit's own DV;
+    * a file the commit REMOVED: ``delete`` of the rows live at the
+      parent, drop = the parent's DV;
+    * a carried file whose DV changed: ``delete`` of the newly deleted
+      positions, keep = the current DV, drop = the parent's. Only a
+      ``rollback`` can also SHRINK a DV (every other commit writes old
+      ∪ new positions), so a rollback adds the ``insert`` of the
+      positions it restores: keep = the parent's DV, drop = the
+      current one.
+
+    Layout-only commits (compact/zorder) change no row and are
+    skipped. Each step checks with ``require_retained`` that exactly
+    the files and sidecars it reads survive vacuum."""
+    out: list[tuple] = []
+    for v in range(from_v + 1, to_v + 1):
+        cur, prev = manifests[v], manifests[v - 1]
+        if cur.get("kind") in LAYOUT_ONLY_KINDS:
+            continue
+        cur_files = set(manifest_files(table, cur))
+        prev_files = set(manifest_files(table, prev))
+        cur_dv = {r: e["dir"] for r, e in cur.get("dv", {}).items()}
+        prev_dv = {r: e["dir"] for r, e in prev.get("dv", {}).items()}
+        step = [
+            (v, "insert", r, None, cur_dv.get(r))
+            for r in sorted(cur_files - prev_files)
+        ] + [
+            (v, "delete", r, None, prev_dv.get(r))
+            for r in sorted(prev_files - cur_files)
+        ]
+        for r in sorted(cur_files & prev_files):
+            if cur_dv.get(r) == prev_dv.get(r):
+                continue
+            if r in cur_dv:
+                step.append((v, "delete", r, cur_dv[r], prev_dv.get(r)))
+            if r in prev_dv and cur.get("kind") == "rollback":
+                step.append((v, "insert", r, prev_dv[r], cur_dv.get(r)))
+        require_retained(
+            table, v,
+            list(dict.fromkeys(a[2] for a in step))
+            + sorted({d for a in step for d in a[3:] if d is not None}),
+        )
+        out += step
+    return out
+
+
+def require_retained(table: str, version: int, rels) -> None:
     """Raise ``SnapshotRetentionError`` when any of ``rels`` (paths
     relative to the table root) a read of ``version`` needs was
     vacuumed — instead of a raw file-not-found, or worse, an empty
@@ -47,7 +162,7 @@ def require_retained(
     if missing is None:
         return
     horizon = None
-    for m in sorted(manifests, key=lambda m: m["version"], reverse=True):
+    for m in reversed(load_manifests(table)):
         needed = manifest_files(table, m) + [
             e["dir"] for e in m.get("dv", {}).values()
         ]

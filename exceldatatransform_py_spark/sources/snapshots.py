@@ -75,13 +75,30 @@ from pyspark.sql import types as T
 from exceldatatransform_py_spark.sources.snapshot_common import (
     LAYOUT_ONLY_KINDS as _LAYOUT_ONLY_KINDS,
     SCHEMA_ONLY_KINDS as _SCHEMA_ONLY_KINDS,
+    VERSIONS_DIR as _VDIR,
     SnapshotRetentionError,  # re-exported: raised by the feed readers
+    feed_actions as _feed_actions,
+    latest_manifest as _latest_manifest,
+    load_manifests as _manifests,
     manifest_files as _manifest_files,
     require_retained as _require_retained,
+    resolve_manifest as _resolve_manifest,
 )
 
-_VDIR = "_versions"
 _DVDIR = "_dv"
+
+#: the deletion-vector sidecar layout: ``_write_dv`` writes exactly
+#: these columns (``pos`` is the parquet reader's ``row_index``) and
+#: every sidecar read uses this schema, so no read infers it (an
+#: inferred read costs a Spark job).
+_DV_SCHEMA = "rel string, pos long"
+
+#: the change feed's constant action map: rel → its actions, each
+#: ``(version, change, keep sidecar, drop sidecar)``
+_FEED_ACTIONS = (
+    "map<string, array<struct<_commit_version: int, _change_type: string, "
+    "__keep: string, __drop: string>>>"
+)
 
 #: a version's total deleted-position count below this is broadcast
 #: into the read-side anti-join (DVs are usually tiny vs data).
@@ -92,39 +109,9 @@ def _version_path(table: str, v: int) -> str:
     return os.path.join(table, _VDIR, f"v{v:05d}.json")
 
 
-def _manifests(table: str) -> list[dict]:
-    vdir = os.path.join(table, _VDIR)
-    if not os.path.isdir(vdir):
-        return []
-    out = []
-    for name in sorted(os.listdir(vdir)):
-        if name.startswith("v") and name.endswith(".json"):
-            with open(os.path.join(vdir, name)) as f:
-                out.append(json.load(f))
-    return out
-
-
 def latest_version(table: str) -> int | None:
     m = _latest_manifest(table)
     return None if m is None else m["version"]
-
-
-def _latest_manifest(table: str) -> dict | None:
-    """Parse ONLY the newest manifest file — the per-commit hot paths
-    (CDC replication applies one commit per source version) must not
-    re-parse the whole history per commit (the quadratic-in-versions
-    trap ``last_field_id`` closed for the id floor)."""
-    vdir = os.path.join(table, _VDIR)
-    if not os.path.isdir(vdir):
-        return None
-    names = sorted(
-        n for n in os.listdir(vdir)
-        if n.startswith("v") and n.endswith(".json")
-    )
-    if not names:
-        return None
-    with open(os.path.join(vdir, names[-1])) as f:
-        return json.load(f)
 
 
 def _stat_encode(v):
@@ -424,17 +411,10 @@ def snapshot_count(table: str, version: int | None = None) -> int:
     summed from per-file row counts cached in the manifest at commit
     time; files a pre-upgrade manifest didn't count fall back to one
     footer read each (still metadata-only)."""
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    by_v = {m["version"]: m for m in ms}
-    v = ms[-1]["version"] if version is None else version
-    if v not in by_v:
-        raise ValueError(f"version {v} not in {sorted(by_v)}")
     # deletion vectors: per-file deleted-position cardinalities are
     # cached in the manifest, so COUNT(*) stays metadata-only even on
     # merge-on-read tables.
-    m = by_v[v]
+    m = _resolve_manifest(table, version)
     return sum(_live_rows(table, m, _manifest_files(table, m)).values())
 
 
@@ -693,14 +673,6 @@ def snapshot_write(
     )
 
 
-def _require_latest(table: str) -> dict:
-    """The newest manifest, or ``FileNotFoundError`` on an empty table."""
-    m = _latest_manifest(table)
-    if m is None:
-        raise FileNotFoundError(f"no versions in {table}")
-    return m
-
-
 def _file_rows(table: str, m: dict, rel: str) -> int:
     """Row count of one file of manifest ``m``: the cached count, or
     one footer read for files a pre-upgrade manifest didn't count."""
@@ -736,7 +708,7 @@ def _compact(
     ``coalesce`` when shrinking (narrow, no shuffle); ``repartition``
     only when growing the file count (oversized files are being
     rewritten anyway)."""
-    latest = _require_latest(table)
+    latest = _resolve_manifest(table)
     files = _manifest_files(table, latest)
     live = _live_rows(table, latest, files)
     if small_only:
@@ -837,7 +809,7 @@ def snapshot_optimize_zorder(
     merges) rebase instead of conflicting."""
     from exceldatatransform_py_spark.sources.writers import zorder_frame
 
-    latest = _require_latest(table)
+    latest = _resolve_manifest(table)
     files = _manifest_files(table, latest)
     zed = zorder_frame(
         _read_files(spark, table, latest, files), col_a, col_b, num_files
@@ -871,19 +843,29 @@ def _rel_file_expr():
     )
 
 
-def _dv_rows(spark: SparkSession, table: str, dv: dict) -> DataFrame | None:
-    """(rel, pos) union of every sidecar directory ``dv`` references,
-    broadcast when the manifest's cached cardinalities say it's small.
-    Rows for files absent from the current scan are harmless — the
-    anti-join key includes the rel path, and rel paths are never
-    reused across versions."""
-    dirs = sorted({e["dir"] for e in dv.values()})
+def _dv_rows(spark: SparkSession, table: str, entries) -> DataFrame | None:
+    """(rel, pos, dir) rows of every sidecar directory the deletion-
+    vector ``entries`` (``{"dir", "count"}`` dicts) reference, read
+    under ``_DV_SCHEMA`` and broadcast when the entries' cached
+    cardinalities say it's small. ``dir`` names each row's sidecar
+    directory. Rows for files absent from the current scan are
+    harmless — every join key includes the rel path, and rel paths
+    are never reused across versions."""
+    entries = list(entries)
+    dirs = sorted({e["dir"] for e in entries})
     if not dirs:
         return None
-    rows = spark.read.parquet(
-        *[os.path.join(table, d) for d in dirs]
-    ).select("rel", "pos")
-    total = sum(int(e.get("count", 0)) for e in dv.values())
+    rows = (
+        spark.read.schema(_DV_SCHEMA)
+        .parquet(*[os.path.join(table, d) for d in dirs])
+        .withColumn(
+            "dir",
+            F.regexp_extract(
+                F.col("_metadata.file_path"), r"([^/]+/[^/]+)/[^/]+$", 1
+            ),
+        )
+    )
+    total = sum(int(e.get("count", 0)) for e in entries)
     return F.broadcast(rows) if total <= _DV_BROADCAST_MAX else rows
 
 
@@ -900,7 +882,7 @@ def _scan_minus_dv(
     a column rename read under the current name."""
     reader = spark.read.schema(schema) if schema is not None else spark.read
     scan = reader.parquet(*files)
-    rows = _dv_rows(spark, table, dv)
+    rows = _dv_rows(spark, table, dv.values())
     if rows is None:
         return scan
     cols = scan.columns
@@ -957,24 +939,7 @@ def snapshot_read(
     lookup on a bloom-indexed key reads only the files that may hold
     it, not the table. The filter itself is always applied, so
     results never depend on pruning."""
-    ms = _manifests(table)
-    if not ms:
-        raise FileNotFoundError(f"no versions in {table}")
-    by_v = {m["version"]: m for m in ms}
-    if version is not None and as_of_ts is not None:
-        raise ValueError("pass either version or as_of_ts, not both")
-    if as_of_ts is not None:
-        eligible = [m["version"] for m in ms if m.get("ts", 0) <= as_of_ts]
-        if not eligible:
-            raise ValueError(
-                f"no version of {table} existed at ts {as_of_ts}"
-            )
-        v = max(eligible)
-    else:
-        v = ms[-1]["version"] if version is None else version
-    if v not in by_v:
-        raise ValueError(f"version {v} not in {sorted(by_v)}")
-    m = by_v[v]
+    m = _resolve_manifest(table, version, as_of_ts)
     # every scan reads under the version's field-id schema: files
     # written before a RENAME read under this version's names (and
     # time travel to a pre-rename version reads post-rename files
@@ -1047,7 +1012,7 @@ def snapshot_merge_update(
         done = _txn_already_applied(table, txn)
         if done is not None:
             return done
-        latest = _require_latest(table)
+        latest = _resolve_manifest(table)
         try:
             # no rebase: every file is read, so any winner interacts;
             # the CAS loop re-runs the merge against it instead
@@ -1310,9 +1275,9 @@ def _write_dv(
     ).select("rel", "pos")
     tset = set(touched)
     old = {r: e for r, e in m.get("dv", {}).items() if r in tset}
-    prior = _dv_rows(spark, table, old)
+    prior = _dv_rows(spark, table, old.values())
     if prior is not None:
-        prior = prior.filter(F.col("rel").isin(list(old)))
+        prior = prior.filter(F.col("rel").isin(list(old))).select("rel", "pos")
         hits = hits.join(prior, ["rel", "pos"], "left_anti").unionByName(prior)
     # the (rel, pos) positions are tiny next to the touched files: keep
     # them so the counts and the sidecar write share ONE scan
@@ -1375,8 +1340,10 @@ def _commit_files(
       parent's set (``{}`` drops it); None inherits it.
     * New files get fresh stats for ``stats_cols`` (default: the
       ``bounds`` keys, so the NEXT commit on them prunes from the
-      manifest alone) and blooms for ``bloom_cols`` (default: the
-      bound keys the parent already blooms). ``stats`` are the
+      manifest alone; with neither, the parent's statted columns the
+      new schema still has, so a full rewrite keeps the table
+      prunable) and blooms for ``bloom_cols`` (default: the bound keys
+      the parent already blooms). ``stats`` are the
       backfilled ``[lo, hi, null_count]`` entries ``_prune_files``
       returned for the parent's files.
     * ``scanned`` files are read but kept (DV deletes): they count as
@@ -1404,7 +1371,17 @@ def _commit_files(
             _validate_constraints(df, checks)
         data_dir, schema, new_files = _stage_unique(table, df, base)
     new_rows = _collect_rows(table, new_files)
-    new_stats = _collect_stats(table, new_files, stats_cols or keys)
+    stat_cols = stats_cols or keys
+    if not stat_cols and schema:
+        names = {f["name"] for f in schema["fields"]}
+        stat_cols = [
+            c
+            for c in dict.fromkeys(
+                c for st in base.get("stats", {}).values() for c in st
+            )
+            if c in names
+        ]
+    new_stats = _collect_stats(table, new_files, stat_cols)
     new_blooms = _collect_blooms(
         spark, table, new_files, bloom_cols or _bloomed(base, keys)
     )
@@ -1595,7 +1572,7 @@ def snapshot_merge_update_pruned(
         raise ValueError(
             f"prune_col {prune_col!r} must be one of the merge keys {on}"
         )
-    latest = _require_latest(table)
+    latest = _resolve_manifest(table)
     b = updates.agg(
         F.min(prune_col).alias("lo"),
         F.max(prune_col).alias("hi"),
@@ -1650,7 +1627,7 @@ def _delete(
     added no file that may hold keys in [lo, hi] — a winner-inserted
     row in the delete range would have needed this delete, so that
     race conflicts deterministically."""
-    latest = _require_latest(table)
+    latest = _resolve_manifest(table)
     # a POINT delete (lo == hi) consults per-file blooms: on an
     # unclustered key every file's min/max range covers the key, but
     # the bloom rules out files that provably don't hold it
@@ -1869,7 +1846,7 @@ def snapshot_rename_column(
     done = _txn_already_applied(table, txn)
     if done is not None:
         return done
-    latest = _require_latest(table)
+    latest = _resolve_manifest(table)
     names = [f["name"] for f in latest["schema"]["fields"]]
     if old not in names:
         raise ValueError(f"column {old!r} not in {names}")
@@ -1938,7 +1915,7 @@ def snapshot_drop_column(
     done = _txn_already_applied(table, txn)
     if done is not None:
         return done
-    latest = _require_latest(table)
+    latest = _resolve_manifest(table)
     names = [f["name"] for f in latest["schema"]["fields"]]
     if col not in names:
         raise ValueError(f"column {col!r} not in {names}")
@@ -2013,7 +1990,9 @@ def snapshot_set_constraints(
             raise FileNotFoundError(f"no versions in {table}")
         if validate and constraints:
             _validate_constraints(
-                snapshot_read(spark, table, version=latest["version"]),
+                _read_files(
+                    spark, table, latest, _manifest_files(table, latest)
+                ),
                 constraints,
             )
         manifest = copy.deepcopy(latest)
@@ -2088,16 +2067,19 @@ def snapshot_changes(
     and deletes between two committed versions, reconstructed from
     manifests alone — no per-commit change files are ever written.
 
-    Per commit step, the diff is three manifest-derived pieces:
+    The diff is ``snapshot_common.feed_actions``' add/remove action
+    list, the one the ``snapshot_cdf`` stream also runs. Per commit
+    step:
 
     * rows of files ADDED by the commit (minus any deletion vectors
       the commit itself carries on them) → ``insert``;
     * rows of files the commit REMOVED, as they were live at the
       parent (minus the parent's DVs) → ``delete``;
     * rows newly covered by DELETION VECTORS on carried files — the
-      current sidecar positions anti-joined against the parent's →
-      ``delete`` (merge-on-read deletes produce a feed without any
-      file-set change).
+      current sidecar positions minus the parent's → ``delete``
+      (merge-on-read deletes produce a feed without any file-set
+      change); a rollback that shrinks a DV emits the positions it
+      restores → ``insert``.
 
     Layout-only commits (``compact``, ``zorder``) rewrite every file
     without changing a row; they are skipped outright (Delta's
@@ -2105,20 +2087,23 @@ def snapshot_changes(
     UPDATE appears as its delete/insert row pair, exactly like
     Delta's CDF without the optional preimage tracking.
 
-    Output: the table's data columns (latest-schema superset; rows
-    from pre-evolution files carry NULLs in added columns) plus
+    Output: the TO-version's data columns (resolved by field id, so
+    rows from pre-rename files come out under the current names;
+    rows from pre-evolution files carry NULLs in added columns) plus
     ``_change_type`` (``insert`` | ``delete``) and
     ``_commit_version``. Invariant (pinned in tests):
     ``rows(from) + inserts − deletes == rows(to)`` as multisets.
 
-    Scale shape: each step scans ONLY the files that changed hands
-    (added/removed/DV'd) — a small commit's feed reads a small number
-    of files regardless of table size; nothing is collected.
+    Scale shape: however many versions the window spans, the feed is
+    ONE parquet scan of the distinct files that changed hands — each
+    row picks its file's actions from one constant action map — plus
+    ONE scan of the deletion-vector sidecars the actions name, both
+    under explicit schemas, so building the plan runs no Spark job
+    beyond file listing; a small commit's feed reads a small number
+    of files regardless of table size, and nothing is collected.
     ``manifests`` lets a caller that already parsed the version
-    history (the replication loop reads it once per drain, then asks
-    for one version's feed at a time) skip the per-call re-parse."""
-    from pyspark.sql import types as T
-
+    history (the replication loop reads it once per drain) skip the
+    re-parse."""
     ms = {
         m["version"]: m
         for m in (_manifests(table) if manifests is None else manifests)
@@ -2130,105 +2115,70 @@ def snapshot_changes(
             f"versions {from_version}..{to_version} not all in "
             f"{sorted(ms)}"
         )
-
-    def tag(df: DataFrame, change: str, v: int) -> DataFrame:
-        return df.select(
-            "*",
-            F.lit(change).alias("_change_type"),
-            F.lit(v).cast("int").alias("_commit_version"),
+    acts = _feed_actions(table, ms, from_version, to_version)
+    to_m = ms[to_version]
+    schema = _schema_for_read(spark, to_m) or T.StructType.fromJson(
+        to_m["schema"]
+    )
+    if not acts:
+        return spark.createDataFrame(
+            [],
+            schema.add("_change_type", T.StringType()).add(
+                "_commit_version", T.IntegerType()
+            ),
         )
-
-    # every step's scan reads under the TO-version schema resolved by
-    # field id — the feed stays coherent across column renames (rows
-    # from pre-rename files come out under the current names instead
-    # of NULL-filling a second column set in the union)
-    rs = _schema_for_read(spark, ms[to_version])
-    pieces: list[DataFrame] = []
-    for v in range(from_version + 1, to_version + 1):
-        m_cur, m_prev = ms[v], ms[v - 1]
-        if m_cur.get("kind") in _LAYOUT_ONLY_KINDS:
-            continue
-        prev_files = set(_manifest_files(table, m_prev))
-        cur_files = set(_manifest_files(table, m_cur))
-        dv_prev = m_prev.get("dv", {})
-        dv_cur = m_cur.get("dv", {})
-
-        added = sorted(cur_files - prev_files)
-        removed = sorted(prev_files - cur_files)
-        grown = sorted(
-            r for r in (cur_files & prev_files)
-            if r in dv_cur and dv_cur[r].get("dir") != (
-                dv_prev.get(r) or {}
-            ).get("dir")
+    scan = spark.read.schema(schema).parquet(
+        *[os.path.join(table, r) for r in dict.fromkeys(a[2] for a in acts)]
+    )
+    cols = scan.columns
+    by_rel: dict = {}
+    for v, change, rel, keep, drop in acts:
+        by_rel.setdefault(rel, []).append(
+            {"_commit_version": v, "_change_type": change,
+             "__keep": keep, "__drop": drop}
         )
-        # vacuum-horizon guard: this step reconstructs deletes from
-        # files live at the PARENT version — files vacuum may already
-        # have dropped. Fail with a typed retention error naming the
-        # resume point instead of a raw file-not-found mid-scan (or,
-        # worse, a silently empty one). Only what the step actually
-        # reads is demanded: the changed files and their sidecars.
-        needed_dv = {
-            dv_cur[r]["dir"] for r in added + grown if r in dv_cur
-        } | {
-            dv_prev[r]["dir"] for r in removed + grown if r in dv_prev
-        }
-        _require_retained(
-            table, v, added + removed + grown + sorted(needed_dv), ms.values()
+    # the action list as ONE constant {rel: [action]} map: each scanned
+    # row picks its file's actions without a join (a broadcast of a
+    # driver-side frame would cost a Spark job per feed)
+    actions = F.from_json(F.lit(json.dumps(by_rel)), _FEED_ACTIONS)
+    rows = scan.select(
+        "*",
+        _rel_file_expr().alias("__rel"),
+        F.col("_metadata.row_index").alias("__pos"),
+    ).select("*", F.inline(actions[F.col("__rel")]))
+    used = {d for a in acts for d in a[3:] if d is not None}
+    pos = _dv_rows(
+        spark,
+        table,
+        {
+            (e["dir"], r): e
+            for v in range(from_version, to_version + 1)
+            for r, e in ms[v].get("dv", {}).items()
+            if e["dir"] in used
+        }.values(),
+    )
+    if pos is not None:
+        # an action emits the positions in its keep sidecar (every
+        # position when it has none) that its drop sidecar lacks; both
+        # joins probe the SAME position frame, so it is scanned and
+        # broadcast once
+        hits = pos.select(
+            F.col("dir").alias("__dir"),
+            F.col("rel").alias("__rel"),
+            F.col("pos").alias("__pos"),
+            F.lit(True).alias("__hit"),
         )
-        if added:
-            pieces.append(tag(_scan_minus_dv(
-                spark, table,
-                [os.path.join(table, r) for r in added],
-                {r: dv_cur[r] for r in added if r in dv_cur},
-                schema=rs,
-            ), "insert", v))
-        if removed:
-            pieces.append(tag(_scan_minus_dv(
-                spark, table,
-                [os.path.join(table, r) for r in removed],
-                {r: dv_prev[r] for r in removed if r in dv_prev},
-                schema=rs,
-            ), "delete", v))
-        # carried files whose DV grew: the freshly-deleted positions
-        if grown:
-            cur_pos = _dv_rows(
-                spark, table, {r: dv_cur[r] for r in grown}
-            ).filter(F.col("rel").isin(grown))
-            prev_entries = {r: dv_prev[r] for r in grown if r in dv_prev}
-            if prev_entries:
-                prev_pos = _dv_rows(spark, table, prev_entries).filter(
-                    F.col("rel").isin(list(prev_entries))
-                )
-                cur_pos = cur_pos.join(prev_pos, ["rel", "pos"], "left_anti")
-            reader = (
-                spark.read.schema(rs) if rs is not None else spark.read
+        for side in ("__keep", "__drop"):
+            rows = (
+                rows.withColumnRenamed(side, "__dir")
+                .join(hits, ["__dir", "__rel", "__pos"], "left")
+                .withColumnsRenamed({"__dir": side, "__hit": f"{side}_hit"})
             )
-            scan = reader.parquet(
-                *[os.path.join(table, r) for r in grown]
-            )
-            cols = scan.columns
-            newly_deleted = (
-                scan.withColumn("__cdf_rel", _rel_file_expr())
-                .withColumn("__cdf_pos", F.col("_metadata.row_index"))
-                .join(
-                    cur_pos,
-                    (F.col("__cdf_rel") == F.col("rel"))
-                    & (F.col("__cdf_pos") == F.col("pos")),
-                    "left_semi",
-                )
-                .select(*cols)
-            )
-            pieces.append(tag(newly_deleted, "delete", v))
-
-    if not pieces:
-        schema = T.StructType.fromJson(ms[to_version]["schema"]).add(
-            "_change_type", T.StringType()
-        ).add("_commit_version", T.IntegerType())
-        return spark.createDataFrame([], schema)
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
+        rows = rows.filter(
+            (F.col("__keep").isNull() | F.col("__keep_hit").isNotNull())
+            & F.col("__drop_hit").isNull()
+        )
+    return rows.select(*cols, "_change_type", "_commit_version")
 
 
 def _apply_cdc_version(
@@ -2298,7 +2248,7 @@ def _apply_cdc_version_once(
     current latest manifest (see there for semantics): ``dels`` become
     deletion vectors on the files pruning cannot exclude, ``ins`` is
     staged as appended files, in ONE ``cdc_apply`` commit."""
-    latest = _require_latest(table)
+    latest = _resolve_manifest(table)
     bounds = {k: _NO_MATCH for k in keys}
     touched, stats = [], {}
     if dels is not None:
@@ -2362,13 +2312,11 @@ def replicate_snapshot_changes(
       no side files, and a crashed/replayed application of an
       already-applied version is a no-op by the ledger's ``<= max``
       rule;
-    * versions apply ONE AT A TIME as ONE ``cdc_apply`` commit each
-      (``_apply_cdc_version``): deletes become deletion vectors on
-      the pruned files, inserts become appended files, every other
-      file is inherited BY REFERENCE — O(changed rows) per source
-      version, never a replica rewrite. A key updated in two
-      consecutive source versions still sees its delete/insert pairs
-      in order, because versions are never folded;
+    * each fold window (see ``fold_versions`` below) applies as ONE
+      ``cdc_apply`` commit (``_apply_cdc_version``): deletes become
+      deletion vectors on the pruned files, inserts become appended
+      files, every other file is inherited BY REFERENCE — O(changed
+      rows) per window, never a replica rewrite;
     * SCHEMA commits replay as schema commits: a source
       ``rename_column``/``drop_column`` runs the same metadata-only
       commit on the replica (the feed is empty — without the replay,
@@ -2382,9 +2330,8 @@ def replicate_snapshot_changes(
       to N consecutive ROW-CHANGE source versions as ONE
       ``cdc_apply`` commit — a replica catching up over thousands of
       small commits stops paying per-version Spark-job + manifest
-      overhead (at this harness's bench scale a 2-version drain costs
-      ~12 Spark jobs per version in feed reconstruction + apply; the
-      fold pays that once per window). The fold sequences the
+      overhead (the window's feed is one scan and its apply one
+      commit, however many versions it folds). The fold sequences the
       combined feed correctly for multisets: deletes are the union of
       all deleted keys in the window (a later feed insert adds a NEW
       row, never resurrects the old one), and an insert survives
@@ -2419,9 +2366,7 @@ def replicate_snapshot_changes(
         src_v0 = src_ms[0]
         # a vacuumed v0 must surface as the typed retention error the
         # rest of the feed raises, not a raw parquet file-not-found
-        _require_retained(
-            src_table, 0, _manifest_files(src_table, src_v0), src_ms.values()
-        )
+        _require_retained(src_table, 0, _manifest_files(src_table, src_v0))
         # carry v0's CHECK constraints: without them the replica's
         # manifests lack enforcement until a later set_constraints
         # commit happens to replay

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -21,3 +23,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_CORRECTNESS
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs launched inside the block: yields a
+    callable returning how many jobs the block's job group has run so
+    far (a test calls it after the block to get the total)."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

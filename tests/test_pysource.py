@@ -602,6 +602,71 @@ def test_snapshot_cdf_streaming_replica_stays_identical(spark, tmp_path):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def test_snapshot_cdf_stream_matches_batch_feed_on_every_window(
+    spark, tmp_path
+):
+    """The stream reader and snapshot_changes run one action list:
+    over every (a, b) window of a mixed history — a write with stats,
+    two DV deletes on one file, a rollback that shrinks that DV, a
+    pruned merge with insert, a full merge, compact and a rename —
+    they emit the same rows as multisets."""
+    from collections import Counter
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from exceldatatransform_py_spark.sources import snapshots as snap
+    from exceldatatransform_py_spark.sources.pysource import (
+        SnapshotCDFStreamReader,
+    )
+
+    t = str(tmp_path / "parity")
+    base = spark.createDataFrame(
+        [(i, float(i)) for i in range(40)], "k long, x double"
+    )
+    snap.snapshot_write(
+        t, base.repartitionByRange(2, "k").sortWithinPartitions("k"),
+        stats_cols=["k"],
+    )                                                          # v0
+    snap.snapshot_delete_dv(spark, t, "k", 3, 4)               # v1
+    snap.snapshot_delete_dv(spark, t, "k", 5, 6)               # v2: same file
+    snap.rollback(t, 1)                                        # v3: DV shrinks
+    snap.snapshot_merge_update_pruned(
+        spark, t,
+        spark.createDataFrame([(30, -1.0), (99, 9.0)], "k long, x double"),
+        on=["k"], update_cols=["x"], when_not_matched_insert=True,
+    )                                                          # v4
+    snap.snapshot_merge_update(
+        spark, t, spark.createDataFrame([(10, -2.0)], "k long, x double"),
+        on=["k"], update_cols=["x"],
+    )                                                          # v5
+    snap.snapshot_compact(spark, t, target_rows_per_file=1000)  # v6
+    snap.snapshot_rename_column(t, "x", "amount")              # v7
+
+    windows = [(a, b) for a in range(7) for b in range(a + 1, 8)]
+    # one collect for every window's batch feed (positional union: the
+    # windows before the rename name the column x)
+    batch = {w: Counter() for w in windows}
+    for r in reduce(DataFrame.unionAll, [
+        snap.snapshot_changes(spark, t, a, b).select(
+            F.lit(a).alias("a"), F.lit(b).alias("b"), "*"
+        )
+        for a, b in windows
+    ]).collect():
+        batch[(r[0], r[1])][tuple(r[2:])] += 1
+    reader = SnapshotCDFStreamReader({"path": t})
+    for a, b in windows:
+        stream = Counter(
+            reader.readBetweenOffsets({"version": a}, {"version": b})
+        )
+        assert stream == batch[(a, b)], f"window {a}->{b}"
+    # the rollback restores k = 5, 6
+    assert batch[(2, 3)] == Counter(
+        {(5, 5.0, "insert", 3): 1, (6, 6.0, "insert", 3): 1}
+    )
+
+
 def test_snapshot_cdf_stream_reads_across_rename(spark, tmp_path):
     """A stream started AFTER a column rename emits pre-rename files'
     rows under the new name (the Python reader resolves file columns

@@ -351,6 +351,34 @@ def test_manifest_stats_prune_without_footer_reads(spark, table):
     got = {r.k: r.x for r in snapshot_read(spark, table).collect()}
     assert got[150] == -150.0 and got[7] == -7.0
 
+    # a full-read merge passes neither stats_cols nor bounds: its
+    # rewrite keeps the parent's statted columns, so the next pruned
+    # merge again reads no pre-existing footer
+    S.snapshot_merge_update(
+        spark, table, spark.createDataFrame([(9, -9.0)], "k long, x double"),
+        on=["k"], update_cols=["x"],
+    )
+    m3 = S._latest_manifest(table)
+    assert set(m3["stats"]) == set(m3["files"])
+    assert all("k" in st for st in m3["stats"].values())
+    old_dirs = {os.path.dirname(f) for f in m3["files"]}
+
+    def forbid_full_merge_reads(path, col):
+        assert not any(f"/{d}/" in path for d in old_dirs), (
+            f"pre-existing footer read: {path}"
+        )
+        return real_minmax(path, col)
+
+    ups3 = spark.createDataFrame([(120, -120.0)], "k long, x double")
+    with mock.patch.object(
+        S, "_footer_minmax", side_effect=forbid_full_merge_reads
+    ):
+        S.snapshot_merge_update_pruned(
+            spark, table, ups3, on=["k"], update_cols=["x"]
+        )
+    got = {r.k: r.x for r in snapshot_read(spark, table).collect()}
+    assert got[120] == -120.0 and got[9] == -9.0 and len(got) == 200
+
 
 def test_snapshot_compact_preserves_rows_and_history(spark, table):
     from exceldatatransform_py_spark.sources.snapshots import (
@@ -412,7 +440,8 @@ def test_snapshot_history_and_schema_evolution(spark, table):
     assert [(h["version"], h["kind"]) for h in hist] == [
         (0, "overwrite"), (1, "overwrite"), (2, "merge_update_pruned"),
     ]
-    assert hist[0]["has_stats"] and not hist[1]["has_stats"]
+    # the overwrite without stats_cols keeps v0's statted column k
+    assert [h["has_stats"] for h in hist] == [True, True, True]
     assert snapshot_read(spark, table, 0).columns == ["k", "x"]
     assert snapshot_read(spark, table, 1).columns == ["k", "x", "tag"]
     got = {r.k: (r.x, r.tag) for r in snapshot_read(spark, table).collect()}
@@ -2241,6 +2270,28 @@ def test_write_reads_only_the_parent_manifest(spark, table):
     assert ms[3]["constraints"] == {"pos": "v >= 0"}
 
 
+def test_latest_read_parses_only_the_latest_manifest(spark, table):
+    """snapshot_read and snapshot_count of the latest version parse the
+    newest manifest alone; only time travel loads the history."""
+    from unittest import mock
+
+    from exceldatatransform_py_spark.sources import snapshot_common
+    from exceldatatransform_py_spark.sources import snapshots as snap
+
+    df = spark.range(5).select(F.col("id"), (F.col("id") * 2).alias("v"))
+    for _ in range(3):
+        snap.snapshot_write(table, df)
+    snap.snapshot_delete_dv(spark, table, "id", 1, 1)
+    parsed = AssertionError("history parsed")
+    with mock.patch.object(
+        snapshot_common, "load_manifests", side_effect=parsed
+    ), mock.patch.object(snap, "_manifests", side_effect=parsed):
+        assert snap.snapshot_count(table) == 4
+        got = sorted(r.id for r in snap.snapshot_read(spark, table).collect())
+        assert got == [0, 2, 3, 4]
+    assert snap.snapshot_count(table, version=2) == 5
+
+
 # ---------------------------------------------------------------------------
 # Manifest bloom filters: point-lookup file skipping where min/max
 # provably cannot prune.
@@ -2530,6 +2581,53 @@ def test_change_feed_scans_only_changed_files(spark, table):
     rows = feed.collect()
     assert sorted(r.k for r in rows) == list(range(10, 20))
     assert all(r._change_type == "delete" for r in rows)
+
+
+def test_change_feed_plan_build_jobs_do_not_grow_with_window(spark, table):
+    """Building snapshot_changes' plan runs no more Spark jobs for a
+    43-version window than for a 2-version one (at most two: file
+    listing), because the feed is one scan of the action list's files
+    under an explicit schema. The long window is rollback-heavy, and
+    still satisfies rows(a) + inserts − deletes == rows(b), rows a
+    rollback restores from a shrunken deletion vector included."""
+    from collections import Counter
+
+    from exceldatatransform_py_spark.sources import snapshots as snap
+    from tests.conftest import spark_jobs
+
+    base = spark.createDataFrame(
+        [(i, float(i)) for i in range(40)], "k long, x double"
+    )
+    snap.snapshot_write(
+        table, base.repartitionByRange(2, "k").sortWithinPartitions("k"),
+        stats_cols=["k"],
+    )                                                          # v0
+    snap.snapshot_delete_dv(spark, table, "k", 3, 4)           # v1
+    snap.snapshot_delete_dv(spark, table, "k", 5, 6)           # v2: DV grows
+    snap.snapshot_merge_update_pruned(
+        spark, table,
+        spark.createDataFrame([(30, -1.0), (99, 9.0)], "k long, x double"),
+        on=["k"], update_cols=["x"], when_not_matched_insert=True,
+    )                                                          # v3
+    for i in range(40):  # metadata-only commits that change rows
+        snap.rollback(table, (1, 2, 3)[i % 3])
+    n = snap.latest_version(table)
+
+    def rows_at(v):
+        return Counter(
+            (r.k, r.x) for r in snap.snapshot_read(spark, table, version=v).collect()
+        )
+
+    jobs = {}
+    for b in (2, n):
+        with spark_jobs(spark) as count:
+            feed = snap.snapshot_changes(spark, table, 0, b)
+        jobs[b] = count()
+        acc = rows_at(0)
+        for r in feed.collect():
+            acc[(r.k, r.x)] += 1 if r._change_type == "insert" else -1
+        assert {k: c for k, c in acc.items() if c} == rows_at(b)
+    assert jobs[n] <= 2 and jobs[n] == jobs[2], jobs
 
 
 def test_replicate_snapshot_changes_incremental_loop(spark, table, tmp_path):
