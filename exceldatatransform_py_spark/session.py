@@ -30,24 +30,46 @@ def driver_memory(total_mb: int | None) -> str:
 
 
 def _memory_total_mb() -> int | None:
-    """The memory this process may use, in MB: the cgroup v2
-    ``memory.max`` when it sets a limit, else ``MemTotal``; read-only,
-    None when neither is readable."""
-    try:
-        with open("/sys/fs/cgroup/memory.max") as f:
-            limit = f.read().strip()
-        if limit != "max":
-            return int(limit) // (1024 * 1024)
-    except (OSError, ValueError):
-        pass
+    """The memory this process may use, in MB: the smallest of
+    ``MemTotal`` and the limits of the process's own cgroup and its
+    ancestors (cgroup v2 ``memory.max``, v1 ``memory.limit_in_bytes``;
+    the cgroup path comes from /proc/self/cgroup). Read-only; None
+    when nothing is readable."""
+    limits = []
     try:
         with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemTotal:"):
-                    return int(line.split()[1]) // 1024
+            limits += [
+                int(line.split()[1]) * 1024
+                for line in f
+                if line.startswith("MemTotal:")
+            ]
     except (OSError, ValueError, IndexError):
         pass
-    return None
+    try:
+        with open("/proc/self/cgroup") as f:
+            groups = [line.rstrip("\n").split(":", 2) for line in f]
+    except OSError:
+        groups = []
+    for g in groups:
+        if len(g) != 3:
+            continue
+        if g[1] == "":
+            root, name = "/sys/fs/cgroup", "memory.max"
+        elif "memory" in g[1].split(","):
+            root, name = "/sys/fs/cgroup/memory", "memory.limit_in_bytes"
+        else:
+            continue
+        path = g[2]
+        while True:
+            try:
+                with open(os.path.join(root + path, name)) as f:
+                    limits.append(int(f.read()))
+            except (OSError, ValueError):  # absent, or "max"
+                pass
+            if path in ("/", ""):
+                break
+            path = os.path.dirname(path)
+    return min(limits) // (1024 * 1024) if limits else None
 
 
 def get_spark(

@@ -93,11 +93,10 @@ _DVDIR = "_dv"
 #: inferred read costs a Spark job).
 _DV_SCHEMA = "rel string, pos long"
 
-#: the change feed's constant action map: rel → its actions, each
-#: ``(version, change, keep sidecar, drop sidecar)``
+#: the change feed's action rows, in ``feed_actions``' tuple order
 _FEED_ACTIONS = (
-    "map<string, array<struct<_commit_version: int, _change_type: string, "
-    "__keep: string, __drop: string>>>"
+    "array<struct<_commit_version: int, _change_type: string, "
+    "__rel: string, __keep: string, __drop: string>>"
 )
 
 #: a version's total deleted-position count below this is broadcast
@@ -837,33 +836,24 @@ def _rel_file_expr():
     """Relative ``data_dir/file.parquet`` path of the scanned row's
     file — manifests always reference files exactly one directory
     below the table root, so the last two path segments ARE the rel
-    key used throughout the manifest."""
-    return F.regexp_extract(
-        F.col("_metadata.file_path"), r"([^/]+/[^/]+)$", 1
-    )
+    key used throughout the manifest. (A per-row regex costs several
+    times the scan itself.)"""
+    return F.substring_index(F.col("_metadata.file_path"), "/", -2)
 
 
 def _dv_rows(spark: SparkSession, table: str, entries) -> DataFrame | None:
-    """(rel, pos, dir) rows of every sidecar directory the deletion-
-    vector ``entries`` (``{"dir", "count"}`` dicts) reference, read
-    under ``_DV_SCHEMA`` and broadcast when the entries' cached
-    cardinalities say it's small. ``dir`` names each row's sidecar
-    directory. Rows for files absent from the current scan are
-    harmless — every join key includes the rel path, and rel paths
-    are never reused across versions."""
+    """(rel, pos) rows of every sidecar directory the deletion-vector
+    ``entries`` (``{"dir", "count"}`` dicts) reference, read under
+    ``_DV_SCHEMA`` and broadcast when the entries' cached
+    cardinalities say it's small. Rows for files absent from the
+    current scan are harmless — every join key includes the rel path,
+    and rel paths are never reused across versions."""
     entries = list(entries)
     dirs = sorted({e["dir"] for e in entries})
     if not dirs:
         return None
-    rows = (
-        spark.read.schema(_DV_SCHEMA)
-        .parquet(*[os.path.join(table, d) for d in dirs])
-        .withColumn(
-            "dir",
-            F.regexp_extract(
-                F.col("_metadata.file_path"), r"([^/]+/[^/]+)/[^/]+$", 1
-            ),
-        )
+    rows = spark.read.schema(_DV_SCHEMA).parquet(
+        *[os.path.join(table, d) for d in dirs]
     )
     total = sum(int(e.get("count", 0)) for e in entries)
     return F.broadcast(rows) if total <= _DV_BROADCAST_MAX else rows
@@ -1277,7 +1267,7 @@ def _write_dv(
     old = {r: e for r, e in m.get("dv", {}).items() if r in tset}
     prior = _dv_rows(spark, table, old.values())
     if prior is not None:
-        prior = prior.filter(F.col("rel").isin(list(old))).select("rel", "pos")
+        prior = prior.filter(F.col("rel").isin(list(old)))
         hits = hits.join(prior, ["rel", "pos"], "left_anti").unionByName(prior)
     # the (rel, pos) positions are tiny next to the touched files: keep
     # them so the counts and the sidecar write share ONE scan
@@ -2095,12 +2085,12 @@ def snapshot_changes(
     ``rows(from) + inserts − deletes == rows(to)`` as multisets.
 
     Scale shape: however many versions the window spans, the feed is
-    ONE parquet scan of the distinct files that changed hands — each
-    row picks its file's actions from one constant action map — plus
-    ONE scan of the deletion-vector sidecars the actions name, both
-    under explicit schemas, so building the plan runs no Spark job
-    beyond file listing; a small commit's feed reads a small number
-    of files regardless of table size, and nothing is collected.
+    ONE parquet scan of the distinct files that changed hands, hash-
+    joined to a small broadcast action frame on the file, plus ONE
+    scan of the deletion-vector sidecars the actions name — both under
+    explicit schemas, so building the plan runs no Spark job beyond
+    file listing; a small commit's feed reads a small number of files
+    regardless of table size, and nothing is collected.
     ``manifests`` lets a caller that already parsed the version
     history (the replication loop reads it once per drain) skip the
     re-parse."""
@@ -2131,21 +2121,18 @@ def snapshot_changes(
         *[os.path.join(table, r) for r in dict.fromkeys(a[2] for a in acts)]
     )
     cols = scan.columns
-    by_rel: dict = {}
-    for v, change, rel, keep, drop in acts:
-        by_rel.setdefault(rel, []).append(
-            {"_commit_version": v, "_change_type": change,
-             "__keep": keep, "__drop": drop}
-        )
-    # the action list as ONE constant {rel: [action]} map: each scanned
-    # row picks its file's actions without a join (a broadcast of a
-    # driver-side frame would cost a Spark job per feed)
-    actions = F.from_json(F.lit(json.dumps(by_rel)), _FEED_ACTIONS)
+    # the action list as a small broadcast frame, built in the JVM from
+    # one JSON literal (no Python worker), hash-joined on the row's file
+    names = ("_commit_version", "_change_type", "__rel", "__keep", "__drop")
+    actions = spark.range(1).select(F.inline(F.from_json(
+        F.lit(json.dumps([dict(zip(names, a)) for a in acts])),
+        _FEED_ACTIONS,
+    )))
     rows = scan.select(
         "*",
         _rel_file_expr().alias("__rel"),
         F.col("_metadata.row_index").alias("__pos"),
-    ).select("*", F.inline(actions[F.col("__rel")]))
+    ).join(F.broadcast(actions), "__rel")
     used = {d for a in acts for d in a[3:] if d is not None}
     pos = _dv_rows(
         spark,
@@ -2163,7 +2150,11 @@ def snapshot_changes(
         # joins probe the SAME position frame, so it is scanned and
         # broadcast once
         hits = pos.select(
-            F.col("dir").alias("__dir"),
+            # the sidecar directory: the path's two segments above the file
+            F.substring_index(
+                F.substring_index(F.col("_metadata.file_path"), "/", -3),
+                "/", 2,
+            ).alias("__dir"),
             F.col("rel").alias("__rel"),
             F.col("pos").alias("__pos"),
             F.lit(True).alias("__hit"),

@@ -2623,11 +2623,11 @@ def test_change_feed_plan_build_jobs_do_not_grow_with_window(spark, table):
         with spark_jobs(spark) as count:
             feed = snap.snapshot_changes(spark, table, 0, b)
         jobs[b] = count()
-        acc = rows_at(0)
-        for r in feed.collect():
-            acc[(r.k, r.x)] += 1 if r._change_type == "insert" else -1
-        assert {k: c for k, c in acc.items() if c} == rows_at(b)
     assert jobs[n] <= 2 and jobs[n] == jobs[2], jobs
+    acc = rows_at(0)
+    for r in feed.collect():
+        acc[(r.k, r.x)] += 1 if r._change_type == "insert" else -1
+    assert {k: c for k, c in acc.items() if c} == rows_at(n)
 
 
 def test_replicate_snapshot_changes_incremental_loop(spark, table, tmp_path):
