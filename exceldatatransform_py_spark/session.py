@@ -129,6 +129,15 @@ def get_spark(
             f"-XX:CICompilerCount={max(2, min(18, cpus // 2 + 2))} "
             "-XX:ReservedCodeCacheSize=512m",
         )
+        # Generated classes are cached by source; a query shape that
+        # repeats reuses its class only while it stays in the cache.
+        # The default holds 100, but a steady cycle of the perfbench
+        # `relational` workload uses 110 classes and one of `ingest`
+        # 282 plus about 4 per cycle, so at 100 every cycle evicted
+        # and recompiled (about 80 compiles per `relational` cycle).
+        # 512 holds both; cached classes live in metaspace, so the
+        # size stays near the working sets rather than unbounded.
+        .config("spark.sql.codegen.cache.maxEntries", "512")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # Deterministic parquet scans at small SF (fewer, stabler splits).

@@ -397,6 +397,7 @@ def register(spark) -> None:
 from exceldatatransform_py_spark.sources.snapshot_common import (
     SnapshotStreamSchemaChangedError,
     feed_actions,
+    latest_manifest,
     load_manifests,
     manifest_files,
     require_retained,
@@ -682,11 +683,12 @@ class SnapshotCDFStreamReader(SimpleDataSourceStreamReader):
                     yield row + (change, v)
 
     def read(self, start: dict):
-        ms = {m["version"]: m for m in load_manifests(self.table)}
-        latest = max(ms)
+        # an idle trigger parses only the newest manifest
+        latest = latest_manifest(self.table)["version"]
         v0 = int(start["version"])
         if latest <= v0:
             return iter([]), start
+        ms = {m["version"]: m for m in load_manifests(self.table)}
         end = {"version": latest}
         # materialized: the prefetch cache copy.copy()s the iterator,
         # which a generator cannot survive (list iterators can)

@@ -10,11 +10,28 @@ DataFrame that callers broadcast. S6 — parquet/csv/json scans are
 Spark built-ins; `read_table` is the thin entry point the whole
 engine uses, keeping predicate pushdown / column pruning intact
 (never collect-then-recreate).
+
+Schema cache: a schema-less ``spark.read.parquet`` launches one Spark
+job to infer the schema, and `read_table` is called on every plan
+build, so `read_table` remembers each inferred ``StructType`` and
+reads later calls with ``spark.read.schema(s).parquet`` (no job). The
+key is the file's identity — real path, ``st_ino``, ``st_size``,
+``st_mtime_ns`` — plus the session confs that change what inference
+returns (``_SCHEMA_CONFS``). An entry is stored only when the file's
+mtime is at least ``_RACY_NS`` older than the inference (the racy-git
+rule: a rewrite within the timestamp granularity could keep all four
+identity fields, so a young file is inferred again every time). The
+cache is an LRU of ``_SCHEMA_CACHE_SIZE`` entries; a path that is not
+a local regular file (a directory, a remote URI) is read as before.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+import time
+from collections import OrderedDict
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +51,56 @@ TABLES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
+
+#: the session confs that change the schema parquet inference returns
+_SCHEMA_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMA_CACHE_SIZE = 256
+#: a file modified less than this before its inference is not cached
+_RACY_NS = 2_000_000_000
+_schema_cache: OrderedDict[tuple, T.StructType] = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def _file_key(path: str) -> tuple | None:
+    """(real path, inode, size, mtime ns) of a local regular file, else
+    None."""
+    try:
+        real = os.path.realpath(path)
+        st = os.stat(real)
+    except (OSError, ValueError):
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (real, st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the inference job when this
+    file's schema was already inferred under the same confs (see the
+    module docstring)."""
+    ident = _file_key(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    key = ident + tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
+    with _schema_lock:
+        schema = _schema_cache.get(key)
+        if schema is not None:
+            _schema_cache.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    inferred_at = time.time_ns()
+    df = spark.read.parquet(path)
+    if ident[3] <= inferred_at - _RACY_NS and _file_key(path) == ident:
+        with _schema_lock:
+            _schema_cache[key] = df.schema
+            while len(_schema_cache) > _SCHEMA_CACHE_SIZE:
+                _schema_cache.popitem(last=False)
+    return df
 
 
 def read_table(
@@ -62,7 +129,7 @@ def read_table(
         # generations store TIMESTAMP(MICROS), which reads natively —
         # only normalize when the column actually surfaces as a long.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn(
                 "ts",
@@ -71,7 +138,7 @@ def read_table(
         else:
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     else:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if fan_out:
         df = df.repartition(spark.sparkContext.defaultParallelism)
     return df

@@ -238,15 +238,23 @@ def _bloom_bit(seed: int, col: str):
 
 
 def _collect_blooms(
-    spark: SparkSession, table: str, rel_files: list[str], cols: Sequence[str]
+    spark: SparkSession,
+    table: str,
+    rel_files: list[str],
+    cols: Sequence[str],
+    schema: dict | None,
 ) -> dict:
     """{rel file: {col: hex bitmap}} in ONE distributed scan of the
     newly committed files (grouped by the reader's ``_metadata`` file
     path) — the cluster computes the blooms, the driver only packs
-    ≤ m distinct bit positions per (file, col) into a hex string."""
+    ≤ m distinct bit positions per (file, col) into a hex string. The
+    files are read under ``schema``, the JSON schema they were staged
+    with, so the scan infers nothing."""
     if not rel_files or not cols:
         return {}
-    scan = spark.read.parquet(*[os.path.join(table, r) for r in rel_files])
+    scan = spark.read.schema(T.StructType.fromJson(schema)).parquet(
+        *[os.path.join(table, r) for r in rel_files]
+    )
     aggs = []
     for c in cols:
         for si, s in enumerate(_BLOOM_SEEDS):
@@ -1373,7 +1381,7 @@ def _commit_files(
         ]
     new_stats = _collect_stats(table, new_files, stat_cols)
     new_blooms = _collect_blooms(
-        spark, table, new_files, bloom_cols or _bloomed(base, keys)
+        spark, table, new_files, bloom_cols or _bloomed(base, keys), schema
     )
     dv_dir, dv_changes = dv or (None, {})
     stats = stats or {}

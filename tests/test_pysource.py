@@ -886,6 +886,29 @@ def test_snapshot_cdf_stream_retention_error_past_vacuum(spark, tmp_path):
     assert ei.value.horizon == 2
 
 
+def test_snapshot_cdf_idle_read_parses_no_history(spark, tmp_path, monkeypatch):
+    """A trigger with no new version reads only the newest manifest;
+    the history is loaded once there is a version to emit."""
+    from exceldatatransform_py_spark.sources import pysource
+    from exceldatatransform_py_spark.sources import snapshots as snap
+
+    src = str(tmp_path / "idle")
+    df = spark.createDataFrame([(1,)], "k long").coalesce(1)
+    snap.snapshot_write(src, df)                               # v0
+    reader = pysource.SnapshotCDFStreamReader({"path": src})
+    real = pysource.load_manifests
+    calls = []
+    monkeypatch.setattr(
+        pysource, "load_manifests", lambda t: calls.append(t) or real(t)
+    )
+    it, end = reader.read({"version": 0})
+    assert list(it) == [] and end == {"version": 0} and calls == []
+    snap.snapshot_write(src, df)                               # v1
+    it, end = reader.read({"version": 0})
+    assert end == {"version": 1} and len(calls) == 1
+    assert sorted(r[-2] for r in it) == ["delete", "insert"]
+
+
 def test_snapshot_cdf_stream_retype_mid_stream_raises(spark, tmp_path):
     """A mid-stream commit that RETYPES a column under the same field
     id (full rewrite with a cast) must raise the typed
