@@ -31,6 +31,9 @@ scorer is the drop-in upgrade; the plan shape stays identical.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -55,58 +58,77 @@ def _sqdist(xs: Column, cs: Column) -> Column:
     )
 
 
-def _lloyd(
-    pts: DataFrame, id_col: str, k: int, iters: int
-) -> tuple[DataFrame, DataFrame]:
-    """Shared Lloyd loop over pre-quantized points ``(id_col, xs)``:
-    ``iters`` assignment rounds, ``iters - 1`` centroid updates.
-    Returns ``(cents, assigned)`` — the centroids the FINAL assignment
-    scored against (``cid``, ``cs array<bigint>``) and that assignment
-    (``id_col, xs, cid, d2``). Both are lazy; a caller consuming only
-    one never executes the other's tail."""
-    # Centroids as ONE aggregated row holding array<struct<cid, cs>> —
-    # the broadcast-scalar pattern: scoring is then a map-only pass
-    # (BroadcastNestedLoopJoin of a 1-row side), never a shuffle of
-    # the points.
-    cents = pts.filter(F.col(id_col) < k).select(
-        F.col(id_col).alias("cid"), F.col("xs").alias("cs")
+def _carr(cents: DataFrame, key: Sequence[str] = ()) -> DataFrame:
+    """Every centroid ``(*key, cid, cs)`` folded to ONE sorted row
+    ``__carr`` — the broadcast-scalar pattern: scoring against it is a
+    map-only pass (BroadcastNestedLoopJoin of a 1-row side), never a
+    shuffle of the points."""
+    return cents.agg(
+        F.sort_array(F.collect_list(F.struct(*key, "cid", "cs"))).alias("__carr")
     )
 
+
+def _assign(
+    pts: DataFrame, cents: DataFrame, id_col: str, key: Sequence[str] = ()
+) -> DataFrame:
+    """One assignment step: every point ``(id_col, *key, xs)`` scored
+    against the centroids sharing its key — a lexicographic
+    ``(d2, cid)`` argmin, exact integer distances, ties → lowest cid.
+    Output ``(id_col, *key, xs, cid, d2)``."""
+    entries = reduce(
+        lambda arr, c: F.filter(arr, lambda e: e[c] == F.col(c)),
+        key,
+        F.col("__carr"),
+    )
+    best = F.array_min(
+        F.transform(
+            entries,
+            lambda e: F.struct(
+                _sqdist(F.col("xs"), e["cs"]).alias("d2"), e["cid"].alias("cid")
+            ),
+        )
+    )
+    return pts.crossJoin(F.broadcast(_carr(cents, key))).select(
+        id_col, *key, "xs", best["cid"].alias("cid"), best["d2"].alias("d2")
+    )
+
+
+def _lloyd(
+    pts: DataFrame, id_col: str, k: int, iters: int, key: Sequence[str] = ()
+) -> tuple[DataFrame, DataFrame]:
+    """The one Lloyd loop over pre-quantized points ``(id_col, *key,
+    xs)``, one independent quantizer per ``key`` value (``()`` for
+    k-means / IVF centroids, ``("sub",)`` for PQ codebooks):
+    ``iters`` assignment rounds, ``iters - 1`` centroid updates.
+    Returns ``(cents, assigned)`` — the centroids the FINAL assignment
+    scored against (``*key, cid, cs array<bigint>``) and that
+    assignment (``_assign``'s columns). Both are lazy; a caller
+    consuming only one never executes the other's tail."""
+    # Seeds: the k smallest ids PRESENT, each seeding a centroid under
+    # every key (every id carries every key, so the k smallest
+    # (key, id) rows name them). A distributed top-k —
+    # TakeOrderedAndProject, never a shuffle of the points; on a dense
+    # 0-based corpus this is exactly ``id < k``, what the oracle replays.
+    seeds = pts.orderBy(*key, id_col).limit(k)
+    cents = pts.join(F.broadcast(seeds.select(id_col)), id_col).select(
+        *key, F.col(id_col).alias("cid"), F.col("xs").alias("cs")
+    )
     assigned = None
     for it in range(iters):
-        carr = cents.agg(
-            F.sort_array(F.collect_list(F.struct("cid", "cs"))).alias("carr")
-        )
-        scored = pts.crossJoin(F.broadcast(carr))
-        best = F.array_min(
-            F.transform(
-                "carr",
-                lambda c: F.struct(
-                    _sqdist(F.col("xs"), c["cs"]).alias("d2"),
-                    c["cid"].alias("cid"),
-                ),
-            )
-        )
-        assigned = scored.select(
-            id_col, "xs", best["cid"].alias("cid"), best["d2"].alias("d2")
-        )
+        assigned = _assign(pts, cents, id_col, key)
         if it == iters - 1:
             break
-        # Update: per-(cid, dim) exact sums — shuffle volume k·dim
-        # regardless of corpus size — then floor-requantized means,
-        # reassembled into per-centroid arrays ordered by dim.
-        ex = assigned.select("cid", F.posexplode("xs").alias("i", "x"))
-        sums = ex.groupBy("cid", "i").agg(
+        # Update: per-(*key, cid, dim) exact sums — shuffle volume
+        # keys·k·dim regardless of corpus size — then floor-requantized
+        # means, reassembled into per-centroid arrays ordered by dim.
+        ex = assigned.select(*key, "cid", F.posexplode("xs").alias("i", "x"))
+        sums = ex.groupBy(*key, "cid", "i").agg(
             F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
         )
-        cx = sums.select(
-            "cid",
-            "i",
-            F.floor(F.col("s").cast("double") / F.col("n")).cast("long").alias("cx"),
-        )
-        cents = cx.groupBy("cid").agg(
+        cx = F.floor(F.col("s").cast("double") / F.col("n")).cast("long")
+        cents = sums.groupBy(*key, "cid").agg(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cx"))),
+                F.array_sort(F.collect_list(F.struct("i", cx.alias("cx")))),
                 lambda t: t["cx"],
             ).alias("cs")
         )

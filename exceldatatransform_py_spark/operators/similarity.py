@@ -26,6 +26,8 @@ driver.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 
 from pyspark.sql import Column, DataFrame, Window
@@ -466,9 +468,11 @@ def _ivf_probes(
     n_probe: int,
 ) -> DataFrame:
     """Each query's ``n_probe`` nearest centroid cells:
-    ``(query_id, __qv, __qn, cell)`` — the coarse-quantizer ranking
-    every IVF serve flavor starts from (shared so the float, SQ8, PQ
-    reconstruction, and PQ-ADC paths probe identically)."""
+    ``(query_id, __qv, __qn, cell, __prk)`` with ``__prk`` the cell's
+    1-based probe rank — the coarse-quantizer ranking every IVF serve
+    flavor and the operating curve start from (shared so the float,
+    SQ8, PQ reconstruction, PQ-ADC and tuning paths probe
+    identically)."""
     c = centroids.select(
         F.col("cent_id").alias("__cid"),
         F.col("cent_vec").alias("__cv0"),
@@ -489,7 +493,7 @@ def _ivf_probes(
         )
         .withColumn("__prk", F.row_number().over(wq))
         .filter(F.col("__prk") <= n_probe)
-        .select("query_id", "__qv", "__qn", F.col("__cid").alias("cell"))
+        .select("query_id", "__qv", "__qn", F.col("__cid").alias("cell"), "__prk")
     )
 
 
@@ -864,16 +868,19 @@ def ivf_sq8_topk_from_index(
 # full-precision, the probed cells' codes reconstruct to codebook
 # centroids map-side against one broadcast codebook row.
 #
-# Training all m subspace codebooks is ONE joint Lloyd loop keyed by
-# (sub, cid) — per round one map-only scoring pass over the exploded
+# Training all m subspace codebooks is clustering._lloyd keyed by
+# ``sub`` — per round one map-only scoring pass over the exploded
 # subvectors and one (sub, cid, dim)-keyed aggregate whose shuffle
 # carries m·k·sub_dim rows regardless of corpus size; the codebooks
-# broadcast as a single aggregated row exactly like clustering._lloyd.
+# broadcast as one aggregated ``__carr`` row (clustering._carr).
 # ---------------------------------------------------------------------------
 
 from exceldatatransform_py_spark.operators.clustering import (  # noqa: E402
     KMEANS_SCALE,
-    _sqdist,
+    _assign,
+    _carr,
+    _lloyd,
+    quantize_vec,
 )
 
 #: PQ fixed-point scale (shared with k-means: |x| ≤ ~1 ⇒ coordinates
@@ -895,34 +902,9 @@ def _pq_subpoints(
     sub_d = dim // m
     if sub_d * m != dim:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    qv = F.transform(
-        vec_col,
-        lambda e: F.floor(e.cast("double") * F.lit(float(scale))).cast("long"),
-    )
+    qv = quantize_vec(vec_col, scale)
     subs = F.array(*[F.slice(qv, s * sub_d + 1, sub_d) for s in range(m)])
     return corpus.select(F.col(id_col), F.posexplode(subs).alias("sub", "xs"))
-
-
-def _pq_carr(codebooks: DataFrame) -> DataFrame:
-    """All m·k codebook entries folded to ONE sorted row — the
-    broadcast-scalar pattern: encoding is then a map-only pass."""
-    return codebooks.agg(
-        F.sort_array(F.collect_list(F.struct("sub", "cid", "cs"))).alias("__carr")
-    )
-
-
-def _pq_best(xs: Column) -> Column:
-    """Nearest codebook entry of this row's subspace: lexicographic
-    (d2, cid) argmin over the broadcast ``__carr`` filtered to the
-    row's ``sub`` — exact integer distances, ties → lowest cid."""
-    return F.array_min(
-        F.transform(
-            F.filter(F.col("__carr"), lambda c: c["sub"] == F.col("sub")),
-            lambda c: F.struct(
-                _sqdist(xs, c["cs"]).alias("d2"), c["cid"].alias("cid")
-            ),
-        )
-    )
 
 
 def _pq_residualize(
@@ -969,49 +951,16 @@ def pq_train_codebooks(
     iters: int = 2,
     scale: int = PQ_SCALE,
 ) -> DataFrame:
-    """Train the m per-subspace codebooks jointly: ``iters``
-    assignment rounds with ``iters - 1`` centroid updates between
-    them (clustering._lloyd's convention), keyed by (sub, cid).
-    Seeds are the k smallest vector ids' subvectors — no RNG, so
-    training is a pure function of the corpus and fully
+    """Train the m per-subspace codebooks jointly: the k-means Lloyd
+    loop keyed by ``sub`` (``iters`` assignment rounds, ``iters - 1``
+    centroid updates). Seeds are the k smallest vector ids' subvectors
+    — no RNG, so training is a pure function of the corpus and fully
     oracle-replayable. Returns ``(sub int, cid bigint,
     cs array<bigint>)`` — fixed-point codebook coordinates (the
     exact encode space; divide by ``scale`` for the reconstruction
     doubles)."""
     pts = _pq_subpoints(corpus, id_col, vec_col, m, dim, scale).persist()
-    # seeds: the k smallest vector ids PRESENT in the corpus (a
-    # distributed top-k — TakeOrderedAndProject, no global sort; on a
-    # dense 0-based corpus this is exactly ``id < k``, which is what
-    # the oracle replays).
-    seed_ids = corpus.select(id_col).orderBy(id_col).limit(k)
-    cents = pts.join(F.broadcast(seed_ids), id_col).select(
-        "sub", F.col(id_col).alias("cid"), F.col("xs").alias("cs")
-    )
-    for it in range(iters - 1):
-        assigned = (
-            pts.crossJoin(F.broadcast(_pq_carr(cents)))
-            .select(
-                "sub", "xs", _pq_best(F.col("xs"))["cid"].alias("cid")
-            )
-        )
-        # update: per-(sub, cid, dim) exact sums → floor-requantized
-        # means — shuffle volume m·k·sub_dim, independent of corpus.
-        ex = assigned.select("sub", "cid", F.posexplode("xs").alias("i", "x"))
-        sums = ex.groupBy("sub", "cid", "i").agg(
-            F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
-        )
-        cx = sums.select(
-            "sub",
-            "cid",
-            "i",
-            F.floor(F.col("s").cast("double") / F.col("n")).cast("long").alias("cx"),
-        )
-        cents = cx.groupBy("sub", "cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cx"))),
-                lambda t: t["cx"],
-            ).alias("cs")
-        )
+    cents, _ = _lloyd(pts, id_col, k, iters, key=("sub",))
     return cents
 
 
@@ -1025,14 +974,13 @@ def pq_encode(
     scale: int = PQ_SCALE,
 ) -> DataFrame:
     """Encode vectors against TRAINED codebooks: per subspace the
-    exact-integer nearest entry, reassembled into ``codes
-    array<int>`` ordered by subspace. One map-only scoring pass (the
-    codebooks broadcast as one row) plus a groupBy on the vector id —
-    work scales with the batch, never the corpus."""
+    exact-integer nearest entry (the Lloyd loop's assignment step),
+    reassembled into ``codes array<int>`` ordered by subspace. One
+    map-only scoring pass (the codebooks broadcast as one row) plus a
+    groupBy on the vector id — work scales with the batch, never the
+    corpus."""
     pts = _pq_subpoints(batch, id_col, vec_col, m, dim, scale)
-    assigned = pts.crossJoin(F.broadcast(_pq_carr(codebooks))).select(
-        id_col, "sub", _pq_best(F.col("xs"))["cid"].alias("cid")
-    )
+    assigned = _assign(pts, codebooks, id_col, key=("sub",))
     return assigned.groupBy(id_col).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("sub", "cid"))),
@@ -1043,7 +991,7 @@ def pq_encode(
 
 def _pq_reconstruct(codes: Column) -> Column:
     """codes → concatenated codebook centroids as doubles; requires
-    a broadcast ``__cbarr`` column (array<struct<sub, cid,
+    a broadcast ``__carr`` column (array<struct<sub, cid,
     cs array<bigint>>>) in scope. The transform index IS the
     subspace (codes are built ordered by sub), so flatten emits the
     sub_0..sub_{m-1} concatenation; dequantization is bigint/scale
@@ -1054,7 +1002,7 @@ def _pq_reconstruct(codes: Column) -> Column:
             lambda code, sub: F.transform(
                 F.element_at(
                     F.filter(
-                        F.col("__cbarr"),
+                        F.col("__carr"),
                         lambda c: (c["sub"] == sub)
                         & (c["cid"] == code.cast("bigint")),
                     ),
@@ -1217,9 +1165,7 @@ def ivf_pq_topk_from_index(
     this is the shape that makes 8-16x compression usable: the index
     scan stays code-bytes, and full vectors are read for a few dozen
     rows per query."""
-    cbarr = _pq_carr(spark.table(f"{table_prefix}_codebooks")).withColumnRenamed(
-        "__carr", "__cbarr"
-    )
+    cbarr = _carr(spark.table(f"{table_prefix}_codebooks"), ("sub",))
     centroids = spark.table(f"{table_prefix}_centroids")
     _, _, residual = _pq_stored_shape(spark, table_prefix)
     cells = _index_cells(spark, table_prefix).join(F.broadcast(cbarr))
@@ -1322,9 +1268,7 @@ def ivf_pq_adc_topk_from_index(
     sub_d = (dim // m) if m else 1
     centroids = spark.table(f"{table_prefix}_centroids")
     probes = _ivf_probes(queries, centroids, id_col, vec_col, n_probe)
-    cbarr = _pq_carr(
-        spark.table(f"{table_prefix}_codebooks")
-    ).withColumnRenamed("__carr", "__cbarr")
+    cbarr = _carr(spark.table(f"{table_prefix}_codebooks"), ("sub",))
     lut_in = probes.join(F.broadcast(cbarr))
     if residual:
         ctr = centroids.select(
@@ -1394,7 +1338,7 @@ def ivf_pq_adc_topk_from_index(
         "__qn",
         F.map_from_entries(
             F.transform(
-                F.col("__cbarr"),
+                F.col("__carr"),
                 lambda c: F.struct(
                     (
                         c["sub"].cast("bigint") * F.lit(dense) + c["cid"]
@@ -1513,27 +1457,29 @@ def choose_probe_width(
     )
 
 
-def ivf_curve_from_index(
-    spark,
-    table_prefix: str,
+def _probe_curve(
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    widths: tuple[int, ...] = IVF_PROBE_WIDTHS,
+    index: DataFrame,
+    probes: DataFrame,
+    probe_key: str,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    widths: tuple[int, ...],
+    width_col: str,
+    probed_col: str,
 ) -> DataFrame:
-    """Recall/cost curve of a persisted IVF index, measured on
-    ``queries``: for each probe width, candidates actually scored and
-    recall@k vs the exact top-k over the index's own vectors. The
-    candidate join runs ONCE at the widest width and is sliced by
-    probe rank per point; the exact baseline is one brute-force pass
-    (this is the tuning cost a deployment pays once)."""
-    cells = _index_cells(spark, table_prefix)
-    centroids = spark.table(f"{table_prefix}_centroids")
-    corpus = cells.select(
-        F.col("neighbor_id").alias(id_col),
-        F.col("vec").alias(vec_col),
-        "vnorm",
+    """The recall/cost curve both index families share. ``index``
+    holds ``(neighbor_id, vec, vnorm, probe_key)``; ``probes`` holds
+    each query's probe rows ``(query_id, __qv, __qn, probe_key,
+    __prk)`` at the widest width, ``__prk`` the smallest width that
+    includes the row. Candidates are scored ONCE and sliced per
+    width; the exact baseline is one brute-force pass over the
+    index's own vectors (the tuning cost a deployment pays once).
+    One row per width: ``(width_col int, probed_col bigint,
+    n_candidates bigint, recall_at_5 double)``."""
+    corpus = index.select(
+        F.col("neighbor_id").alias(id_col), F.col("vec").alias(vec_col), "vnorm"
     )
     exact = (
         cosine_topk(
@@ -1544,47 +1490,23 @@ def ivf_curve_from_index(
         .persist()
     )
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-
-    c = centroids.select(
-        F.col("cent_id").alias("__cid"),
-        F.col("cent_vec").alias("__cv0"),
-        _norm(F.col("cent_vec")).alias("__cn0"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__qcos").desc(), F.col("__cid").asc()
-    )
-    probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            _norm(F.col(vec_col)).alias("__qn"),
-        )
-        .join(F.broadcast(c))
-        .withColumn(
-            "__qcos",
-            _cosine_pre(F.col("__qv"), F.col("__cv0"), F.col("__qn"), F.col("__cn0")),
-        )
-        .withColumn("prk", F.row_number().over(wq))
-        .filter(F.col("prk") <= max(widths))
-        .select("query_id", "__qv", "__qn", F.col("__cid").alias("cell"), "prk")
-        .persist()
-    )
+    probes = probes.persist()
     cand = (
-        cells.join(F.broadcast(probes), "cell")
+        index.join(F.broadcast(probes), probe_key)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cosine",
             _cosine_pre(F.col("__qv"), F.col("vec"), F.col("__qn"), F.col("vnorm")),
         )
-        .select("query_id", "neighbor_id", "prk", "cosine")
+        .select("query_id", "neighbor_id", "__prk", "cosine")
         .persist()
     )
     wr = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     points = []
-    for np_ in widths:
-        sub = cand.filter(F.col("prk") <= np_)
+    for w in widths:
+        sub = cand.filter(F.col("__prk") <= w)
         top = (
             sub.withColumn("rk", F.row_number().over(wr))
             .filter(F.col("rk") <= k)
@@ -1594,29 +1516,46 @@ def ivf_curve_from_index(
             F.count(F.lit(1)).alias("n_hits")
         )
         n_cand = sub.agg(F.count(F.lit(1)).alias("n_candidates"))
-        n_cells = probes.filter(F.col("prk") <= np_).agg(
-            F.count(F.lit(1)).alias("n_cells_probed")
+        n_probed = probes.filter(F.col("__prk") <= w).agg(
+            F.count(F.lit(1)).alias(probed_col)
         )
         points.append(
             hits.crossJoin(n_cand)
-            .crossJoin(n_cells)
+            .crossJoin(n_probed)
             .crossJoin(n_exact)
             .select(
-                F.lit(np_).cast("int").alias("n_probe"),
-                F.col("n_cells_probed").cast("bigint").alias("n_cells_probed"),
+                F.lit(w).cast("int").alias(width_col),
+                F.col(probed_col).cast("bigint").alias(probed_col),
                 F.col("n_candidates").cast("bigint").alias("n_candidates"),
                 (
                     F.col("n_hits").cast("double")
                     / F.greatest(F.col("n_exact"), F.lit(1))
-                ).alias(
-                    "recall_at_5"
-                ),
+                ).alias("recall_at_5"),
             )
         )
-    out = points[0]
-    for p in points[1:]:
-        out = out.unionAll(p)
-    return out
+    return reduce(DataFrame.unionAll, points)
+
+
+def ivf_curve_from_index(
+    spark,
+    table_prefix: str,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 5,
+    widths: tuple[int, ...] = IVF_PROBE_WIDTHS,
+) -> DataFrame:
+    """Recall/cost curve of a persisted IVF index, measured on
+    ``queries``: for each probe width, cells probed, candidates
+    actually scored and recall@k vs the exact top-k over the index's
+    own vectors. The candidate join runs ONCE at the widest width and
+    is sliced by probe rank per point."""
+    centroids = spark.table(f"{table_prefix}_centroids")
+    probes = _ivf_probes(queries, centroids, id_col, vec_col, max(widths))
+    return _probe_curve(
+        queries, _index_cells(spark, table_prefix), probes, "cell",
+        id_col, vec_col, k, widths, "n_probe", "n_cells_probed",
+    )
 
 
 def lsh_curve_from_index(
@@ -1631,23 +1570,8 @@ def lsh_curve_from_index(
     """Recall/cost curve of a persisted LSH index on ``queries``:
     probe radius 0 (exact bucket) vs 1 (+ every 1-bit flip).
     Candidates are computed ONCE at the widest radius with their
-    flip distance recorded, then sliced."""
+    flip distance recorded as the probe rank, then sliced."""
     planes = _stored_planes(spark, table_prefix)
-    buckets = _index_buckets(spark, table_prefix)
-    corpus = buckets.select(
-        F.col("neighbor_id").alias(id_col),
-        F.col("vec").alias(vec_col),
-        "vnorm",
-    )
-    exact = (
-        cosine_topk(
-            queries, corpus, id_col=id_col, vec_col=vec_col, k=k,
-            norm_col="vnorm",
-        )
-        .select("query_id", "neighbor_id")
-        .persist()
-    )
-    n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
@@ -1668,58 +1592,12 @@ def lsh_curve_from_index(
         "query_id", "__qv", "__qn", F.explode(probe_arr).alias("pr")
     ).select(
         "query_id", "__qv", "__qn", F.col("pr.bucket").alias("bucket"),
-        F.col("pr.hd").alias("hd"),
-    ).persist()
-    cand = (
-        buckets.join(F.broadcast(probes), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            _cosine_pre(F.col("__qv"), F.col("vec"), F.col("__qn"), F.col("vnorm")),
-        )
-        .select("query_id", "neighbor_id", "hd", "cosine")
-        .persist()
+        F.col("pr.hd").alias("__prk"),
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    return _probe_curve(
+        queries, _index_buckets(spark, table_prefix), probes, "bucket",
+        id_col, vec_col, k, widths, "probe_hamming", "n_buckets_probed",
     )
-    points = []
-    for h in widths:
-        sub = cand.filter(F.col("hd") <= h)
-        top = (
-            sub.withColumn("rk", F.row_number().over(wr))
-            .filter(F.col("rk") <= k)
-            .select("query_id", "neighbor_id")
-        )
-        hits = top.join(exact, ["query_id", "neighbor_id"], "left_semi").agg(
-            F.count(F.lit(1)).alias("n_hits")
-        )
-        n_cand = sub.agg(F.count(F.lit(1)).alias("n_candidates"))
-        n_buck = probes.filter(F.col("hd") <= h).agg(
-            F.count(F.lit(1)).alias("n_buckets_probed")
-        )
-        points.append(
-            hits.crossJoin(n_cand)
-            .crossJoin(n_buck)
-            .crossJoin(n_exact)
-            .select(
-                F.lit(h).cast("int").alias("probe_hamming"),
-                F.col("n_buckets_probed").cast("bigint").alias(
-                    "n_buckets_probed"
-                ),
-                F.col("n_candidates").cast("bigint").alias("n_candidates"),
-                (
-                    F.col("n_hits").cast("double")
-                    / F.greatest(F.col("n_exact"), F.lit(1))
-                ).alias(
-                    "recall_at_5"
-                ),
-            )
-        )
-    out = points[0]
-    for p in points[1:]:
-        out = out.unionAll(p)
-    return out
 
 
 def jl_sign_planes(dim: int, n_planes: int, seed: int = 7) -> list[list[int]]:

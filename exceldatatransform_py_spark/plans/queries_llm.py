@@ -45,9 +45,12 @@ from exceldatatransform_py_spark.operators.clustering import (
 )
 from exceldatatransform_py_spark.operators.multimodal import binary_featurize
 from exceldatatransform_py_spark.operators.similarity import (
+    _sq8_decode,
+    _sq8_encode,
     cosine_topk,
     hyperplane_lsh_topk,
     random_hyperplanes,
+    sq8_codebook,
 )
 from exceldatatransform_py_spark.plans.registry import register
 from exceldatatransform_py_spark.sources.readers import read_table
@@ -4167,34 +4170,11 @@ def _sq8_oracle() -> str:
 @register("sq8_quantization_recall", oracle=_sq8_oracle())
 def sq8_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings", fan_out=True)
-    # train: per-dimension corpus min/max → one broadcast codebook row
-    # of two dim-length arrays (the posexplode partial-aggregates
-    # map-side; the shuffle carries ≤ dim rows per partition).
-    dims = (
-        emb.select(F.posexplode("embedding").alias("i", "x"))
-        .groupBy("i")
-        .agg(F.min("x").alias("lo"), F.max("x").alias("hi"))
-    )
-    codebook = dims.groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "lo"))), lambda s: s["lo"]
-        ).alias("los"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "hi"))), lambda s: s["hi"]
-        ).alias("his"),
-    )
-
-    def recon_elem(x, i):
-        lo = F.element_at(F.col("los"), i + 1).cast("double")
-        hi = F.element_at(F.col("his"), i + 1).cast("double")
-        q = F.when(hi == lo, F.lit(0.0)).otherwise(
-            F.floor((x.cast("double") - lo) * F.lit(255.0) / (hi - lo))
-            .cast("double")
-        )
-        return lo + q * (hi - lo) / F.lit(255.0)
-
-    rec = emb.join(F.broadcast(codebook)).select(
-        "vec_id", F.transform("embedding", recon_elem).alias("rv")
+    # the IVF-SQ8 operator's own codec: train the one-row codebook,
+    # then reconstruct decode(encode(x)) — on build-time data the
+    # encode's clamp is a no-op, so this is the oracle's floor formula
+    rec = emb.join(F.broadcast(sq8_codebook(emb))).select(
+        "vec_id", _sq8_decode(_sq8_encode(F.col("embedding"))).alias("rv")
     )
     approx = cosine_topk(
         rec.filter(F.col("vec_id") < 10), rec, id_col="vec_id",

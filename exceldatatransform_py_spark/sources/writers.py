@@ -365,46 +365,18 @@ def zorder_value(a: Column, b: Column) -> Column:
     return z
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    num_files: int,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """TWO-dimension clustered sink: rows are ordered by the Morton
-    interleave of both columns' bucket ids, so parquet min/max stats
-    prune files on a predicate over EITHER column — the property the
-    1-D ``write_range_clustered`` only gives its leading column
-    (a range on the second sort column overlaps every file). This is
-    Z-ordering as Delta's OPTIMIZE ZORDER BY computes it.
-
-    Bucketing normalizes each column into ``2^_Z_BITS`` equal-width
-    buckets between its min and max; the extremes come from one tiny
-    aggregate joined back as a broadcast scalar — no driver collect,
-    no sampling pass. (Equal-width is the skew trade-off: heavily
-    skewed columns want quantile buckets, which is one
-    ``approxQuantile`` swap away.) The z-keyed range exchange is the
-    same single write-time shuffle the 1-D writer pays; a range on one
-    dimension then touches ~sqrt(files) files instead of all of them.
-    """
-    (
-        zorder_frame(df, col_a, col_b, num_files)
-        .write.format(fmt)
-        .mode(mode)
-        .save(path)
-    )
-
-
 def zorder_frame(
     df: DataFrame, col_a: str, col_b: str, num_files: int
 ) -> DataFrame:
-    """The Z-order rewrite as a DataFrame transform (shared by the
-    path sink above and the snapshot OPTIMIZE ZORDER commit): rows
-    range-partitioned and sorted on the Morton interleave of both
-    columns' bucket ids, z-key dropped from the output."""
+    """The Z-order rewrite as a DataFrame transform (the snapshot
+    OPTIMIZE ZORDER commit's layout): rows range-partitioned and
+    sorted on the Morton interleave of both columns' bucket ids, so
+    parquet min/max stats prune files on a predicate over EITHER
+    column — the property the 1-D ``write_range_clustered`` only
+    gives its leading column. Each column is normalized into
+    ``2^_Z_BITS`` equal-width buckets between its min and max, the
+    extremes joined back as one broadcast scalar row; z-key dropped
+    from the output."""
     stats = df.agg(
         F.min(col_a).alias("__amin"),
         F.max(col_a).alias("__amax"),
@@ -432,44 +404,6 @@ def zorder_frame(
         .sortWithinPartitions("__z")
         .drop("__z", "__amin", "__amax", "__bmin", "__bmax")
     )
-
-
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_file: int,
-    fmt: str = "parquet",
-) -> int:
-    """Small-files compaction: rewrite a table directory into
-    ``ceil(rows / target_rows_per_file)`` files and return that count.
-
-    The operational fix for the small-files problem streaming and
-    per-key sinks create: thousands of KB-sized files make listing,
-    scheduling, and row-group overhead dominate scans. Compaction uses
-    ``coalesce`` (narrow — folds existing partitions without a
-    shuffle) when shrinking; ``coalesce`` cannot grow a partition
-    count, so when the target exceeds the scan's partition count the
-    rewrite uses ``repartition`` (one round-robin exchange — the data
-    is being rewritten anyway, and compaction-to-MORE-files only
-    happens when existing files are oversized, where even sizing is
-    the point). At 100 TB this runs per-partition-directory behind the
-    table format's transaction (Delta OPTIMIZE / Iceberg
-    rewrite_data_files are this exact operation with a metadata
-    commit). Returns the actual file count written.
-    """
-    df = spark.read.format(fmt).load(path)
-    n_rows = df.count()
-    n_files = max(1, -(-n_rows // target_rows_per_file))
-    n_parts = df.rdd.getNumPartitions()  # metadata only — no job
-    if n_files < n_parts:
-        compacted = df.coalesce(n_files)
-    elif n_files > n_parts:
-        compacted = df.repartition(n_files)
-    else:
-        compacted = df
-    compacted = compacted.localCheckpoint(eager=True)
-    compacted.write.format(fmt).mode("overwrite").save(path)
-    return n_files
 
 
 def write_training_shards(

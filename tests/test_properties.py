@@ -379,12 +379,15 @@ def test_connected_components_matches_union_find(spark, raw_edges):
     assert got == _union_find_components(25, edges)
 
 
-def test_kmeans_assignment_is_argmin_and_matches_python(spark):
+@pytest.mark.parametrize("id_offset", [0, 1000], ids=["from0", "from1000"])
+def test_kmeans_assignment_is_argmin_and_matches_python(spark, id_offset):
     """Self-consistency of the distributed Lloyd loop, independent of
     the DuckDB oracle: re-running the exact fixed-point algorithm in
     plain Python on the collected vectors must give the same final
     assignment, and every point's cluster must be the true argmin over
-    the final centroids (ties to the lowest centroid id)."""
+    the final centroids (ties to the lowest centroid id). Seeds are
+    the k smallest ids PRESENT, so ids that do not start at 0 train
+    the same k centroids."""
     from exceldatatransform_py_spark.operators.clustering import (
         kmeans_assign,
         kmeans_centroids,
@@ -393,7 +396,9 @@ def test_kmeans_assignment_is_argmin_and_matches_python(spark):
 
     sf = "/root/testdata/sf0.001"
     k, iters, scale = 8, 3, 1_000_000
-    emb = read_table(spark, sf, "embeddings")
+    emb = read_table(spark, sf, "embeddings").withColumn(
+        "vec_id", F.col("vec_id") + id_offset
+    )
     got = {
         r.vec_id: (r.cluster_id, r.sqdist)
         for r in kmeans_assign(
@@ -417,7 +422,7 @@ def test_kmeans_assignment_is_argmin_and_matches_python(spark):
     }
 
     # Plain-Python Lloyd on the quantized points.
-    c = {i: pts[i][:] for i in sorted(pts) if i < k}
+    c = {i: pts[i][:] for i in sorted(pts)[:k]}
 
     def assign(cs):
         out = {}

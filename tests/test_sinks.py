@@ -220,47 +220,6 @@ def test_json_badrow_side_channel(spark, tmpdir_):
     assert any("not json at all" in b for b in bad_rows)
 
 
-def test_compact_files_reduces_file_count(spark, tmpdir_):
-    """Many tiny files in, ceil(rows/target) files out, same rows."""
-    import glob
-
-    from exceldatatransform_py_spark.sources.writers import compact_files
-
-    path = os.path.join(tmpdir_, "fragmented")
-    li = read_table(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
-    li.repartition(64).write.parquet(path)  # simulate a small-files mess
-    assert len(glob.glob(os.path.join(path, "*.parquet"))) >= 32
-    before = li.count()
-
-    n_files = compact_files(spark, path, target_rows_per_file=2000)
-    got = glob.glob(os.path.join(path, "*.parquet"))
-    assert len(got) == n_files == -(-before // 2000)
-    assert spark.read.parquet(path).count() == before
-
-
-def test_compact_files_grow_path(spark, tmpdir_):
-    """Target count above the scan's partition count: coalesce cannot
-    grow, so compaction must repartition — the returned count has to
-    match the files actually written."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from exceldatatransform_py_spark.sources.writers import compact_files
-
-    path = os.path.join(tmpdir_, "one_big_file")
-    spark.range(0, 1000).select(F.col("id").alias("k")).coalesce(1).write.parquet(
-        path
-    )
-    assert len(glob.glob(os.path.join(path, "*.parquet"))) == 1
-
-    n_files = compact_files(spark, path, target_rows_per_file=100)
-    got = glob.glob(os.path.join(path, "*.parquet"))
-    assert n_files == 10
-    assert len(got) == n_files
-    assert spark.read.parquet(path).count() == 1000
-
-
 # ---------------------------------------------------------------------------
 # Excel workbook sink (S4/S5 in their native format). The Spark-side
 # semantics — per-sheet partitioning, key-column drop, 31-char name
@@ -369,74 +328,6 @@ def test_xlsx_shim_escaping_and_widths(tmpdir_):
     assert header == ["k", 'q"uote']
     assert rows == [["<&>", None], [None, 'x"y'], [1.25, -3]]
     assert back["second"] == (["only"], [])
-
-
-def test_zorder_prunes_on_both_dimensions(spark, tmpdir_):
-    """The Morton layout must make parquet min/max stats selective on
-    BOTH columns: a narrow range on either dimension may overlap only
-    a strict subset of files, while the 1-D range-clustered layout is
-    only selective on its leading column (the trailing column's value
-    range spans every file)."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from exceldatatransform_py_spark.sources.writers import (
-        write_range_clustered,
-        write_zordered,
-    )
-
-    li = read_table(spark, SF, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_orderkey"
-    )
-    n_files = 16
-    zdir = os.path.join(str(tmpdir_), "zorder")
-    ldir = os.path.join(str(tmpdir_), "linear")
-    write_zordered(li, zdir, "l_partkey", "l_suppkey", num_files=n_files)
-    write_range_clustered(
-        li, ldir, ["l_partkey", "l_suppkey"], num_files=n_files
-    )
-
-    def file_ranges(d, col):
-        out = []
-        for f in glob.glob(os.path.join(d, "*.parquet")):
-            md = pq.read_metadata(f)
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}[col]
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            out.append((min(mins), max(maxs)))
-        return out
-
-    def overlapping(ranges, lo, hi):
-        return sum(1 for (mn, mx) in ranges if mx >= lo and mn <= hi)
-
-    # a narrow mid-range slice on each dimension (~1/8 of the domain)
-    stats = li.agg(
-        F.min("l_partkey"), F.max("l_partkey"),
-        F.min("l_suppkey"), F.max("l_suppkey"),
-    ).collect()[0]
-    pa_lo = stats[0] + (stats[1] - stats[0]) * 7 // 16
-    pa_hi = stats[0] + (stats[1] - stats[0]) * 9 // 16
-    sk_lo = stats[2] + (stats[3] - stats[2]) * 7 // 16
-    sk_hi = stats[2] + (stats[3] - stats[2]) * 9 // 16
-
-    z_files = len(glob.glob(os.path.join(zdir, "*.parquet")))
-    z_a = overlapping(file_ranges(zdir, "l_partkey"), pa_lo, pa_hi)
-    z_b = overlapping(file_ranges(zdir, "l_suppkey"), sk_lo, sk_hi)
-    lin_b = overlapping(file_ranges(ldir, "l_suppkey"), sk_lo, sk_hi)
-    lin_files = len(glob.glob(os.path.join(ldir, "*.parquet")))
-
-    # both z dimensions prune to a strict subset
-    assert z_a < z_files, (z_a, z_files)
-    assert z_b < z_files, (z_b, z_files)
-    # the linear layout cannot prune its trailing column
-    assert lin_b == lin_files, (lin_b, lin_files)
-    # lossless
-    assert spark.read.parquet(zdir).count() == li.count()
 
 
 def test_incremental_agg_merge_equals_full_recompute(spark):

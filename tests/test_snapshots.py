@@ -414,6 +414,12 @@ def test_snapshot_compact_preserves_rows_and_history(spark, table):
         m2 = json.load(f)
     assert m2["kind"] == "compact" and len(m2["stats"]) == 1
 
+    # grow path: a target below the one file's rows cannot coalesce,
+    # so compaction repartitions to ceil(rows / target) files
+    v3 = snapshot_compact(spark, table, target_rows_per_file=100)
+    assert len(glob.glob(os.path.join(table, "d00003-*", "*.parquet"))) == 3
+    assert sorted((r.k, r.x) for r in snapshot_read(spark, table, v3).collect()) == want
+
 
 def test_snapshot_history_and_schema_evolution(spark, table):
     """History is manifest-only metadata; schema evolution is free —
@@ -1124,6 +1130,12 @@ def test_snapshot_optimize_zorder_enables_two_column_pruning(spark, table):
     assert m3["pruning"]["inherited_files"] >= 1  # b now data-skips
     assert len(sorted(tuple(r) for r in
                       snapshot_read(spark, table, version=v3).collect())) == n
+    # ... and the leading column a still data-skips after the rewrite
+    ups_a = spark.createDataFrame([(2, -2.0)], "a long, x double")
+    snapshot_merge_update_pruned(
+        spark, table, ups_a, on=["a"], update_cols=["x"]
+    )
+    assert snap._manifests(table)[-1]["pruning"]["inherited_files"] >= 1
 
 
 def test_apply_changes_update_delete_only_uses_left_join(spark):
